@@ -11,9 +11,11 @@ Capability parity targets (implementation original, Spark-first):
 Cluster model: one :class:`KinesisStreamWriter` per Spark partition inside
 an Arrow-batched ``mapInPandas`` (batch) or ``foreachBatch`` (streaming;
 same path per micro-batch). Each partition
-batches independently to ~1 MiB aggregated records and routes each flush to a
-uniformly random open shard, so N executors saturate all shards without
-coordination. No driver-side collect anywhere.
+batches independently to ~1 MiB aggregated records. With a rate limiter
+attached, each flush routes to the open shard with the most limiter budget;
+without one, to the reference's seeded-random open shard. Either way N
+executors saturate all shards without coordination. No driver-side collect
+anywhere.
 """
 
 from __future__ import annotations
@@ -54,11 +56,15 @@ RESHARD_ERROR_MARKERS = (
     "ShardClosed",
 )
 
-#: ResourceNotFound means the stream itself is gone (deleted or never
-#: created) — NOT a reshard. Triggering a DescribeStream refresh would
-#: also fail, burning a second retry budget and surfacing a discovery
-#: error in place of the original fatal put error, so it is deliberately
-#: excluded from the refresh markers above.
+#: Error substrings no retry can fix (stream gone, no permission, malformed
+#: request): puts and discovery raise at once instead of sleeping through up
+#: to 930 s of back-off. Not reshard markers: a refresh would fail as well.
+FATAL_ERROR_MARKERS = (
+    "ResourceNotFoundException",
+    "AccessDeniedException",
+    "ValidationException",
+    "InvalidArgumentException",
+)
 
 #: Periodic shard-map re-discovery cadence (flushes between refreshes),
 #: ON by default: a silent split — a capacity change that never raises —
@@ -75,6 +81,11 @@ MIN_ERROR_REFRESH_INTERVAL_S = 5.0
 def retry_delay_seconds(fail_count: int) -> int:
     """Linear back-off schedule: 2, 4, 6, ... seconds."""
     return (fail_count + 1) * 2
+
+
+def _names_any(exc: Exception, markers: tuple[str, ...]) -> bool:
+    msg = str(exc)
+    return any(marker in msg for marker in markers)
 
 
 # ---------------------------------------------------------------------------
@@ -309,7 +320,6 @@ class KinesisStreamWriter:
         sleep: Callable[[float], None] = time.sleep,
         routing_seed: int = 42,
         rate_limiter: ShardRateLimiter | None = None,
-        route_by_budget: bool = False,
         refresh_every_flushes: int | None = DEFAULT_REFRESH_EVERY_FLUSHES,
         min_error_refresh_interval_s: float = MIN_ERROR_REFRESH_INTERVAL_S,
         clock: Callable[[], float] = time.monotonic,
@@ -319,15 +329,12 @@ class KinesisStreamWriter:
         self.partition_key = partition_key
         self.max_retries = max_retries
         self._sleep = sleep
-        self.rate_limiter = rate_limiter
-        #: opt-in budget-aware routing (needs a rate_limiter): each flush
-        #: targets the shard whose limiter bucket is fullest instead of a
-        #: uniform random midpoint. Under sustained pressure random
-        #: routing pays depleted buckets' deficits while refilled buckets
-        #: idle at their burst cap (throttling soak: 0.61x of the service
-        #: cap vs ~0.9x budget-aware). Default OFF: the reference's
+        #: with a limiter, every flush and retry routes to the shard whose
+        #: bucket is fullest: random routing pays depleted buckets' deficits
+        #: while refilled ones idle at their burst cap (throttling soak:
+        #: 0.61x of the service cap vs ~0.9x). Without one, the reference's
         #: seeded-random draw sequence stays byte-reproducible.
-        self.route_by_budget = bool(route_by_budget)
+        self.rate_limiter = rate_limiter
         #: periodic re-discovery cadence (None disables): a reshard that
         #: never surfaces as an error — e.g. a split that merely halves a
         #: shard's capacity — is picked up within N flushes
@@ -351,21 +358,24 @@ class KinesisStreamWriter:
         reshard, so throughput silently halves). Mirrors the streaming
         source's reshard handling (sources/kinesis_stream.py): only OPEN
         shards yield midpoints, so parents drop out as soon as they close.
-        Discovery failures keep the previous map — stale routing still
-        lands (children cover the parent's hash range); a hard failure
-        here would lose the batch for a recoverable condition.
+        Discovery failures log a warning and keep the previous map — stale
+        routing still lands (children cover the parent's hash range); a
+        hard failure here would lose the batch for a recoverable condition.
         """
         try:
             self.router.update_midpoints(
                 open_shard_midpoints(self.client, self.stream_name)
             )
-        except Exception:
-            pass
+        except Exception as exc:
+            import logging  # failure path only: importing it costs a cold writer ~9 ms
+            logging.getLogger(__name__).warning(
+                "shard-map refresh for stream %r failed, keeping the previous "
+                "map: %s", self.stream_name, exc,
+            )
         self._flushes_since_discovery = 0
 
     def _maybe_refresh_on_error(self, exc: Exception) -> None:
-        msg = str(exc)
-        if not any(marker in msg for marker in RESHARD_ERROR_MARKERS):
+        if not _names_any(exc, RESHARD_ERROR_MARKERS):
             return
         now = self._clock()
         if now - self._last_error_refresh < self.min_error_refresh_interval_s:
@@ -375,19 +385,25 @@ class KinesisStreamWriter:
 
     # -- retry plumbing -----------------------------------------------------
 
-    def _with_retry(self, action: Callable[[], object]):
+    def _with_retry(self, action: Callable[[], object],
+                    on_retry: Callable[[Exception], None] | None = None):
+        """Run ``action`` under the reference's linear back-off. A fatal
+        error (:data:`FATAL_ERROR_MARKERS`) or one past ``max_retries``
+        raises; any other sleeps, calls ``on_retry(exc)`` and tries again."""
         fail_count = 0
         while True:
             try:
                 return action()
-            except Exception:
-                if fail_count >= self.max_retries:
+            except Exception as exc:
+                if fail_count >= self.max_retries or _names_any(exc, FATAL_ERROR_MARKERS):
                     raise
                 self._sleep(retry_delay_seconds(fail_count))
                 fail_count += 1
+                if on_retry is not None:
+                    on_retry(exc)
 
     def _next_routing_key(self) -> str:
-        if self.route_by_budget and self.rate_limiter is not None:
+        if self.rate_limiter is not None:
             return self.rate_limiter.richest_key(self.router.midpoints)
         return self.router.next_hash_key()
 
@@ -423,26 +439,22 @@ class KinesisStreamWriter:
         raw batch under a freshly drawn hash key and resend (back-off applies).
         Returns the number of user records delivered.
         """
-        fail_count = 0
         current = agg
-        while True:
-            try:
-                self._put_aggregated(current)
-                return current.num_user_records
-            except Exception as exc:
-                if fail_count >= self.max_retries:
-                    raise
-                self._sleep(retry_delay_seconds(fail_count))
-                fail_count += 1
-                # a reshard-shaped error refreshes the shard map BEFORE the
-                # redraw, so the retry routes to a live child shard instead
-                # of hammering the closed/overloaded parent midpoint
-                self._maybe_refresh_on_error(exc)
-                fresh_ehk = self._next_routing_key()
-                rebuilt = AggRecordBuilder()
-                for pk, _old_ehk, data in current.raw_records():
-                    rebuilt.add_user_record(pk, data, fresh_ehk)
-                current = rebuilt
+
+        def reroute(exc: Exception) -> None:
+            nonlocal current
+            # a reshard-shaped error refreshes the shard map BEFORE the
+            # redraw, so the retry routes to a live child shard instead
+            # of hammering the closed/overloaded parent midpoint
+            self._maybe_refresh_on_error(exc)
+            fresh_ehk = self._next_routing_key()
+            rebuilt = AggRecordBuilder()
+            for pk, _old_ehk, data in current.raw_records():
+                rebuilt.add_user_record(pk, data, fresh_ehk)
+            current = rebuilt
+
+        self._with_retry(lambda: self._put_aggregated(current), reroute)
+        return current.num_user_records
 
     #: Feature probe for benches: write() uses the fast fixed-key encoder.
     write_fast_capable = True
@@ -594,8 +606,6 @@ class ThrottlingKinesisClient(FakeKinesisClient):
         burst_seconds: float = 1.0,
         clock: Callable[[], float] = time.monotonic,
     ) -> None:
-        import threading
-
         super().__init__(num_shards=num_shards)
         self.bytes_per_sec = float(bytes_per_sec_per_shard)
         self.puts_per_sec = float(puts_per_sec_per_shard)
@@ -693,10 +703,12 @@ def write_dataframe(
 
     ``rate_limiter_factory`` (optional) builds one :class:`ShardRateLimiter`
     per partition writer — configure its per-second budgets as the shard
-    limit divided by the expected concurrent writers per shard.
+    limit divided by the expected concurrent writers per shard. A writer
+    with a limiter routes each flush by its budget; without one, by the
+    seeded-random draw.
 
     At 100 TB this is the whole design: partitions batch and ship in parallel,
-    each flush routed to a random shard, no shuffle and no driver collect.
+    no shuffle and no driver collect.
 
     Arrow-batched (r11): the payload column reaches the Python worker as
     Arrow record batches via ``mapInPandas`` — the r11 streaming soak

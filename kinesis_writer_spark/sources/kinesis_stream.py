@@ -1139,7 +1139,8 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
         # proactive pacing (sink.ShardRateLimiter): configure the per-WRITER
         # budget, i.e. the shard limit divided by expected writers per shard.
         # Rates parse AND validate at planning time (driver-side) so a bad
-        # option fails the query start, not the first executor send.
+        # option fails the query start, not the first executor send. With a
+        # limiter attached the writer routes each flush by its budget.
         self._rl_bytes = _parse_positive_rate(options, "rate_limit_bytes_per_sec")
         self._rl_puts = _parse_positive_rate(options, "rate_limit_puts_per_sec")
         self._rl_burst = float(options.get("rate_limit_burst_seconds", "1.0"))
@@ -1147,34 +1148,15 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
             raise ValueError(
                 f"rate_limit_burst_seconds must be > 0, got {self._rl_burst!r}"
             )
-        # opt-in budget-aware routing: route each flush to the shard whose
-        # limiter bucket is fullest (needs a rate limit configured —
-        # without one there is no budget to read). Measured: 0.61x -> 0.92x
-        # of the hard service cap under sustained throttle (SCALE.md r12).
-        self._route_by_budget = (
-            options.get("route_by_budget", "false").lower() == "true"
-        )
-        if self._route_by_budget and self._rl_bytes is None and self._rl_puts is None:
-            raise ValueError(
-                "route_by_budget requires rate_limit_bytes_per_sec and/or "
-                "rate_limit_puts_per_sec (routing reads the limiter's buckets)"
-            )
         # periodic shard-map re-discovery (long-running sinks survive
         # resharding without a restart): ON by default at the sink module's
         # cadence; '0' disables; error-triggered refresh is always on
         from ..sink import DEFAULT_REFRESH_EVERY_FLUSHES
 
-        raw_refresh = options.get("shard_map_refresh_flushes")
-        if raw_refresh is None:
-            self._refresh_flushes: int | None = DEFAULT_REFRESH_EVERY_FLUSHES
-        elif int(raw_refresh) == 0:
-            self._refresh_flushes = None
-        elif int(raw_refresh) < 0:
-            raise ValueError(
-                f"shard_map_refresh_flushes must be >= 0, got {raw_refresh!r}"
-            )
-        else:
-            self._refresh_flushes = int(raw_refresh)
+        refresh = int(options.get("shard_map_refresh_flushes", DEFAULT_REFRESH_EVERY_FLUSHES))
+        if refresh < 0:
+            raise ValueError(f"shard_map_refresh_flushes must be >= 0, got {refresh}")
+        self._refresh_flushes: int | None = refresh or None
 
     def write(self, iterator):
         from pyspark.sql.datasource import WriterCommitMessage
@@ -1194,10 +1176,9 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
             self._stream,
             client,
             rate_limiter=limiter,
-            route_by_budget=self._route_by_budget,
             refresh_every_flushes=self._refresh_flushes,
         )
-        n = writer.write(bytes(row["data"]) for row in iterator)
+        writer.write(bytes(row["data"]) for row in iterator)
         return WriterCommitMessage()
 
     def commit(self, messages, batchId) -> None:

@@ -1259,27 +1259,59 @@ class TestAdmissionCapBatchZero:
 
 
 class TestSinkBudgetRoutingOption:
-    """r12: the streaming sink exposes the writer's opt-in budget-aware
-    routing; it requires a configured rate limit (there is no budget to
-    read otherwise) and defaults off."""
+    """The streaming sink's rate-limit options select its routing: with a
+    limit, its writers route each flush to the fullest limiter bucket;
+    without one, they keep the reference's seed-42 draw."""
 
     def _writer(self, **opts):
-        base = {"stream_name": "s"}
+        base = {"stream_name": "budget-routing"}
         base.update(opts)
         return kinesis_stream.KinesisStreamSinkWriter(base, ["data"])
 
-    def test_default_off(self):
-        assert self._writer()._route_by_budget is False
+    _ROWS = [{"data": b"r" * 1000}] * 4000  # four ~1 MB flushes and a tail
 
-    def test_enabled_with_rate_limit(self):
-        w = self._writer(
-            route_by_budget="true", rate_limit_bytes_per_sec="1048576"
-        )
-        assert w._route_by_budget is True
+    def _routed(self, monkeypatch, **opts) -> list[str]:
+        """The explicit hash key of every put one sink task makes."""
+        from kinesis_writer_spark.sink import FakeKinesisClient
 
-    def test_requires_a_rate_limit(self):
-        with pytest.raises(ValueError, match="route_by_budget requires"):
-            self._writer(route_by_budget="true")
+        monkeypatch.setattr(kinesis_stream, "_SINK_LIMITERS", {})
+        client = FakeKinesisClient(num_shards=4)
+        monkeypatch.setattr(kinesis_stream, "resolve_factory", lambda *a: client)
+        self._writer(**opts).write(iter(self._ROWS))
+        return [r["Records"][0]["ExplicitHashKey"] for r in client.put_requests]
+
+    @staticmethod
+    def _midpoints() -> list[str]:
+        from kinesis_writer_spark.sink import FakeKinesisClient, open_shard_midpoints
+
+        return open_shard_midpoints(FakeKinesisClient(num_shards=4), "s")
+
+    def _assert_seeded(self, keys: list[str]) -> None:
+        from kinesis_writer_spark.sink import ShardRouter
+
+        mids = self._midpoints()
+        router = ShardRouter(mids, seed=42)
+        assert keys == [router.next_hash_key() for _ in keys]
+        assert keys[:4] != mids
+
+    def test_default_off(self, monkeypatch):
+        # no rate limit: no limiter, so the reference's seed-42 draw
+        assert self._writer()._rl_bytes is None
+        self._assert_seeded(self._routed(monkeypatch))
+
+    def test_enabled_with_rate_limit(self, monkeypatch):
+        # fresh buckets are all full: the first four flushes take the
+        # shards in map order (the limit is ample, so nothing sleeps)
+        keys = self._routed(monkeypatch, rate_limit_bytes_per_sec="10485760")
+        assert keys[:4] == self._midpoints()
+
+    def test_requires_a_rate_limit(self, monkeypatch):
+        # budget routing follows the limiter, not an option: a puts-only
+        # limit routes by budget, and the removed route_by_budget option
+        # without a limit changes nothing
+        keys = self._routed(monkeypatch, rate_limit_puts_per_sec="10000")
+        assert keys[:4] == self._midpoints()
+        self._assert_seeded(self._routed(monkeypatch, route_by_budget="true"))
 
     def test_end_to_end_capture_roundtrip(self, spark, tmp_path):
         kinesis_stream.register(spark)
@@ -1302,7 +1334,6 @@ class TestSinkBudgetRoutingOption:
             .option("client_kwargs", json.dumps(
                 {"capture_dir": sink_dir, "num_shards": 4}))
             .option("rate_limit_bytes_per_sec", "10485760")  # ample: no pacing stalls
-            .option("route_by_budget", "true")
             .option("checkpointLocation", str(tmp_path / "ckpt_budget"))
             .trigger(availableNow=True)
             .start()

@@ -196,10 +196,10 @@ class TestThrottlingClient:
 
 
 class TestBudgetAwareRouting:
-    """Opt-in route_by_budget: flushes target the shard whose limiter
-    bucket is fullest, recovering the budget random routing leaves idling
-    at the burst cap (throttling soak: 0.61x -> ~0.9x of the service
-    cap). Default OFF keeps the reference's seeded-random draws."""
+    """A writer with a limiter routes every flush to the shard whose
+    limiter bucket is fullest, recovering the budget random routing leaves
+    idling at the burst cap (throttling soak: 0.61x -> ~0.9x of the service
+    cap). Without a limiter it keeps the reference's seeded-random draws."""
 
     def test_richest_key_prefers_unseen_then_fullest(self):
         vc = VirtualClock()
@@ -222,11 +222,17 @@ class TestBudgetAwareRouting:
 
     def test_budget_routing_beats_random_under_throttle(self):
         """Same offered load, same service budgets, virtual time: the
-        budget-aware writer finishes in less virtual time with fewer
+        budget-aware writer finishes in less virtual time with no more
         service rejections than the random-routing one."""
         from kinesis_writer_spark.sink import ThrottlingKinesisClient
 
-        def run(route_by_budget: bool) -> tuple[float, int]:
+        class RandomRoutingWriter(KinesisStreamWriter):
+            """Paced by the limiter, routed by the reference's seeded draw."""
+
+            def _next_routing_key(self) -> str:
+                return self.router.next_hash_key()
+
+        def run(writer_cls: type[KinesisStreamWriter]) -> tuple[float, int]:
             vc = VirtualClock()
             client = ThrottlingKinesisClient(
                 num_shards=4, bytes_per_sec_per_shard=600_000.0,
@@ -236,22 +242,54 @@ class TestBudgetAwareRouting:
                 bytes_per_sec=0.9 * 600_000.0, puts_per_sec=900.0,
                 burst_seconds=2.0, clock=vc.clock, sleep=vc.sleep,
             )
-            w = KinesisStreamWriter(
+            w = writer_cls(
                 "s", client, sleep=vc.sleep, clock=vc.clock,
-                rate_limiter=lim, route_by_budget=route_by_budget,
-                refresh_every_flushes=None,
+                rate_limiter=lim, refresh_every_flushes=None,
             )
             n = w.write(iter([b"p" * 900] * 12_000))  # ~10.8 MB
             assert n == 12_000
             return vc.now, client.throttle_errors
 
-        t_random, err_random = run(False)
-        t_budget, err_budget = run(True)
+        t_random, err_random = run(RandomRoutingWriter)
+        t_budget, err_budget = run(KinesisStreamWriter)
         assert t_budget < t_random, (t_budget, t_random)
-        assert err_budget <= err_random
+        assert err_budget == 0 and err_budget <= err_random
         # and it approaches the aggregate paced rate: 4 shards x 540 KB/s
         ideal = 12_000 * 900 / (4 * 0.9 * 600_000.0)
         assert t_budget <= 1.6 * ideal + 3, (t_budget, ideal)
+
+    def test_writers_sharing_a_limiter_spread_evenly(self):
+        """48 one-flush writers (one per Spark task) share one limiter over
+        4 shards, interleaved on one thread and virtual time: every shard
+        takes its share of the flushes, and the makespan is the paced
+        drain of everything past the burst plus at most one flush."""
+        from collections import Counter
+
+        vc = VirtualClock()
+        rate = 500_000.0
+        lim = ShardRateLimiter(
+            bytes_per_sec=rate, puts_per_sec=1000.0, burst_seconds=1.0,
+            clock=vc.clock, sleep=vc.sleep,
+        )
+        client = FakeKinesisClient(num_shards=4)
+        writers = [
+            KinesisStreamWriter(
+                "s", client, sleep=vc.sleep, clock=vc.clock, rate_limiter=lim,
+                routing_seed=i, refresh_every_flushes=None,
+            )
+            for i in range(48)
+        ]
+        for w in writers:
+            assert w.write([b"w" * 1000] * 250) == 250  # one ~250 KB flush
+        assert len(client.put_requests) == 48
+        per_shard = Counter(
+            r["Records"][0]["ExplicitHashKey"] for r in client.put_requests
+        )
+        assert len(per_shard) == 4
+        assert max(per_shard.values()) - min(per_shard.values()) <= 1, per_shard
+        sizes = [len(d) for d in client.received]
+        bound = (sum(sizes) - 4 * rate) / (4 * rate) + max(sizes) / rate
+        assert vc.now <= bound, (vc.now, bound)
 
 
 class TestThreadSafety:

@@ -4,12 +4,14 @@ flush-branch coverage, retry schedule, replay re-encoding, count preservation.
 
 from __future__ import annotations
 
+import logging
 import random
 
 import pytest
 
 from kinesis_writer_spark.kpl import MAX_BYTES_PER_RECORD
 from kinesis_writer_spark.sink import (
+    FATAL_ERROR_MARKERS,
     MAX_LAST_RECORD_SIZE,
     SOFT_MAX_SIZE,
     FakeKinesisClient,
@@ -122,6 +124,40 @@ class TestRetryReplay:
             writer.write([b"x"])
         assert len(client.put_requests) == 4  # initial + 3 retries
 
+    @pytest.mark.parametrize("code", FATAL_ERROR_MARKERS)
+    def test_fatal_put_error_raises_without_back_off(self, code):
+        client = FakeKinesisClient(num_shards=2)
+        sleeps = []
+        writer = KinesisStreamWriter("s", client, sleep=sleeps.append)
+        client.fail_next_put_with = (
+            f"An error occurred ({code}) when calling the PutRecords operation"
+        )
+        with pytest.raises(RuntimeError, match=code):
+            writer.write([b"x"])
+        assert sleeps == []
+        assert len(client.put_requests) == 1
+
+    def test_fatal_discovery_error_raises_without_back_off(self):
+        client = FakeKinesisClient(num_shards=2)
+        client.describe_stream = lambda **kw: (_ for _ in ()).throw(
+            RuntimeError("AccessDeniedException: not authorized")
+        )
+        sleeps = []
+        with pytest.raises(RuntimeError, match="AccessDeniedException"):
+            KinesisStreamWriter("s", client, sleep=sleeps.append)
+        assert sleeps == []
+
+    def test_resource_in_use_retries_refreshes_and_delivers(self):
+        client = FakeKinesisClient(num_shards=2)
+        sleeps = []
+        writer = KinesisStreamWriter("s", client, sleep=sleeps.append)
+        describes = TestRefreshHygiene._count_describes(client)
+        client.fail_next_put_with = "ResourceInUseException: stream is being updated"
+        assert writer.write([b"x" * 1000]) == 1
+        assert sleeps == [2]
+        assert describes["n"] > 0
+        assert len(client.put_requests) == 2 and len(client.received) == 1
+
     def test_replay_payloads_intact(self):
         client = FakeKinesisClient(num_shards=2, fail_first_n_puts=1)
         writer = make_writer(client)
@@ -202,7 +238,7 @@ class TestReshardRefresh:
         assert writer.write([b"y" * 400_000 for _ in range(6)]) == 6
         assert len(set(writer.router.midpoints)) == 4
 
-    def test_discovery_failure_keeps_previous_map(self):
+    def test_discovery_failure_keeps_previous_map(self, caplog):
         client = FakeKinesisClient(num_shards=2)
         writer = KinesisStreamWriter("s", client, sleep=self._no_sleep)
         before = writer.router.midpoints
@@ -210,8 +246,13 @@ class TestReshardRefresh:
         client.describe_stream = lambda **kw: (_ for _ in ()).throw(
             RuntimeError("transient describe failure")
         )
-        writer.refresh_shard_map()  # must not raise, must not clear the map
+        with caplog.at_level(logging.WARNING, logger="kinesis_writer_spark.sink"):
+            writer.refresh_shard_map()  # must not raise, must not clear the map
         assert writer.router.midpoints == before
+        [record] = caplog.records  # loud, once
+        assert record.levelno == logging.WARNING
+        assert "'s'" in record.getMessage()
+        assert "transient describe failure" in record.getMessage()
         client.describe_stream = orig
 
 
@@ -288,7 +329,8 @@ class TestRefreshHygiene:
         client.fail_next_put_with = (
             "ResourceNotFoundException: Stream s under account not found"
         )
-        writer.write([b"d" * 1000])  # put fails once, retry succeeds
+        with pytest.raises(RuntimeError, match="ResourceNotFoundException"):
+            writer.write([b"d" * 1000])  # fatal: the original error, at once
         assert calls["n"] == 0
 
 
