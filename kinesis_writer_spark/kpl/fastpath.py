@@ -25,6 +25,7 @@ a protocol change.
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Callable, Iterable, Iterator
 
 from . import protocol as P
@@ -81,7 +82,7 @@ def _prefix(ld: int, ehk_idx: int) -> tuple[bytes, int]:
 class FastAggRecord:
     """A completed aggregated record from the fast path: duck-typed to the
     subset of AggRecordBuilder that :meth:`KinesisStreamWriter.send` and
-    its retry/replay path consume (to_bytes / partition_key /
+    its retry/replay path consume (to_bytes / size_bytes / partition_key /
     explicit_hash_key / num_user_records / raw_records)."""
 
     __slots__ = ("partition_key", "explicit_hash_key", "_payloads", "_ehk_runs", "_wire")
@@ -101,8 +102,44 @@ class FastAggRecord:
     def num_user_records(self) -> int:
         return len(self._payloads)
 
+    @property
+    def size_bytes(self) -> int:
+        return len(self._wire)
+
     def to_bytes(self) -> bytes:
         return self._wire
+
+    def with_explicit_hash_key(self, ehk: str) -> FastAggRecord | None:
+        """This record with every user record keyed ``ehk``: byte-identical
+        to aggregating the same payloads under ``ehk`` from the start.
+
+        Every user record references ehk-table index 0, so only that one
+        table entry changes and the record bodies are reused as they are;
+        the cost is one copy and one MD5 of the body. None when the record
+        carries two keys (a carry record: the caller rebuilds it). When a
+        longer key would push it past the 1 MiB protocol cap, the record
+        comes back as it is: it still fits under its own key."""
+        if len(self._ehk_runs) != 1:
+            return None
+        P.validate_explicit_hash_key(ehk)
+        old = P.length_delimited(2, self.explicit_hash_key.encode("utf-8"))
+        new = P.length_delimited(2, ehk.encode("utf-8"))
+        if old == new or len(self._wire) - len(old) + len(new) > P.MAX_BYTES_PER_RECORD:
+            return self
+        # body = pk-table entry, ehk-table entry, records
+        start = len(P.MAGIC) + len(
+            P.length_delimited(1, self.partition_key.encode("utf-8"))
+        )
+        view = memoryview(self._wire)
+        head, tail = view[len(P.MAGIC):start], view[start + len(old):-P.DIGEST_SIZE]
+        digest = hashlib.md5(head)
+        digest.update(new)
+        digest.update(tail)
+        wire = b"".join((P.MAGIC, head, new, tail, digest.digest()))
+        return FastAggRecord(
+            self.partition_key, ehk, self._payloads,
+            [(ehk, len(self._payloads))], wire,
+        )
 
     def raw_records(self) -> list[tuple[str, str | None, bytes]]:
         out = []

@@ -12,10 +12,11 @@ Cluster model: one :class:`KinesisStreamWriter` per Spark partition inside
 an Arrow-batched ``mapInPandas`` (batch) or ``foreachBatch`` (streaming;
 same path per micro-batch). Each partition
 batches independently to ~1 MiB aggregated records. With a rate limiter
-attached, each flush routes to the open shard with the most limiter budget;
-without one, to the reference's seeded-random open shard. Either way N
-executors saturate all shards without coordination. No driver-side collect
-anywhere.
+attached, each flush is routed when it is sent, to the open shard with the
+most limiter budget, and a rejected put other than a throughput error
+returns its tokens; without one, each flush goes to the reference's
+seeded-random open shard. Either way N executors saturate all shards
+without coordination. No driver-side collect anywhere.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ import time
 from collections.abc import Callable, Iterable, Iterator
 
 from .kpl.aggregator import AggRecordBuilder, RecordAggregator
-from .kpl.fastpath import FastBatcher
+from .kpl.fastpath import FastAggRecord, FastBatcher
 
 #: Flush once the aggregated record reaches this size (empirical safety margin
 #: below the 1 MiB protocol cap — consumers misbehave near the limit).
@@ -54,6 +55,15 @@ DEFAULT_PARTITION_KEY = "a"
 RESHARD_ERROR_MARKERS = (
     "ResourceInUse",
     "ShardClosed",
+)
+
+#: Error substrings of a put the service refused for throughput: the one
+#: rejection that keeps its rate-limiter charge, so the limiter stays
+#: cautious where it let too much through. Any other failed put spent no
+#: shard budget and returns its tokens.
+THROTTLE_ERROR_MARKERS = (
+    "ProvisionedThroughputExceeded",
+    "LimitExceeded",
 )
 
 #: Error substrings no retry can fix (stream gone, no permission, malformed
@@ -209,7 +219,11 @@ class ShardRateLimiter:
         *positive* hoarding above the burst, never tokens owed to a debt.
         (The earlier refill-after-sleep variant re-capped at burst before
         subtracting, double-charging any cost above burst capacity and
-        halving sustained throughput for oversized records.)"""
+        halving sustained throughput for oversized records.)
+
+        A negative cost is a refund (a put the service rejected without
+        spending budget on it): it credits the buckets, capped at the
+        burst, never sleeps and returns 0."""
         with self._lock:
             state = self._buckets.setdefault(
                 shard_key,
@@ -222,6 +236,10 @@ class ShardRateLimiter:
             self._refill(state, self._clock())
             state[0] -= n_bytes
             state[1] -= n_puts
+            if n_bytes < 0 or n_puts < 0:
+                state[0] = min(state[0], self.bytes_per_sec * self.burst_seconds)
+                state[1] = min(state[1], self.puts_per_sec * self.burst_seconds)
+                return 0.0
             wait = max(
                 0.0, -state[0] / self.bytes_per_sec, -state[1] / self.puts_per_sec
             )
@@ -302,6 +320,25 @@ def batch_records(
         yield tail
 
 
+def rekeyed(
+    agg: AggRecordBuilder | FastAggRecord, ehk: str
+) -> AggRecordBuilder | FastAggRecord:
+    """``agg`` with every user record keyed ``ehk``. A single-key fast
+    record swaps its one key-table entry; anything else (a carry record
+    holding two keys, a rebuilt retry) is rebuilt through AggRecordBuilder.
+    When ``ehk`` would push the record past the 1 MiB protocol cap, ``agg``
+    comes back as it is: it still fits under its own key."""
+    if isinstance(agg, FastAggRecord):
+        fast = agg.with_explicit_hash_key(ehk)
+        if fast is not None:
+            return fast
+    rebuilt = AggRecordBuilder()
+    for pk, _old_ehk, data in agg.raw_records():
+        if not rebuilt.add_user_record(pk, data, ehk):
+            return agg
+    return rebuilt
+
+
 # ---------------------------------------------------------------------------
 # The writer (per-partition worker)
 # ---------------------------------------------------------------------------
@@ -329,11 +366,13 @@ class KinesisStreamWriter:
         self.partition_key = partition_key
         self.max_retries = max_retries
         self._sleep = sleep
-        #: with a limiter, every flush and retry routes to the shard whose
-        #: bucket is fullest: random routing pays depleted buckets' deficits
-        #: while refilled ones idle at their burst cap (throttling soak:
-        #: 0.61x of the service cap vs ~0.9x). Without one, the reference's
-        #: seeded-random draw sequence stays byte-reproducible.
+        #: with a limiter, every flush and retry is routed when it is sent,
+        #: to the shard whose bucket is fullest: random routing pays
+        #: depleted buckets' deficits while refilled ones idle at their
+        #: burst cap (throttling soak: 0.61x of the service cap vs ~0.9x).
+        #: A rejected put other than a throughput error returns its tokens.
+        #: Without one, the reference's seeded-random draw sequence stays
+        #: byte-reproducible.
         self.rate_limiter = rate_limiter
         #: periodic re-discovery cadence (None disables): a reshard that
         #: never surfaces as an error — e.g. a split that merely halves a
@@ -403,24 +442,38 @@ class KinesisStreamWriter:
                     on_retry(exc)
 
     def _next_routing_key(self) -> str:
-        if self.rate_limiter is not None:
-            return self.rate_limiter.richest_key(self.router.midpoints)
+        """The seeded draw: the key a flush is batched under (and, without
+        a limiter, sent under)."""
         return self.router.next_hash_key()
 
     # -- send path ----------------------------------------------------------
 
-    def _put_aggregated(self, agg: AggRecordBuilder) -> None:
-        data = agg.to_bytes()
-        if self.rate_limiter is not None:
-            # spend tokens for the shard this record routes to BEFORE the
-            # call, so the proactive budget (not the API error path) is
-            # what paces a sustained overload
-            self.rate_limiter.acquire(agg.explicit_hash_key or "", len(data))
+    def _put_aggregated(self, agg: AggRecordBuilder | FastAggRecord) -> None:
+        limiter = self.rate_limiter
+        if limiter is None:
+            return self._put_records(agg)
+        # route when sent: choose the fullest bucket and charge it back to
+        # back, so writers sharing the limiter see each other's charges, and
+        # the proactive budget (not the API error path) paces an overload.
+        # The charge is the size under the batching key; the chosen key's
+        # length can move it by a few bytes.
+        n_bytes = agg.size_bytes
+        key = limiter.richest_key(self.router.midpoints)
+        limiter.acquire(key, n_bytes)
+        try:
+            self._put_records(rekeyed(agg, key))
+        except Exception as exc:
+            if not _names_any(exc, THROTTLE_ERROR_MARKERS):
+                # the service spent no shard budget on this put
+                limiter.acquire(key, -n_bytes, -1)
+            raise
+
+    def _put_records(self, agg: AggRecordBuilder | FastAggRecord) -> None:
         response = self.client.put_records(
             StreamName=self.stream_name,
             Records=[
                 {
-                    "Data": data,
+                    "Data": agg.to_bytes(),
                     "PartitionKey": agg.partition_key,
                     "ExplicitHashKey": agg.explicit_hash_key,
                 }
@@ -434,10 +487,12 @@ class KinesisStreamWriter:
             ]
             raise RuntimeError(f"put_records partial failure: {errors}")
 
-    def send(self, agg: AggRecordBuilder) -> int:
-        """Send one aggregated record; on failure re-aggregate the retained
-        raw batch under a freshly drawn hash key and resend (back-off applies).
-        Returns the number of user records delivered.
+    def send(self, agg: AggRecordBuilder | FastAggRecord) -> int:
+        """Send one aggregated record; on failure resend the retained raw
+        batch under a fresh hash key (back-off applies): a writer with a
+        limiter routes the retry when it is sent, like any flush; one
+        without redraws from its router. Returns the number of user
+        records delivered.
         """
         current = agg
 
@@ -447,11 +502,8 @@ class KinesisStreamWriter:
             # redraw, so the retry routes to a live child shard instead
             # of hammering the closed/overloaded parent midpoint
             self._maybe_refresh_on_error(exc)
-            fresh_ehk = self._next_routing_key()
-            rebuilt = AggRecordBuilder()
-            for pk, _old_ehk, data in current.raw_records():
-                rebuilt.add_user_record(pk, data, fresh_ehk)
-            current = rebuilt
+            if self.rate_limiter is None:
+                current = rekeyed(current, self._next_routing_key())
 
         self._with_retry(lambda: self._put_aggregated(current), reroute)
         return current.num_user_records
@@ -466,13 +518,14 @@ class KinesisStreamWriter:
         (:class:`..kpl.fastpath.FastBatcher`) — byte-identical wire output
         to the :func:`batch_records` slow path (property-pinned in
         tests/test_kpl_fastpath.py), ~5x the encode throughput at ~100 B
-        payloads (artifacts/sink_percore_attrib.json). Retry/replay
-        re-aggregation still uses AggRecordBuilder (see :meth:`send`).
+        payloads (artifacts/sink_percore_attrib.json). Re-keying a flush
+        for its send or its retry goes through :func:`rekeyed`.
         """
         # The routing EHK is redrawn after every flush; the batcher reads
         # the current draw through a mutable cell at record-pull time, so
         # in-flight batching picks it up exactly like the generator-based
-        # slow path did.
+        # slow path did. With a limiter the draw is provisional: the flush
+        # is re-keyed when it is sent.
         cell = {"ehk": self._next_routing_key()}
         batcher = FastBatcher(
             self.partition_key, SOFT_MAX_SIZE, MAX_LAST_RECORD_SIZE
@@ -704,8 +757,9 @@ def write_dataframe(
     ``rate_limiter_factory`` (optional) builds one :class:`ShardRateLimiter`
     per partition writer — configure its per-second budgets as the shard
     limit divided by the expected concurrent writers per shard. A writer
-    with a limiter routes each flush by its budget; without one, by the
-    seeded-random draw.
+    with a limiter routes each flush by its budget when it is sent, and a
+    rejected put other than a throughput error returns its tokens; without
+    one, each flush follows the seeded-random draw.
 
     At 100 TB this is the whole design: partitions batch and ship in parallel,
     no shuffle and no driver collect.

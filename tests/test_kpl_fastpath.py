@@ -15,8 +15,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from kinesis_writer_spark.kpl.aggregator import AggRecordBuilder
 from kinesis_writer_spark.kpl.deaggregator import deaggregate
 from kinesis_writer_spark.kpl.fastpath import FastBatcher
+from kinesis_writer_spark.kpl.protocol import MAX_BYTES_PER_RECORD
 from kinesis_writer_spark.sink import (
     DEFAULT_PARTITION_KEY,
     MAX_LAST_RECORD_SIZE,
@@ -24,6 +26,21 @@ from kinesis_writer_spark.sink import (
     FakeKinesisClient,
     KinesisStreamWriter,
     batch_records,
+    open_shard_midpoints,
+    rekeyed,
+)
+
+#: Payload sizes that reach every flush-policy branch: small records
+#: (soft-cap add-then-flush), ~100 KB ones around ``MAX_LAST_RECORD_SIZE``
+#: (flush-before) and ~0.5-0.9 MB ones (hard-cap overflow carry).
+ADVERSARIAL_SIZES = st.lists(
+    st.one_of(
+        st.integers(1, 300),
+        st.integers(40_000, 120_000),
+        st.integers(400_000, 900_000),
+    ),
+    min_size=1,
+    max_size=120,
 )
 
 
@@ -118,17 +135,7 @@ class TestWireEquivalence:
         assert_identical([bytearray(b"ba" * 30)] * 500)
 
     @settings(max_examples=25, deadline=None)
-    @given(
-        sizes=st.lists(
-            st.one_of(
-                st.integers(1, 300),
-                st.integers(40_000, 120_000),
-                st.integers(400_000, 900_000),
-            ),
-            min_size=1,
-            max_size=120,
-        )
-    )
+    @given(sizes=ADVERSARIAL_SIZES)
     def test_adversarial_size_mixes(self, sizes):
         rng = random.Random(42)
         payloads = [bytes([rng.randrange(256)]) * s for s in sizes]
@@ -267,3 +274,85 @@ class TestFlushBeforeRaiseParity:
         assert fast_yields == slow_yields == []
         assert fast_err == slow_err
         assert "record data exceeds" in fast_err
+
+
+def _fast_flushes(payloads, ehk: str):
+    batcher = FastBatcher(DEFAULT_PARTITION_KEY, SOFT_MAX_SIZE, MAX_LAST_RECORD_SIZE)
+    return list(batcher.flushes(iter(payloads), lambda: ehk))
+
+
+class TestRekey:
+    """A flush routed when it is sent is re-keyed after batching: the
+    re-keyed record must be exactly what aggregating its payloads under the
+    new key would have produced."""
+
+    MIDS = open_shard_midpoints(FakeKinesisClient(num_shards=4), "s")
+
+    @settings(max_examples=25, deadline=None)
+    @given(sizes=ADVERSARIAL_SIZES)
+    def test_rekey_matches_slow_path_under_new_key(self, sizes):
+        # two keys of the same length, so the flush boundaries agree
+        old, new = self.MIDS[1], self.MIDS[3]
+        assert len(old) == len(new) and old != new
+        rng = random.Random(42)
+        payloads = [bytes([rng.randrange(256)]) * s for s in sizes]
+        fast = _fast_flushes(payloads, old)
+        moved = [agg.with_explicit_hash_key(new) for agg in fast]
+        slow = list(
+            batch_records((DEFAULT_PARTITION_KEY, new, p) for p in payloads)
+        )
+        assert [m.to_bytes() for m in moved] == [b.to_bytes() for b in slow]
+        assert [m.explicit_hash_key for m in moved] == [new] * len(slow)
+        assert [m.raw_records() for m in moved] == [b.raw_records() for b in slow]
+        assert [m.num_user_records for m in moved] == [
+            a.num_user_records for a in fast
+        ]
+        assert [m.size_bytes for m in moved] == [b.size_bytes for b in slow]
+
+    def test_rekey_across_key_lengths(self):
+        short, long_ = self.MIDS[0], self.MIDS[3]
+        assert len(short) < len(long_)
+        payloads = [b"k" * s for s in (300, 50_000, 520_000, 520_000, 120_000, 10)]
+        for old, new in ((short, long_), (long_, short)):
+            for agg in _fast_flushes(payloads, old):
+                [slow] = batch_records(
+                    (pk, new, d) for pk, _ehk, d in agg.raw_records()
+                )
+                assert agg.with_explicit_hash_key(new).to_bytes() == slow.to_bytes()
+
+    def test_carry_record_is_rebuilt_under_one_key(self):
+        batcher = FastBatcher(DEFAULT_PARTITION_KEY, SOFT_MAX_SIZE, MAX_LAST_RECORD_SIZE)
+        draws = iter(self.MIDS)
+        cell = {"ehk": next(draws)}
+
+        def source():
+            return cell["ehk"]
+
+        flushes = []
+        # 400 KB records: the third overflows the cap and is carried, with
+        # its pre-flush key, into a batch whose next record takes a new one
+        for agg in batcher.flushes(iter([b"c" * 400_000] * 5), source):
+            flushes.append(agg)
+            cell["ehk"] = next(draws)
+        carry = flushes[1]
+        assert len({ehk for _pk, ehk, _d in carry.raw_records()}) == 2
+        assert carry.with_explicit_hash_key(self.MIDS[3]) is None
+        moved = rekeyed(carry, self.MIDS[3])
+        [slow] = batch_records(
+            (pk, self.MIDS[3], d) for pk, _ehk, d in carry.raw_records()
+        )
+        assert moved.to_bytes() == slow.to_bytes()
+        assert moved.num_user_records == carry.num_user_records == 2
+
+    def test_rekey_never_outgrows_the_protocol_cap(self):
+        short, long_ = self.MIDS[0], self.MIDS[3]
+        # one payload that fills the record to exactly the cap under the
+        # shorter key: the longer key cannot fit, so the record keeps its own
+        probe = AggRecordBuilder()
+        probe.add_user_record(DEFAULT_PARTITION_KEY, b"f" * 1_000_000, short)
+        fill = 1_000_000 + MAX_BYTES_PER_RECORD - probe.size_bytes
+        [agg] = _fast_flushes([b"f" * fill], short)
+        assert agg.size_bytes == MAX_BYTES_PER_RECORD
+        assert agg.with_explicit_hash_key(long_) is agg
+        assert rekeyed(agg, long_) is agg
+        assert agg.with_explicit_hash_key(short) is agg  # same key: no work

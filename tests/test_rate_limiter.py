@@ -3,10 +3,13 @@ per-shard bytes/s and puts/s budgets without ever deadlocking."""
 
 from __future__ import annotations
 
+from kinesis_writer_spark.kpl.deaggregator import deaggregate
 from kinesis_writer_spark.sink import (
     FakeKinesisClient,
     KinesisStreamWriter,
     ShardRateLimiter,
+    ShardRouter,
+    open_shard_midpoints,
 )
 
 
@@ -78,6 +81,21 @@ class TestBuckets:
             rl.acquire("s0", 5000)
         # 50 000 B through 1000 B/s with a 1000 B burst: ~49 s, not ~90 s
         assert 48.5 <= vc.now <= 49.5
+
+    def test_negative_cost_refunds_without_sleeping(self):
+        vc = VirtualClock()
+        rl = make_limiter(vc)
+        rl.acquire("s0", 600, 4)
+        assert rl.acquire("s0", -300, -1) == 0.0
+        assert rl._buckets["s0"][:2] == [700.0, 7.0]
+        # a credit never lifts a bucket past its burst
+        assert rl.acquire("s0", -5000, -100) == 0.0
+        assert rl._buckets["s0"][:2] == [1000.0, 10.0]
+        # a refund into a bucket still in debt credits it and never waits
+        rl.acquire("s1", 3000)  # 2000 B in debt: sleeps 2 s
+        assert rl.acquire("s1", -500, -1) == 0.0
+        assert vc.sleeps == [2.0]
+        assert rl._buckets["s1"][:2] == [500.0, 10.0]
 
     def test_idle_time_refills_to_burst_only(self):
         vc = VirtualClock()
@@ -226,23 +244,34 @@ class TestBudgetAwareRouting:
         service rejections than the random-routing one."""
         from kinesis_writer_spark.sink import ThrottlingKinesisClient
 
-        class RandomRoutingWriter(KinesisStreamWriter):
-            """Paced by the limiter, routed by the reference's seeded draw."""
+        class RandomRoutingLimiter(ShardRateLimiter):
+            """Paces like the limiter, routes by the reference's seeded draw."""
 
-            def _next_routing_key(self) -> str:
+            def __init__(self, router: ShardRouter, **kw) -> None:
+                super().__init__(**kw)
+                self.router = router
+
+            def richest_key(self, keys: list[str]) -> str:
                 return self.router.next_hash_key()
 
-        def run(writer_cls: type[KinesisStreamWriter]) -> tuple[float, int]:
+        def run(random_routing: bool) -> tuple[float, int]:
             vc = VirtualClock()
             client = ThrottlingKinesisClient(
                 num_shards=4, bytes_per_sec_per_shard=600_000.0,
                 burst_seconds=2.0, clock=vc.clock,
             )
-            lim = ShardRateLimiter(
+            kw = dict(
                 bytes_per_sec=0.9 * 600_000.0, puts_per_sec=900.0,
                 burst_seconds=2.0, clock=vc.clock, sleep=vc.sleep,
             )
-            w = writer_cls(
+            lim = (
+                RandomRoutingLimiter(
+                    ShardRouter(open_shard_midpoints(client, "s"), seed=42), **kw
+                )
+                if random_routing
+                else ShardRateLimiter(**kw)
+            )
+            w = KinesisStreamWriter(
                 "s", client, sleep=vc.sleep, clock=vc.clock,
                 rate_limiter=lim, refresh_every_flushes=None,
             )
@@ -250,13 +279,63 @@ class TestBudgetAwareRouting:
             assert n == 12_000
             return vc.now, client.throttle_errors
 
-        t_random, err_random = run(RandomRoutingWriter)
-        t_budget, err_budget = run(KinesisStreamWriter)
+        t_random, err_random = run(random_routing=True)
+        t_budget, err_budget = run(random_routing=False)
         assert t_budget < t_random, (t_budget, t_random)
         assert err_budget == 0 and err_budget <= err_random
         # and it approaches the aggregate paced rate: 4 shards x 540 KB/s
         ideal = 12_000 * 900 / (4 * 0.9 * 600_000.0)
         assert t_budget <= 1.6 * ideal + 3, (t_budget, ideal)
+
+    def test_large_payloads_are_routed_when_sent(self):
+        """400 KB payloads take the overflow path: the record that overflows
+        a batch seeds the next one under the key drawn before the previous
+        send. Each put must still go to the shard chosen just before its
+        charge, with every user record, the carried one included, under
+        that one key."""
+        events = []
+
+        class Recording(ShardRateLimiter):
+            def richest_key(self, keys):
+                key = super().richest_key(keys)
+                events.append(("route", key))
+                return key
+
+            def acquire(self, shard_key, n_bytes, n_puts=1):
+                events.append(("charge", shard_key))
+                return super().acquire(shard_key, n_bytes, n_puts)
+
+        class Capture(FakeKinesisClient):
+            def put_records(self, StreamName, Records):
+                events.append(("put", Records[0]["ExplicitHashKey"]))
+                return super().put_records(StreamName, Records)
+
+        vc = VirtualClock()
+        lim = Recording(
+            bytes_per_sec=600_000.0, puts_per_sec=1000.0, burst_seconds=2.0,
+            clock=vc.clock, sleep=vc.sleep,
+        )
+        client = Capture(num_shards=4)
+        w = KinesisStreamWriter(
+            "s", client, sleep=vc.sleep, clock=vc.clock, rate_limiter=lim,
+            refresh_every_flushes=None,
+        )
+        payloads = [i.to_bytes(4, "big") * 100_000 for i in range(12)]
+        assert w.write(iter(payloads)) == 12
+        n_puts = len(client.put_requests)
+        assert n_puts == 6  # two 400 KB records per ~1 MiB flush
+        assert len(events) == 3 * n_puts
+        for i in range(n_puts):
+            (e1, key), (e2, charged), (e3, sent) = events[3 * i:3 * i + 3]
+            assert (e1, e2, e3) == ("route", "charge", "put")
+            assert charged == sent == key
+        for req in client.put_requests:
+            rec = req["Records"][0]
+            assert {u.explicit_hash_key for u in deaggregate(rec["Data"])} == {
+                rec["ExplicitHashKey"]
+            }
+        got = [u.data for wire in client.received for u in deaggregate(wire)]
+        assert got == payloads
 
     def test_writers_sharing_a_limiter_spread_evenly(self):
         """48 one-flush writers (one per Spark task) share one limiter over

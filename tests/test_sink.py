@@ -16,6 +16,7 @@ from kinesis_writer_spark.sink import (
     SOFT_MAX_SIZE,
     FakeKinesisClient,
     KinesisStreamWriter,
+    ShardRateLimiter,
     ShardRouter,
     batch_records,
     open_shard_midpoints,
@@ -167,6 +168,61 @@ class TestRetryReplay:
 
         _, _, records = decode_aggregated(client.received[0])
         assert [r[2] for r in records] == payloads
+
+
+class TestLimiterRefund:
+    """A put the service rejected for any reason but throughput spent no
+    shard budget, so its limiter charge comes back; a throughput rejection
+    keeps it. Frozen clock: no refill, so the buckets show every charge."""
+
+    class Logged(ShardRateLimiter):
+        def __init__(self):
+            super().__init__(
+                bytes_per_sec=1000.0, puts_per_sec=10.0,
+                clock=lambda: 0.0, sleep=lambda s: None,
+            )
+            self.log = []
+
+        def acquire(self, shard_key, n_bytes, n_puts=1):
+            waited = super().acquire(shard_key, n_bytes, n_puts)
+            self.log.append(
+                (shard_key, n_bytes, n_puts, tuple(self._buckets[shard_key][:2]))
+            )
+            return waited
+
+    def _write_one(self, client):
+        limiter = self.Logged()
+        writer = make_writer(client, rate_limiter=limiter)
+        mids = writer.router.midpoints
+        for key in mids:
+            limiter.acquire(key, 500)  # every bucket at 500 B, 9 puts
+        del limiter.log[:]
+        assert writer.write([b"r" * 100]) == 1
+        return limiter, mids
+
+    def test_resource_in_use_returns_its_tokens(self):
+        client = FakeKinesisClient(num_shards=2)
+        client.fail_next_put_with = "ResourceInUseException: stream is being updated"
+        limiter, mids = self._write_one(client)
+        (key, cost, _, charged), refund, retry = limiter.log
+        assert charged == (500.0 - cost, 8.0)
+        # the refund puts the bucket back where it was before the attempt
+        assert refund == (key, -cost, -1, (500.0, 9.0))
+        # so the retry is routed to the same, again fullest, shard
+        assert retry == (key, cost, 1, (500.0 - cost, 8.0))
+        assert len(client.put_requests) == 2 and len(client.received) == 1
+        assert limiter._buckets[mids[1]][:2] == [500.0, 9.0]
+
+    def test_throughput_rejection_keeps_its_charge(self):
+        client = FakeKinesisClient(num_shards=2, fail_first_n_puts=1)
+        limiter, mids = self._write_one(client)
+        # no refund: the rejected attempt's charge stays, so the retry
+        # goes to the other, now fuller, shard
+        assert [(key, n) for key, _cost, n, _state in limiter.log] == [
+            (mids[0], 1), (mids[1], 1)
+        ]
+        for key, cost, _n, _state in limiter.log:
+            assert limiter._buckets[key][:2] == [500.0 - cost, 8.0]
 
 
 class TestEndToEnd:
