@@ -15,12 +15,34 @@ connected-components fast path (:data:`CC_DRIVER_MAX_EDGES`): the duplicate
 graph is dup-density-sized, and below the gate an in-driver union-find beats
 five rounds of distributed shuffle jobs by ~20x; above it the distributed
 min-label propagation runs unchanged.
+
+The Spark-side MinHash/LSH chain is built once, in the MinHash section, and
+every MinHash query calls it:
+
+- :func:`minhash_bands` (per-row ``hashes`` → signature → band keys, with
+  carried columns; :func:`minhash_signatures` and :func:`signature_bands`
+  are its two halves): q161, q220 (``pipeline_ops_eval``) and
+  ``pipeline_ops_corpus.incremental_verdicts`` (q206, streaming dedup);
+  q133 (``features``, composed by q202) checkpoints the signatures between
+  the halves.
+- :func:`verified_reps` (band table persisted once, candidates against each
+  bucket's min-id representative, word-set Jaccard verify): q52, and q239
+  and q243 (``pipeline_ops_audit``). :func:`rep_candidates` is its
+  candidate step, shared with q133.
+- :func:`minhash_band_pairs` (the band self-join): q220 and
+  :func:`minhash_band_candidates`.
+- :func:`_shingle_hashes_spark` and :func:`_masked_toks_spark`: the one
+  cached 3-gram shingle-hash and 32-bit mask expressions (q220, q206).
+
+q51 emits the signature itself. q193 keeps its own shingle expression (no
+short-doc guard, an extra inner distinct).
 """
 
 from __future__ import annotations
 
 import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -122,6 +144,37 @@ def _word_hashes_spark(words="words"):
 _WORD_HASHES_SQL = (
     f"list_transform(words, w -> {duckdb_md5_60bit('w')} & {_MINHASH_MASK})"
 )
+
+
+def _shingle_hashes_spark():
+    """Distinct 60-bit hashes of each doc's word 3-grams; an empty array for
+    a doc of fewer than 3 words (the shingle unit of q206/q220 and the
+    streaming dedup). Constant expression, construction memoized."""
+
+    def _build():
+        ws = F.split("text", " ")
+        inner = F.zip_with(
+            F.slice(ws, 2, F.size(ws) - 2),
+            F.slice(ws, 3, F.size(ws) - 2),
+            lambda b, c: F.concat_ws(" ", b, c),
+        )
+        sh3 = F.zip_with(
+            F.slice(ws, 1, F.size(ws) - 2), inner, lambda a, bc: F.concat_ws(" ", a, bc)
+        )
+        return F.when(
+            F.size(ws) >= 3, F.array_distinct(F.transform(sh3, lambda s: md5_60bit(s)))
+        ).otherwise(F.array().cast("array<bigint>"))
+
+    return cached_exprs("shingle3_hashes", _build)
+
+
+def _masked_toks_spark():
+    """The 32-bit down-projection of a ``toks`` hash array: the MinHash
+    ``hashes`` input for shingle sets. Construction memoized."""
+    return cached_exprs(
+        "mask32_toks",
+        lambda: F.transform("toks", lambda t: t.bitwiseAND(F.lit(_MINHASH_MASK))),
+    )
 
 
 def _minhash_sig_spark(hashes="hashes") -> list:
@@ -228,6 +281,65 @@ def _band_exprs_sql(n_bands: int = _N_BANDS, rows_per_band: int | None = None) -
     return out
 
 
+def minhash_signatures(
+    hs: DataFrame, *carry: str, id_col: str = "doc_id"
+) -> DataFrame:
+    """``(id_col, *carry, signature)``: the 16-permutation MinHash signature
+    (``array<bigint>``) of each row's ``hashes`` array."""
+    sig = F.array(*_minhash_sig_spark("hashes")).alias("signature")
+    return hs.select(id_col, *carry, sig)
+
+
+def signature_bands(
+    sigs: DataFrame,
+    *carry: str,
+    n_bands: int = _N_BANDS,
+    rows_per_band: int | None = None,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """``(id_col, *carry, band_key)`` from a ``signature`` column: the
+    banding half of :func:`minhash_bands`."""
+    return sigs.select(
+        id_col,
+        *carry,
+        F.explode(F.array(*_band_exprs_spark(n_bands, rows_per_band))).alias("band_key"),
+    )
+
+
+def minhash_bands(
+    hs: DataFrame,
+    *carry: str,
+    n_bands: int = _N_BANDS,
+    rows_per_band: int | None = None,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """``(id_col, *carry, band_key)``, ``n_bands`` rows per input row: the
+    LSH band keys of each row's ``hashes`` array (signature, then
+    :func:`_band_exprs_spark`'s ``(n_bands, rows_per_band)`` banding).
+    Carried columns ride along, so a broadcast probe of the bands needs no
+    second pass for them."""
+    sigs = minhash_signatures(hs, *carry, id_col=id_col)
+    return signature_bands(
+        sigs, *carry, n_bands=n_bands, rows_per_band=rows_per_band, id_col=id_col
+    )
+
+
+def minhash_band_pairs(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The band self-join: each bucket's distinct ``(id_a, id_b)`` pairs,
+    ``id_a < id_b``, from a ``(id_col, band_key)`` table. One shuffle on
+    band_key; the join is quadratic only within a bucket, and the band hash
+    keeps buckets near-singleton away from true near-duplicates."""
+    a = bands.select(F.col(id_col).alias("id_a"), "band_key")
+    return (
+        a.join(
+            bands.select(F.col(id_col).alias("id_b"), F.col("band_key").alias("bk")),
+            (F.col("band_key") == F.col("bk")) & (F.col("id_a") < F.col("id_b")),
+        )
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
 def minhash_band_candidates(
     sigs: DataFrame,
     n_bands: int = _N_BANDS,
@@ -246,21 +358,28 @@ def minhash_band_candidates(
     (threshold 0.917 — recall 95.6%, 0.069 candidates/doc at sf1), and
     3x5 is the measured recovery point if recall ever sags at sf10+
     (threshold 0.803 — recall 99.5% at 0.231 candidates/doc, 3.3x the
-    verify cost; artifacts/lsh_band_probe.json). Scale shape: one shuffle
-    on band_key; the per-bucket self-join is quadratic only within a
-    bucket, and the band hash keeps buckets near-singleton away from true
-    near-duplicates."""
-    bands = sigs.select(
-        F.col(id_col).alias("id_a"),
-        F.explode(F.array(*_band_exprs_spark(n_bands, rows_per_band))).alias("band_key"),
+    verify cost; artifacts/lsh_band_probe.json)."""
+    bands = signature_bands(
+        sigs, n_bands=n_bands, rows_per_band=rows_per_band, id_col=id_col
     )
+    return minhash_band_pairs(bands, id_col)
+
+
+def rep_candidates(bands: DataFrame) -> DataFrame:
+    """``(doc_id, rep_id)``: each doc against the min doc_id of every bucket
+    it shares, when that representative is another doc."""
+    reps = bands.groupBy("band_key").agg(F.min("doc_id").alias("rep_id"))
+    # no .distinct() on the candidate pairs (r15): a pair can surface from
+    # at most n_bands(=2) bands, and the verify callers collapse duplicates
+    # AFTER the Jaccard verify — the distinct here paid a corpus-sized
+    # exchange of the pair set and then the verify join re-shuffled the
+    # survivors anyway, so dropping it strictly reduces shuffled bytes
+    # (C <= C + C/dup) at the cost of <= n_bands Jaccard evals per dup pair
+    # (map-side CPU). Measured 0.94 s -> 0.82 s at sf0.1, output identical.
     return (
-        bands.join(
-            bands.select(F.col("id_a").alias("id_b"), F.col("band_key").alias("bk")),
-            (F.col("band_key") == F.col("bk")) & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b")
-        .distinct()
+        bands.join(reps, "band_key")
+        .filter(F.col("doc_id") > F.col("rep_id"))
+        .select("doc_id", "rep_id")
     )
 
 
@@ -302,6 +421,36 @@ _MINHASH_DEDUP_SQL = f"""
 """
 
 
+def verified_reps(w: DataFrame, *carry: str) -> DataFrame:
+    """``(doc_id, rep_id, *carry)`` for every doc of ``w`` whose exact
+    word-set Jaccard against a representative (min doc_id) of a bucket it
+    shares is >= :data:`_THRESHOLD`: the q52 removal decisions. A pair
+    matched in several bands repeats. ``w`` is a persisted ``(doc_id, words,
+    *carry)`` table; it feeds the signatures and both verify sides."""
+    # bands feeds two consumers (the rep aggregate and the candidate probe);
+    # persist the NARROW (doc_id, band_key) table so the per-word MD5 + 16
+    # affine permutations run once per row, not once per consumer (r15: the
+    # rep side is broadcast locally, so ReusedExchange cannot dedupe the
+    # signature chain — measured 1.41 s -> 0.94 s at sf0.1). ~16 bytes/row
+    # x n_bands: orders of magnitude narrower than the text it derives from.
+    bands = minhash_bands(
+        w.select("doc_id", _word_hashes_spark("words").alias("hashes"))
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    wa = w.select("doc_id", *carry, F.col("words").alias("words_a"))
+    wb = w.select(F.col("doc_id").alias("rep_id"), F.col("words").alias("words_b"))
+    return (
+        rep_candidates(bands)
+        .join(wa, "doc_id")
+        .join(wb, "rep_id")
+        .filter(
+            F.size(F.array_intersect("words_a", "words_b")).cast("double")
+            / F.size(F.array_union("words_a", "words_b"))
+            >= _THRESHOLD
+        )
+        .select("doc_id", "rep_id", *carry)
+    )
+
+
 @register("q52_minhash_neardup", oracle=_MINHASH_DEDUP_SQL)
 def q52_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate *removal*: sign → band (2×8) → compare each
@@ -326,49 +475,10 @@ def q52_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # w feeds four consumers (signatures, both verify sides, final rollup);
     # persist so split+distinct runs once per row instead of four times.
     # MEMORY_AND_DISK: spills rather than OOMs when the word sets are large.
-    from pyspark import StorageLevel
-
     w = documents.select("doc_id", "lang", _WORDS_SPARK().alias("words")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    hs = w.select("doc_id", "words", _word_hashes_spark("words").alias("hashes"))
-    sigs = hs.select("doc_id", "words", F.array(*_minhash_sig_spark("hashes")).alias("signature"))
-    # bands feeds two consumers (the rep aggregate and the candidate probe);
-    # persist the NARROW (doc_id, band_key) table so the per-word MD5 + 16
-    # affine permutations run once per row, not once per consumer (r15: the
-    # rep side is broadcast locally, so ReusedExchange cannot dedupe the
-    # signature chain — measured 1.41 s -> 0.94 s at sf0.1). ~16 bytes/row
-    # x n_bands: orders of magnitude narrower than the text it derives from.
-    bands = (
-        sigs.select("doc_id", F.explode(F.array(*_band_exprs_spark())).alias("band_key"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    reps = bands.groupBy("band_key").agg(F.min("doc_id").alias("rep_id"))
-    # no .distinct() on the candidate pairs (r15): a pair can surface from
-    # at most n_bands(=2) bands, and `removed` already collapses duplicates
-    # AFTER the Jaccard verify — the distinct here paid a corpus-sized
-    # exchange of the pair set and then the verify join re-shuffled the
-    # survivors anyway, so dropping it strictly reduces shuffled bytes
-    # (C <= C + C/dup) at the cost of <= n_bands Jaccard evals per dup pair
-    # (map-side CPU). Measured 0.94 s -> 0.82 s at sf0.1, output identical.
-    cand = (
-        bands.join(reps, "band_key")
-        .filter(F.col("doc_id") > F.col("rep_id"))
-        .select("doc_id", "rep_id")
-    )
-    wa = w.select(F.col("doc_id"), F.col("lang"), F.col("words").alias("words_a"))
-    wb = w.select(F.col("doc_id").alias("rep_id"), F.col("words").alias("words_b"))
-    removed = (
-        cand.join(wa, "doc_id")
-        .join(wb, "rep_id")
-        .filter(
-            F.size(F.array_intersect("words_a", "words_b")).cast("double")
-            / F.size(F.array_union("words_a", "words_b"))
-            >= _THRESHOLD
-        )
-        .select("doc_id", "lang")
-        .distinct()
-    )
+    removed = verified_reps(w, "lang").select("doc_id", "lang").distinct()
     # Per-lang rollup WITHOUT joining the removed set back onto the corpus:
     # every doc is either kept or removed, so n_kept = n_docs - n_removed
     # and the final join is lang-cardinality-sized instead of the previous
@@ -1996,12 +2106,8 @@ def q161_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "lang", noisy_words.alias("words")
     )
     corpus = orig.unionByName(noisy)
-    hs = corpus.select("doc_id", _word_hashes_spark("words").alias("hashes"))
-    sigs = hs.select(
-        "doc_id", F.array(*_minhash_sig_spark("hashes")).alias("signature")
-    )
-    bands = sigs.select(
-        "doc_id", F.explode(F.array(*_band_exprs_spark())).alias("band_key")
+    bands = minhash_bands(
+        corpus.select("doc_id", _word_hashes_spark("words").alias("hashes"))
     )
     a = bands.filter(F.col("doc_id") < 1_000_000)
     b = bands.select(

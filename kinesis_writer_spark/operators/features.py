@@ -22,10 +22,11 @@ from ..registry import register
 from ._util import tables
 from .dedup import (
     _band_exprs_sql,
-    _band_exprs_spark,
-    _minhash_sig_spark,
     _minhash_sig_sql,
+    minhash_signatures,
     _N_HASHES,
+    rep_candidates,
+    signature_bands,
     _word_hashes_spark,
     _WORD_HASHES_SQL,
     _WORDS_SPARK,
@@ -248,20 +249,9 @@ def q133_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rep aggregate, and BOTH sides of the verify join — without the
     # checkpoint the per-word MD5 + 16-permutation lineage re-executes five
     # times through the self-joins (measured 10.7 s -> 3.6 s cold at sf0.1)
-    sigs = hs.select(
-        "doc_id", "words", F.array(*_minhash_sig_spark("hashes")).alias("signature")
-    ).localCheckpoint()
-    bands = sigs.select(
-        "doc_id", F.explode(F.array(*_band_exprs_spark())).alias("band_key")
-    )
-    reps = bands.groupBy(F.col("band_key").alias("rep_band_key")).agg(
-        F.min("doc_id").alias("rep_id")
-    )
+    sigs = minhash_signatures(hs, "words").localCheckpoint()
     cand = (
-        bands.join(
-            reps,
-            (F.col("band_key") == F.col("rep_band_key")) & (F.col("doc_id") > F.col("rep_id")),
-        )
+        rep_candidates(signature_bands(sigs))
         .select(F.col("doc_id").alias("doc_a"), F.col("rep_id").alias("doc_b"))
         .distinct()
     )

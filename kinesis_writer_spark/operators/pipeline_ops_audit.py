@@ -976,49 +976,17 @@ def q239_dedup_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep, and probes the removed set with one LEFT SEMI-style membership
     join — decision-table-scale, not corpus-scale.
     """
-    from .dedup import (
-        _band_exprs_spark,
-        _minhash_sig_spark,
-        _word_hashes_spark,
-        _WORDS_SPARK,
-        _THRESHOLD,
-    )
     from pyspark import StorageLevel
+
+    from .dedup import _WORDS_SPARK, verified_reps
 
     (documents,) = tables(spark, sf_dir, "documents")
     w = documents.select("doc_id", _WORDS_SPARK().alias("words")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    hs = w.select("doc_id", "words", _word_hashes_spark("words").alias("hashes"))
-    sigs = hs.select(
-        "doc_id", F.array(*_minhash_sig_spark("hashes")).alias("signature")
-    )
-    # bands feeds the rep aggregate AND the candidate probe: persist the
-    # narrow (doc_id, band_key) table so the per-word MD5 + 16 permutations
-    # run once, not once per consumer (the q52 r15 fix); no .distinct() on
-    # the pairs — the decisions groupBy(doc_id) collapses duplicates after
-    # the verify, so the distinct only added a corpus-sized exchange.
-    bands = sigs.select(
-        "doc_id", F.explode(F.array(*_band_exprs_spark())).alias("band_key")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    reps = bands.groupBy("band_key").agg(F.min("doc_id").alias("rep_id"))
-    cand = (
-        bands.join(reps, "band_key")
-        .filter(F.col("doc_id") > F.col("rep_id"))
-        .select("doc_id", "rep_id")
-    )
-    wa = w.select(F.col("doc_id"), F.col("words").alias("words_a"))
-    wb = w.select(F.col("doc_id").alias("rep_id"), F.col("words").alias("words_b"))
-    verified = (
-        cand.join(wa, "doc_id")
-        .join(wb, "rep_id")
-        .filter(
-            F.size(F.array_intersect("words_a", "words_b")).cast("double")
-            / F.size(F.array_union("words_a", "words_b"))
-            >= _THRESHOLD
-        )
-        .select("doc_id", "rep_id")
-    )
+    # no .distinct() on the verified pairs: the decisions groupBy(doc_id)
+    # collapses the duplicates a pair picks up from several bands
+    verified = verified_reps(w)
     # decisions feeds both the membership set and the audit join — persist
     # the tiny table or the whole band+verify pipeline executes twice
     decisions = (
@@ -1292,13 +1260,7 @@ def q243_net_training_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from .dedup import (
-        _band_exprs_spark,
-        _minhash_sig_spark,
-        _word_hashes_spark,
-        _WORDS_SPARK,
-        _THRESHOLD,
-    )
+    from .dedup import _WORDS_SPARK, verified_reps
 
     (documents,) = tables(spark, sf_dir, "documents")
     w = documents.select(
@@ -1307,42 +1269,12 @@ def q243_net_training_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         _WORDS_SPARK().alias("words"),
         F.size(F.split("text", " ")).cast("bigint").alias("n_tok"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    hs = w.select("doc_id", "words", _word_hashes_spark("words").alias("hashes"))
-    sigs = hs.select(
-        "doc_id", F.array(*_minhash_sig_spark("hashes")).alias("signature")
-    )
-    # bands feeds the rep aggregate AND the candidate probe: persist the
-    # narrow (doc_id, band_key) table so the per-word MD5 + 16 permutations
-    # run once, not once per consumer (the q52 r15 fix); no .distinct() on
-    # the pairs — the decisions groupBy(doc_id) collapses duplicates after
-    # the verify, so the distinct only added a corpus-sized exchange.
-    bands = sigs.select(
-        "doc_id", F.explode(F.array(*_band_exprs_spark())).alias("band_key")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    reps = bands.groupBy("band_key").agg(F.min("doc_id").alias("rep_id"))
-    cand = (
-        bands.join(reps, "band_key")
-        .filter(F.col("doc_id") > F.col("rep_id"))
-        .select("doc_id", "rep_id")
-    )
     # the verify side carries lang + token count, so the accounting rolls
     # up from the (small) removed set alone — the corpus-wide left join
     # that existed only to flag removed rows is gone (r14; the q52 rollup
     # decomposition, with token sums riding along instead of bare counts)
-    wa = w.select(
-        F.col("doc_id"), F.col("lang"), F.col("n_tok"), F.col("words").alias("words_a")
-    )
-    wb = w.select(F.col("doc_id").alias("rep_id"), F.col("words").alias("words_b"))
     removed = (
-        cand.join(wa, "doc_id")
-        .join(wb, "rep_id")
-        .filter(
-            F.size(F.array_intersect("words_a", "words_b")).cast("double")
-            / F.size(F.array_union("words_a", "words_b"))
-            >= _THRESHOLD
-        )
-        .select("doc_id", "lang", "n_tok")
-        .distinct()
+        verified_reps(w, "lang", "n_tok").select("doc_id", "lang", "n_tok").distinct()
     )
     raw = w.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -411,63 +411,29 @@ def q220_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     here is all-pairs; the expensive inputs are both already
     linear-in-corpus.
     """
-    from .dedup import _band_exprs_spark, _minhash_sig_spark, _MINHASH_MASK
+    from pyspark import StorageLevel
+
+    from .dedup import (
+        _masked_toks_spark,
+        _shingle_hashes_spark,
+        minhash_band_pairs,
+        minhash_bands,
+    )
     from .scale_ops import q193_prefix_filter_join
 
     truth = q193_prefix_filter_join(spark, sf_dir).select("doc_a", "doc_b")
 
-
     (documents,) = tables(spark, sf_dir, "documents")
-
-    def _build_toks():
-        ws = F.split("text", " ")
-        inner = F.zip_with(
-            F.slice(ws, 2, F.size(ws) - 2),
-            F.slice(ws, 3, F.size(ws) - 2),
-            lambda b, c: F.concat_ws(" ", b, c),
-        )
-        sh3 = F.zip_with(
-            F.slice(ws, 1, F.size(ws) - 2), inner, lambda a, bc: F.concat_ws(" ", a, bc)
-        )
-        return F.when(
-            F.size(ws) >= 3, F.array_distinct(F.transform(sh3, lambda s: md5_60bit(s)))
-        ).otherwise(F.array().cast("array<bigint>"))
-
-    # constant shingle chain + mask transform: construction memoized (r14)
-    toks = cached_exprs("q220_shingle_toks", _build_toks)
-    toksrc = documents.select("doc_id", toks.alias("toks")).filter(
+    toksrc = documents.select("doc_id", _shingle_hashes_spark().alias("toks")).filter(
         F.size("toks") > 0
     )
-    hs = toksrc.select(
-        "doc_id",
-        cached_exprs(
-            "q220_mask_hashes",
-            lambda: F.transform(
-                "toks", lambda t: t.bitwiseAND(F.lit(_MINHASH_MASK))
-            ),
-        ).alias("hashes"),
-    )
-    sigs = hs.select(
-        "doc_id", F.array(*_minhash_sig_spark("hashes")).alias("signature")
-    )
+    hs = toksrc.select("doc_id", _masked_toks_spark().alias("hashes"))
     # the band self-join consumes `bands` twice; persist the narrow table
     # so the shingle+MD5+16-permutation chain runs once (locally the join
     # is broadcast, so ReusedExchange never deduped the two subtrees)
-    from pyspark import StorageLevel
-
-    bands = sigs.select(
-        "doc_id", F.explode(F.array(*_band_exprs_spark())).alias("band_key")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cands = (
-        bands.alias("a")
-        .join(
-            bands.select(
-                F.col("doc_id").alias("doc_b"), F.col("band_key").alias("bk")
-            ),
-            (F.col("band_key") == F.col("bk")) & (F.col("doc_id") < F.col("doc_b")),
-        )
-        .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        .distinct()
+    bands = minhash_bands(hs).persist(StorageLevel.MEMORY_AND_DISK)
+    cands = minhash_band_pairs(bands).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
     # Single-pass comparison: a FULL OUTER join of the two (unique) pair
     # sets with presence flags, folded by one global aggregate. The prior

@@ -89,7 +89,10 @@ def _ensure_loaded() -> None:
         joins,
         multimodal,
         pipeline,
-        pipeline_ops,
+        pipeline_ops_audit,
+        pipeline_ops_composed,
+        pipeline_ops_corpus,
+        pipeline_ops_eval,
         relational,
         relational2,
         relational3,

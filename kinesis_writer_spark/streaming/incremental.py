@@ -2,8 +2,9 @@
 static, already-deduplicated corpus.
 
 Each micro-batch runs the same broadcast-probe plan as the batch operator
-(operators/pipeline_ops.incremental_verdicts): the micro-batch's digests,
-MinHash band keys, and word arrays broadcast; the corpus is only streamed.
+(operators/pipeline_ops_corpus.incremental_verdicts): the micro-batch's
+digests, MinHash band keys, and word arrays broadcast; the corpus is only
+streamed.
 That makes per-batch cost O(|micro-batch|) — the property that lets a
 continuously-ingesting pipeline keep its corpus deduped without ever
 re-running a full corpus×corpus job.
@@ -22,7 +23,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from ..operators.pipeline_ops import incremental_verdicts
+from ..operators._util import release_checkpoint
+from ..operators.pipeline_ops_corpus import incremental_verdicts
 
 
 def dedup_stream_against_corpus(
@@ -66,5 +68,9 @@ def dedup_stream_against_corpus(
             ).localCheckpoint(eager=True)
             state["corpus"] = state["corpus"].unionByName(kept_docs)
         sink(verdicts, batch_id)
+        # release what this batch cached; the grown corpus reads only its
+        # own eager kept-docs checkpoint, which stays
+        verdicts._batch_cache.unpersist()
+        release_checkpoint(batch_df)
 
     return stream_docs.writeStream.foreachBatch(handle)

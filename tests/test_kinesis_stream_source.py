@@ -659,7 +659,7 @@ class TestKinesisToIncrementalDedup:
         from pyspark.sql import functions as F
 
         from kinesis_writer_spark import io as kio
-        from kinesis_writer_spark.operators.pipeline_ops import (
+        from kinesis_writer_spark.operators.pipeline_ops_corpus import (
             _INC_MOD,
             incremental_verdicts,
         )

@@ -5,6 +5,8 @@ joins, top-k without global sort, no cartesian products in LSH pipelines.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from kinesis_writer_spark import registry
@@ -354,6 +356,44 @@ class TestPipelineOpsShapes:
         # the plan (quantize + cross-multiplied compares only)
         p = plans["q214_distance_histogram"]
         assert "SQRT" not in p and "POWER" not in p
+
+
+def _exchange_count(plan: str) -> int:
+    """Distinct Exchange operators (shuffle, broadcast, reused) in the plan
+    tree. A cache that has already run prints its adaptive plan twice, the
+    final plan's stages and the initial plan; an Exchange directly under a
+    QueryStage is the final-plan copy and is not counted again, so the count
+    does not depend on whether an earlier test filled the cache."""
+    lines = plan.split("\n\n")[0].splitlines()
+    return len(
+        {
+            m.group(1)
+            for prev, line in zip([""] + lines, lines)
+            if "QueryStage" not in prev
+            and (m := re.search(r"\b\w*Exchange \((\d+)\)", line))
+        }
+    )
+
+
+class TestMinHashFamilyShapes:
+    """The shared MinHash/LSH chain adds no shuffle to any of its callers:
+    each query keeps its Exchange count."""
+
+    EXCHANGES = {
+        "q51_minhash_signatures": 0,
+        "q52_minhash_neardup": 9,
+        "q133_minhash_estimate": 5,
+        "q161_blocking_recall": 4,
+        "q202_lsh_band_tuning": 24,
+        "q206_incremental_dedup": 8,
+        "q220_lsh_recall_eval": 13,
+        "q239_dedup_chain_audit": 7,
+        "q243_net_training_tokens": 8,
+    }
+
+    @pytest.mark.parametrize("name", sorted(EXCHANGES))
+    def test_exchange_count(self, plans, name):
+        assert _exchange_count(plans[name]) == self.EXCHANGES[name]
 
 
 from kinesis_writer_spark.plans.audit import (  # noqa: E402

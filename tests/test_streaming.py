@@ -210,7 +210,7 @@ class TestIncrementalDedupStream:
     def test_stream_verdicts_equal_batch(self, spark, tmp_path):
         """Streamed micro-batches of 'new' docs produce exactly the batch
         operator's per-doc verdicts against the same static corpus."""
-        from kinesis_writer_spark.operators.pipeline_ops import (
+        from kinesis_writer_spark.operators.pipeline_ops_corpus import (
             _INC_MOD,
             incremental_verdicts,
         )
@@ -250,6 +250,51 @@ class TestIncrementalDedupStream:
         # verdicts include every class the fixture is known to contain
         kinds = {row["verdict"] for row in collected}
         assert "kept" in kinds
+
+
+class TestIncrementalDedupReleases:
+    def test_micro_batches_do_not_accumulate_cached_rdds(self, spark, tmp_path):
+        """Each micro-batch releases what it cached (the batch checkpoint
+        and the batch side incremental_verdicts persists) once its sink
+        returns, so the persisted-RDD count stays flat across batches."""
+        from kinesis_writer_spark.operators.pipeline_ops_corpus import _INC_MOD
+        from kinesis_writer_spark.streaming.incremental import (
+            dedup_stream_against_corpus,
+        )
+
+        docs = kio.load(spark, SF_DIR, "documents").select("doc_id", "text", "lang")
+        incoming = docs.filter(F.col("doc_id") % _INC_MOD == 0)
+        corpus = docs.filter(F.col("doc_id") % _INC_MOD != 0)
+        replay = str(tmp_path / "incoming")
+        incoming.repartition(4).write.parquet(replay)
+        stream = (
+            spark.readStream.schema(incoming.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(replay)
+        )
+
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+
+        def n_new() -> int:
+            return len(set(jsc.getPersistentRDDs().keys()) - before)
+
+        counts: list = []
+
+        def sink(verdicts, batch_id):
+            verdicts.collect()
+            counts.append(n_new())
+
+        q = (
+            dedup_stream_against_corpus(stream, corpus, sink)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        q.awaitTermination(120)
+        assert len(counts) >= 4, counts
+        assert counts == [counts[0]] * len(counts), counts
+        assert n_new() == 0
 
 
 class TestGrowingCorpusDedup:
