@@ -107,8 +107,6 @@ def l3_writer_pandas(chunks) -> dict:
 
 def l4_fast_list(payloads: list[bytes]) -> dict:
     w = _writer()
-    if not hasattr(w, "write_fast_capable"):
-        return {"layer": "L4 fast fixed-key path, list input", "recs_per_sec": None, "note": "fast path not built yet"}
     t0 = time.monotonic()
     n = w.write(payloads)
     dt = time.monotonic() - t0
@@ -118,8 +116,6 @@ def l4_fast_list(payloads: list[bytes]) -> dict:
 
 def l5_fast_pandas(chunks) -> dict:
     w = _writer()
-    if not hasattr(w, "write_fast_capable"):
-        return {"layer": "L5 fast path from pandas chunks (numpy)", "recs_per_sec": None, "note": "fast path not built yet"}
 
     def payload_iter():
         for pdf in chunks:

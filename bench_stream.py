@@ -38,7 +38,7 @@ axis. Five phases, one calib-bracketed artifact
     100 TB/day.
 
 (e) **kinesis source backlog drain** — a deep multi-shard backlog read
-    TRIM_HORIZON -> tip with the partitioned reader and deaggregated,
+    TRIM_HORIZON -> tip with the stream reader and deaggregated,
     measuring sustained drain records/s + MB/s vs the per-shard read cap
     (2 MB/s/shard): a lagging consumer must out-drain the producers.
 
@@ -1109,7 +1109,6 @@ def source_soak(spark, shards: int, total_records: int,
     reader = (
         spark.readStream.format("kinesis")
         .option("stream_name", "soak-src")
-        .option("reader", "partitioned")
         .option(
             "client_factory",
             "kinesis_writer_spark.sources.kinesis_stream:capture_client_factory",
@@ -1193,7 +1192,7 @@ def reshard_soak(spark, shards: int, total_records: int,
         ~1/3 of the put volume and merges the split children pairwise at
         ~2/3; the writer's periodic shard-map refresh must re-route so
         post-reshard traffic lands in live children, not closed parents.
-      - source side: the partitioned reader drains TRIM_HORIZON -> tip
+      - source side: the stream reader drains TRIM_HORIZON -> tip
         through the persisted topology (_topology.json — no hand-wired
         parent map), capped per micro-batch so admission ordering is
         observable across batches.
@@ -1271,7 +1270,6 @@ def reshard_soak(spark, shards: int, total_records: int,
     raw = (
         spark.readStream.format("kinesis")
         .option("stream_name", "reshard-soak")
-        .option("reader", "partitioned")
         .option("max_records_per_batch", str(max_frames_per_batch))
         .option(
             "client_factory",

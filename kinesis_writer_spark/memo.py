@@ -44,6 +44,11 @@ _CACHES: list[MutableMapping] = []
 #: actual block-release behavior per supported Spark version).
 _jvm_release_warned = False
 
+#: warn-once flag for a memo value whose own ``unpersist()`` raises: the
+#: clear goes on (every cache still empties), but the first failure is
+#: logged so a leaking release is visible rather than swallowed.
+_unpersist_warned = False
+
 
 def register(cache: MutableMapping) -> MutableMapping:
     """Record a module-level memo cache; returns it for inline use."""
@@ -59,7 +64,7 @@ def clear_all() -> int:
     pass does not accumulate orphaned checkpoint blocks (executor memory
     pressure mid-measurement) while waiting for driver GC.
     """
-    global _jvm_release_warned
+    global _jvm_release_warned, _unpersist_warned
     n = sum(1 for c in _CACHES if c)
     for c in _CACHES:
         for v in list(c.values()):
@@ -67,8 +72,14 @@ def clear_all() -> int:
             if callable(unpersist):
                 try:
                     unpersist()
-                except Exception:
-                    pass
+                except Exception as exc:
+                    if not _unpersist_warned:
+                        _unpersist_warned = True
+                        _log.warning(
+                            "memo entry unpersist() failed (%r); its blocks "
+                            "are left to driver GC",
+                            exc,
+                        )
             # DataFrame.unpersist() only reaches CacheManager blocks; a
             # localCheckpointed DataFrame keeps its blocks in an internal
             # RDD the CacheManager cannot see (its plan is a LogicalRDD),

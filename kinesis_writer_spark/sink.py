@@ -508,9 +508,6 @@ class KinesisStreamWriter:
         self._with_retry(lambda: self._put_aggregated(current), reroute)
         return current.num_user_records
 
-    #: Feature probe for benches: write() uses the fast fixed-key encoder.
-    write_fast_capable = True
-
     def write(self, payloads: Iterable[bytes]) -> int:
         """Batch + route + send every payload; returns the user-record count.
 

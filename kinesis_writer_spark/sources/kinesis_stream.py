@@ -19,15 +19,20 @@ and composes with the rest of the engine: KPL deaggregation
 (:func:`..sources.kpl_stream.deaggregate_records` explodes aggregated
 payloads), watermarked windows, and the stateful operators.
 
+Each micro-batch plans one input partition per shard slice, and every
+executor task polls its own shard, so ingest parallelism equals the shard
+count and no record bytes pass through the driver (see
+:class:`KinesisPartitionedStreamReader` for its ``latestOffset`` contract).
+
 Offsets are ``{shard_id: {"seq": last_consumed_sequence_number, "done":
 reached_shard_end}}`` dicts — the exact checkpoint shape a KCL lease table
 keeps. Sequence numbers are treated as OPAQUE per-shard-ordered strings
 (the real Kinesis contract): resume is always ``AFTER_SEQUENCE_NUMBER`` with
 the stored value, never arithmetic on it, so live boto3 streams work
 executor-side. A restarted query resumes from its checkpoint without data
-loss (``readBetweenOffsets`` / the partitioned ranges replay a committed
-``(after seq_a .. through seq_b]`` range deterministically). Legacy round-2
-checkpoints (dense integer next-index values) are transparently upgraded.
+loss (each planned slice replays a committed ``(after seq_a .. through
+seq_b]`` range deterministically). Legacy round-2 checkpoints (dense integer
+next-index values) are transparently upgraded.
 
 Resharding: closed shards (``SHARD_END`` — ``NextShardIterator == null``, or
 ``SequenceNumberRange.EndingSequenceNumber`` set, the predicate the reference
@@ -41,17 +46,6 @@ replays a directory of ``.kpl`` container files (one subdirectory per shard —
 the layout ``write_wire_dir`` spills) through the same ``get_records`` API
 shape, so the full ``readStream → deaggregate → window`` pipeline runs
 hermetically in CI; tests/test_kinesis_stream_source.py does exactly that.
-
-Two reader shapes, same offsets (checkpoint-compatible):
-
-- default: ``SimpleDataSourceStreamReader`` — the driver polls and rows ship
-  with the batch plan. Right for control-plane simplicity and low-MB/s
-  streams.
-- ``.option("reader", "partitioned")``: a full ``DataSourceStreamReader``
-  planning ONE input partition per shard slice, each executor task polling
-  its own shard — ingest parallelism = shard count, no record bytes through
-  the driver. This is the cluster-scale shape; see
-  :class:`KinesisPartitionedStreamReader` for its ``latestOffset`` contract.
 
 The sink side is also native: ``payloads.writeStream.format("kinesis")``
 runs the reference's producer loop (KPL aggregation → shard-midpoint
@@ -74,7 +68,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     DataSourceStreamWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 #: Raw Kinesis record schema (consumer-side; ``data`` may hold a KPL
@@ -85,6 +78,9 @@ KINESIS_SCHEMA = (
 )
 
 _EPOCH = datetime(2024, 1, 1, tzinfo=timezone.utc)
+
+#: ``client_factory`` used when the option is absent: a live boto3 client.
+DEFAULT_CLIENT_FACTORY = "kinesis_writer_spark.sources.kinesis_stream:boto3_client_factory"
 
 
 def resolve_factory(spec: str, kwargs_json: str | None):
@@ -517,7 +513,7 @@ def capture_sink_client_factory(
 
 
 # ---------------------------------------------------------------------------
-# Offset plumbing shared by both readers
+# Offset plumbing
 # ---------------------------------------------------------------------------
 
 _GET_RECORDS_LIMIT = 10_000  # hard Kinesis API bound per GetRecords call
@@ -556,12 +552,13 @@ def _seq_ge(a: str | None, b: str | None) -> bool:
 def _list_shards_meta(client, stream: str) -> list[dict]:
     """Full shard map with reshard metadata (ParentShardId /
     SequenceNumberRange), paginated like the reference walks describeStream
-    (KinesisWriter.scala:46-64)."""
+    (KinesisWriter.scala:46-64). A follow-up page passes ``NextToken``
+    alone: ListShards rejects it next to ``StreamName``."""
     out: list[dict] = []
     token = None
     while True:
         resp = (
-            client.list_shards(StreamName=stream, NextToken=token)
+            client.list_shards(NextToken=token)
             if token
             else client.list_shards(StreamName=stream)
         )
@@ -599,17 +596,13 @@ def _open_iterator(client, stream: str, shard_id: str, off: dict) -> str:
     )["ShardIterator"]
 
 
-def _poll_shard(
-    client, stream: str, shard_id: str, off: dict, cap: int, keep_records: bool = True
-):
-    """Poll one shard from its offset: loop ``get_records`` (Limit clamped
-    to the 10 000 API bound) until the shard is caught up
+def _probe_shard(client, stream: str, shard_id: str, off: dict, cap: int) -> dict:
+    """Probe one shard forward from its offset: loop ``get_records`` (Limit
+    clamped to the 10 000 API bound) until the shard is caught up
     (``MillisBehindLatest == 0``), the admission cap is hit, or SHARD_END.
-    Returns ``(records, new_offset)``. ``keep_records=False`` is the
-    sequence-probe mode: only the last sequence number is tracked and
-    payload bytes are dropped page by page (bounded memory on the driver)."""
+    Returns the new offset; only the last sequence number is kept and
+    payload bytes are dropped page by page (bounded driver memory)."""
     it = _open_iterator(client, stream, shard_id, off)
-    out: list = []
     n = 0
     last_seq = None
     done = False
@@ -621,8 +614,6 @@ def _poll_shard(
         n += len(recs)
         if recs:
             last_seq = recs[-1]["SequenceNumber"]
-            if keep_records:
-                out.extend(recs)
         nxt = resp.get("NextShardIterator")
         if nxt is None:
             done = True  # SHARD_END: closed shard fully drained
@@ -638,11 +629,10 @@ def _poll_shard(
             empties = 0
         it = nxt
     if last_seq is not None:
-        new = {"seq": last_seq, "done": done}
-    else:
-        new = dict(off)
-        new["done"] = done or off.get("done", False)
-    return out, new
+        return {"seq": last_seq, "done": done}
+    new = dict(off)
+    new["done"] = done or off.get("done", False)
+    return new
 
 
 def _read_shard_range(client, stream: str, shard_id: str, start: dict, end_seq: str):
@@ -680,108 +670,6 @@ def _rows_for(shard_id: str, records) -> Iterator[tuple]:
         )
 
 
-class KinesisSimpleStreamReader(SimpleDataSourceStreamReader):
-    """Driver-side polling reader over the boto3 consumer surface.
-
-    Offset format: ``{shard_id: {"seq": last_consumed, "done": bool}}`` with
-    sequence numbers treated as opaque strings (resume =
-    ``AFTER_SEQUENCE_NUMBER``) — valid against live boto3 streams, the
-    capture replay client, and round-2 integer checkpoints. ``read``
-    advances every pollable shard by up to ``max_records`` per micro-batch;
-    ``readBetweenOffsets`` replays a committed range exactly (loops
-    get_records to the recorded end sequence number — never a single
-    count-bounded call). Closed shards drain to SHARD_END once and are then
-    skipped; children unlock when their parents finish (same call: admission
-    is re-checked until a pass makes no progress, so availableNow drains a
-    whole reshard tree).
-    """
-
-    def __init__(self, options) -> None:
-        self._stream = options.get("stream_name", "stream")
-        self._factory_spec = options.get(
-            "client_factory",
-            "kinesis_writer_spark.sources.kinesis_stream:boto3_client_factory",
-        )
-        self._factory_kwargs = options.get("client_kwargs")
-        self._max_records = int(options.get("max_records", "10000"))
-        self._starting_position = options.get("starting_position", "TRIM_HORIZON")
-        self._client = None
-
-    def _c(self):
-        if self._client is None:
-            self._client = resolve_factory(self._factory_spec, self._factory_kwargs)
-        return self._client
-
-    def initialOffset(self) -> dict:
-        metas = _list_shards_meta(self._c(), self._stream)
-        if self._starting_position == "LATEST":
-            return {m["ShardId"]: self._latest_start(m["ShardId"]) for m in metas}
-        return {m["ShardId"]: {"seq": None, "done": False} for m in metas}
-
-    def _latest_start(self, shard_id: str) -> dict:
-        """Pin LATEST for one shard. An index-exposing client (capture
-        replay / KCL store) yields an exact position; a live boto3 iterator
-        is opaque, so the offset carries a LATEST marker and the first poll
-        opens a LATEST iterator instead (records arriving before that first
-        poll are skipped — the standard "start from latest" contract)."""
-        it = self._c().get_shard_iterator(
-            StreamName=self._stream, ShardId=shard_id, ShardIteratorType="LATEST"
-        )["ShardIterator"]
-        try:
-            idx = int(json.loads(it).get("idx", 0))
-        except (ValueError, TypeError, AttributeError):
-            return {"seq": None, "done": False, "pos": "LATEST"}
-        return {"seq": str(idx - 1) if idx > 0 else None, "done": False}
-
-    def read(self, start: dict):
-        client = self._c()
-        metas = _list_shards_meta(client, self._stream)
-        known = {m["ShardId"] for m in metas}
-        rows: list[tuple] = []
-        end = {sid: _norm_off(v) for sid, v in start.items()}
-        pending = {m["ShardId"]: m for m in metas}
-        progressed = True
-        while pending and progressed:  # re-admit children as parents drain
-            progressed = False
-            for sid in list(pending):
-                off = end.get(sid, _norm_off(start.get(sid)))
-                if off.get("done"):
-                    end[sid] = off
-                    del pending[sid]
-                    continue
-                if not _parents_done(pending[sid], known, end):
-                    continue  # parent not drained yet — maybe this pass
-                records, new_off = _poll_shard(
-                    client, self._stream, sid, off, self._max_records
-                )
-                rows.extend(_rows_for(sid, records))
-                end[sid] = new_off
-                del pending[sid]
-                progressed = True
-        # shards still blocked on an un-drained parent carry their start
-        # offset forward and will be admitted by a later batch
-        for sid in pending:
-            end.setdefault(sid, _norm_off(start.get(sid)))
-        return iter(rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        client = self._c()
-        for shard_id, raw_end in end.items():
-            eo = _norm_off(raw_end)
-            so = _norm_off(start.get(shard_id))
-            if eo["seq"] is None or eo["seq"] == so["seq"]:
-                continue
-            yield from _rows_for(
-                shard_id,
-                _read_shard_range(client, self._stream, shard_id, so, eo["seq"]),
-            )
-
-    def commit(self, end: dict) -> None:
-        # at-least-once bookkeeping happens in Spark's checkpoint; a KCL-style
-        # lease table would be updated here
-        pass
-
-
 class _ShardSlice(InputPartition):
     def __init__(self, shard_id: str | None, start: dict | None, end_seq: str | None):
         self.shard_id = shard_id
@@ -790,16 +678,25 @@ class _ShardSlice(InputPartition):
 
 
 class KinesisPartitionedStreamReader(DataSourceStreamReader):
-    """Partition-per-shard reader — the cluster-scale shape: each micro-batch
-    plans ONE input partition per shard slice, and every executor task polls
-    its own shard over the boto3 surface (``get_shard_iterator`` +
-    ``get_records``) directly, so ingest parallelism equals the shard count
-    and no record bytes are retained on the driver (unlike the Simple
-    reader, which reads driver-side).
+    """The Kinesis stream reader: each micro-batch plans ONE input partition
+    per shard slice, and every executor task polls its own shard over the
+    boto3 surface (``get_shard_iterator`` + ``get_records``) directly, so
+    ingest parallelism equals the shard count and no record bytes are
+    retained on the driver.
 
-    Enabled with ``.option("reader", "partitioned")``. Offsets are the same
-    ``{shard_id: {"seq", "done"}}`` dicts as the Simple reader, so the two
-    are checkpoint-compatible (including round-2 integer checkpoints).
+    Options: ``stream_name``; ``client_factory`` (``module:callable``, boto3
+    by default) and its JSON ``client_kwargs``; ``starting_position``
+    (``TRIM_HORIZON`` by default, or ``LATEST``); ``max_records_per_batch``
+    (per-shard admission cap, 0 = none). Offsets are ``{shard_id: {"seq",
+    "done"}}`` dicts; round-2 integer checkpoints resume too.
+
+    ``starting_position=LATEST`` pins each shard's tip in ``initialOffset``.
+    An index-exposing client yields the exact position. A live boto3
+    iterator is opaque, so the shard's offset carries a ``"pos": "LATEST"``
+    marker until a ``latestOffset`` probe sees a record. No slice starts at
+    a marker (its executor would open a fresh LATEST iterator and read past
+    the pinned end), so records that land before the first pinned sequence
+    number are skipped — the standard "start from latest" contract.
 
     ``latestOffset`` must pin each shard's batch-end sequence number BEFORE
     executors read (that is what makes a committed batch deterministically
@@ -837,13 +734,10 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, options) -> None:
-        self._options = dict(options)
         self._stream = options.get("stream_name", "stream")
-        self._factory_spec = options.get(
-            "client_factory",
-            "kinesis_writer_spark.sources.kinesis_stream:boto3_client_factory",
-        )
+        self._factory_spec = options.get("client_factory", DEFAULT_CLIENT_FACTORY)
         self._factory_kwargs = options.get("client_kwargs")
+        self._starting_position = options.get("starting_position", "TRIM_HORIZON")
         # per-shard per-micro-batch admission cap: bounds batch size (and
         # therefore recovery replay) the way maxOffsetsPerTrigger does for
         # Kafka; 0 = unbounded
@@ -876,38 +770,50 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
             self._client = resolve_factory(self._factory_spec, self._factory_kwargs)
         return self._client
 
+    def _latest_index(self, sid: str) -> int | None:
+        """Position of the shard's LATEST iterator if the client exposes one
+        (capture replay, a KCL lease store); ``None`` for an opaque live
+        boto3 iterator."""
+        it = self._c().get_shard_iterator(
+            StreamName=self._stream, ShardId=sid, ShardIteratorType="LATEST"
+        )["ShardIterator"]
+        try:
+            return int(json.loads(it).get("idx", 0))
+        except (ValueError, TypeError, AttributeError):
+            return None
 
     def initialOffset(self) -> dict:
-        start = {
-            m["ShardId"]: {"seq": None, "done": False}
-            for m in _list_shards_meta(self._c(), self._stream)
-        }
+        metas = _list_shards_meta(self._c(), self._stream)
+        if self._starting_position == "LATEST":
+            start = {m["ShardId"]: self._latest_start(m["ShardId"]) for m in metas}
+        else:
+            start = {m["ShardId"]: {"seq": None, "done": False} for m in metas}
         self._last_start = start
         return start
+
+    def _latest_start(self, shard_id: str) -> dict:
+        """Pin LATEST for one shard: the exact tip if the client exposes it,
+        else the LATEST marker (see the class docstring)."""
+        idx = self._latest_index(shard_id)
+        if idx is None:
+            return {"seq": None, "done": False, "pos": "LATEST"}
+        return {"seq": str(idx - 1) if idx > 0 else None, "done": False}
 
     def _tip(self, meta: dict, cur: dict) -> dict:
         """Batch-end offset for one shard: exact position if the client
         exposes one, else a driver-side sequence probe."""
-        client = self._c()
         sid = meta["ShardId"]
         ending = (meta.get("SequenceNumberRange") or {}).get("EndingSequenceNumber")
         # admission cap; latestOffset guarantees _last_start is known by
-        # now (fresh queries snap to TRIM_HORIZON, restarts are taught by
+        # now (fresh queries snap to initialOffset, restarts are taught by
         # partitions()), the guard is defense against future call-order
         # drift — uncapped can never land below a checkpoint, capped could
         cap = self._max_per_batch if self._last_start is not None else 0
-        it = client.get_shard_iterator(
-            StreamName=self._stream, ShardId=sid, ShardIteratorType="LATEST"
-        )["ShardIterator"]
-        try:
-            avail = int(json.loads(it).get("idx", 0))
-        except (ValueError, TypeError, AttributeError):
+        avail = self._latest_index(sid)
+        if avail is None:
             # opaque live iterator: probe forward from the checkpoint,
             # keeping only the last sequence number (payloads dropped)
-            _, new = _poll_shard(
-                client, self._stream, sid, cur, cap, keep_records=False
-            )
-            return new
+            return _probe_shard(self._c(), self._stream, sid, cur, cap)
         # indexable fast path: offsets are dense, so the admission cap can
         # be applied arithmetically
         floor = int(cur["seq"]) + 1 if cur.get("seq") is not None else 0
@@ -926,7 +832,8 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
             # re-plans its recovered batch through partitions() first —
             # which teaches us the checkpointed end below. An unknown
             # start here therefore means a fresh query: snap to the
-            # TRIM_HORIZON floor so the admission cap bounds batch 0 too.
+            # initial offset (the TRIM_HORIZON floor, or the pinned LATEST
+            # tip) so the admission cap bounds batch 0 too.
             # (Before r12 this case skipped the cap, and a fresh query
             # with a deep backlog planned the WHOLE backlog as one batch
             # — the cap only ever applied from batch 1 on.)
@@ -989,8 +896,13 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
             so = _norm_off(start.get(sid))
             # one numeric comparison covers both "nothing new" (equal) and
             # the backwards-plan clamp (start past end) — plan only strictly
-            # forward slices
-            if eo["seq"] is not None and not _seq_ge(so.get("seq"), eo.get("seq")):
+            # forward slices, and none from a LATEST marker (its executor
+            # would open a fresh LATEST iterator past the pinned end)
+            if (
+                eo["seq"] is not None
+                and "pos" not in so
+                and not _seq_ge(so.get("seq"), eo.get("seq"))
+            ):
                 slices.append(_ShardSlice(sid, so, eo["seq"]))
         # Spark requires >= 1 partition per batch; an empty slice yields no rows
         return slices or [_ShardSlice(None, None, None)]
@@ -1015,7 +927,7 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
 class KinesisBatchReader(DataSourceReader):
     """Batch read for backfills: ``spark.read.format("kinesis")`` scans every
     shard from TRIM_HORIZON to the current tip, one input partition per
-    shard — the bulk-load twin of the streaming readers (same client
+    shard — the bulk-load twin of the stream reader (same client
     contract, same record schema), for rebuilding a table from a stream
     retention window or a capture directory without running a query.
     ``latestOffset``'s parent-first multi-pass means a fully-resharded
@@ -1025,7 +937,11 @@ class KinesisBatchReader(DataSourceReader):
         self._options = options
 
     def partitions(self):
-        r = KinesisPartitionedStreamReader(self._options)
+        # a backfill always starts at TRIM_HORIZON, whatever the stream
+        # option says
+        r = KinesisPartitionedStreamReader(
+            {**self._options, "starting_position": "TRIM_HORIZON"}
+        )
         start, end = r.initialOffset(), r.latestOffset()
         return r.partitions(start, end)
 
@@ -1048,17 +964,7 @@ class KinesisDataSource(DataSource):
         return KinesisBatchReader(self.options)
 
     def streamReader(self, schema) -> KinesisPartitionedStreamReader:
-        if self.options.get("reader") == "partitioned":
-            return KinesisPartitionedStreamReader(self.options)
-        from pyspark.errors import PySparkNotImplementedError
-
-        # fall back to the Simple (driver-polling) reader
-        raise PySparkNotImplementedError(
-            errorClass="NOT_IMPLEMENTED", messageParameters={"feature": "streamReader"}
-        )
-
-    def simpleStreamReader(self, schema) -> KinesisSimpleStreamReader:
-        return KinesisSimpleStreamReader(self.options)
+        return KinesisPartitionedStreamReader(self.options)
 
     def streamWriter(self, schema, overwrite: bool) -> "KinesisStreamSinkWriter":
         return KinesisStreamSinkWriter(
@@ -1131,10 +1037,7 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
         if "data" not in field_names:
             raise ValueError(f"kinesis sink needs a binary 'data' column, got {field_names}")
         self._stream = options.get("stream_name", "stream")
-        self._factory_spec = options.get(
-            "client_factory",
-            "kinesis_writer_spark.sources.kinesis_stream:boto3_client_factory",
-        )
+        self._factory_spec = options.get("client_factory", DEFAULT_CLIENT_FACTORY)
         self._factory_kwargs = options.get("client_kwargs")
         # proactive pacing (sink.ShardRateLimiter): configure the per-WRITER
         # budget, i.e. the shard limit divided by expected writers per shard.

@@ -20,12 +20,18 @@ import types
 
 import pytest
 
+from kinesis_writer_spark.kpl.aggregator import RecordAggregator
 from kinesis_writer_spark.sink import (
     FakeKinesisClient,
     KinesisStreamWriter,
     default_client_factory,
     open_shard_midpoints,
 )
+from kinesis_writer_spark.sources.kinesis_stream import (
+    CaptureReplayClient,
+    KinesisPartitionedStreamReader,
+)
+from kinesis_writer_spark.sources.kpl_datasource import write_wire_file
 
 
 class ValidationError(AssertionError):
@@ -91,6 +97,93 @@ class _ContractKinesisClient:
         return self._inner.put_records(
             StreamName=kwargs["StreamName"], Records=records
         )
+
+
+class _ContractConsumerClient:
+    """Validates the consumer surface (ListShards, GetShardIterator,
+    GetRecords) per the AWS Kinesis API, pages ListShards one shard at a
+    time, then delegates to an opaque CaptureReplayClient."""
+
+    _ITERATOR_TYPES = {
+        "AT_SEQUENCE_NUMBER",
+        "AFTER_SEQUENCE_NUMBER",
+        "TRIM_HORIZON",
+        "LATEST",
+        "AT_TIMESTAMP",
+    }
+
+    def __init__(self, inner: CaptureReplayClient) -> None:
+        self._inner = inner
+        self.list_calls: list[dict] = []
+
+    @staticmethod
+    def _check_known(kwargs: dict, allowed: set[str], op: str) -> None:
+        unknown = set(kwargs) - allowed
+        if unknown:
+            raise ValidationError(f"Unknown parameter(s) {unknown} for {op}")
+
+    # --- ListShards: a follow-up page names only NextToken; the service
+    #     rejects it next to StreamName (InvalidArgumentException).
+    def list_shards(self, **kwargs):
+        self._check_known(
+            kwargs,
+            {"StreamName", "NextToken", "ExclusiveStartShardId", "MaxResults",
+             "StreamCreationTimestamp", "ShardFilter", "StreamARN"},
+            "ListShards",
+        )
+        self.list_calls.append(dict(kwargs))
+        token = kwargs.get("NextToken")
+        if token is not None:
+            if not isinstance(token, str) or not token:
+                raise ValidationError("NextToken must be a non-empty str")
+            clash = {"StreamName", "ExclusiveStartShardId",
+                     "StreamCreationTimestamp", "StreamARN"} & set(kwargs)
+            if clash:
+                raise ValidationError(
+                    f"InvalidArgumentException: NextToken with {sorted(clash)}"
+                )
+            stream, page = token.split("/")
+        elif isinstance(kwargs.get("StreamName"), str) and kwargs["StreamName"]:
+            stream, page = kwargs["StreamName"], "0"
+        else:
+            raise ValidationError("ListShards needs StreamName or NextToken")
+        shards = self._inner.list_shards(StreamName=stream)["Shards"]
+        i = int(page)
+        resp: dict = {"Shards": shards[i : i + 1]}
+        if i + 1 < len(shards):
+            resp["NextToken"] = f"{stream}/{i + 1}"
+        return resp
+
+    def get_shard_iterator(self, **kwargs):
+        self._check_known(
+            kwargs,
+            {"StreamName", "ShardId", "ShardIteratorType",
+             "StartingSequenceNumber", "Timestamp", "StreamARN"},
+            "GetShardIterator",
+        )
+        for key in ("StreamName", "ShardId"):
+            if not isinstance(kwargs.get(key), str) or not kwargs[key]:
+                raise ValidationError(f"GetShardIterator requires non-empty str {key}")
+        kind = kwargs.get("ShardIteratorType")
+        if kind not in self._ITERATOR_TYPES:
+            raise ValidationError(f"invalid ShardIteratorType {kind!r}")
+        seq = kwargs.get("StartingSequenceNumber")
+        if kind in ("AT_SEQUENCE_NUMBER", "AFTER_SEQUENCE_NUMBER"):
+            if not isinstance(seq, str) or not seq.isdigit():
+                raise ValidationError(f"{kind} needs a decimal-string sequence number")
+        elif seq is not None:
+            raise ValidationError(f"StartingSequenceNumber is not valid with {kind}")
+        return self._inner.get_shard_iterator(**kwargs)
+
+    def get_records(self, **kwargs):
+        self._check_known(kwargs, {"ShardIterator", "Limit", "StreamARN"}, "GetRecords")
+        it = kwargs.get("ShardIterator")
+        if not isinstance(it, str) or not (1 <= len(it) <= 512):
+            raise ValidationError("ShardIterator must be a str of 1..512")
+        limit = kwargs.get("Limit", 10000)
+        if not isinstance(limit, int) or not (1 <= limit <= 10000):
+            raise ValidationError(f"Limit must be an int in 1..10000, got {limit!r}")
+        return self._inner.get_records(**kwargs)
 
 
 @pytest.fixture()
@@ -162,3 +255,52 @@ class TestEngineCallShapes:
         assert puts, "write() produced no PutRecords calls"
         # delivered payloads survived the validating path byte-for-byte
         assert len(clients[0]._inner.received) == len(puts)
+
+
+class TestConsumerCallShapes:
+    """Drive the stream reader through the validating consumer client, with
+    boto3 behind the default client factory."""
+
+    SHARDS = ("shardId-000000000000", "shardId-000000000001", "shardId-000000000002")
+
+    @pytest.fixture()
+    def consumer_stub(self, monkeypatch, tmp_path):
+        for n, sid in enumerate(self.SHARDS):
+            frames = []
+            for i in range(n + 2):  # 2, 3, 4 one-record frames
+                agg = RecordAggregator()
+                agg.add_user_record("pk", f"{sid}-{i}".encode())
+                frames.append(agg.clear_and_get().to_bytes())
+            (tmp_path / sid).mkdir()
+            write_wire_file(str(tmp_path / sid / "part-0.kpl"), frames)
+        clients: list[_ContractConsumerClient] = []
+        stub = types.ModuleType("boto3")
+
+        def client(service_name, region_name=None, **kwargs):
+            c = _ContractConsumerClient(CaptureReplayClient(str(tmp_path), opaque=True))
+            clients.append(c)
+            return c
+
+        stub.client = client
+        monkeypatch.setitem(sys.modules, "boto3", stub)
+        return clients
+
+    def test_reader_paginates_and_reads_every_shard(self, consumer_stub):
+        r = KinesisPartitionedStreamReader(
+            {"stream_name": "events", "client_kwargs": '{"region_name": "us-east-1"}'}
+        )
+        start = r.initialOffset()
+        end = r.latestOffset()
+        assert set(start) == set(end) == set(self.SHARDS)
+        rows = [t for p in r.partitions(start, end) for t in r.read(p)]
+        assert sorted((t[0], t[1]) for t in rows) == sorted(
+            (sid, str(i)) for n, sid in enumerate(self.SHARDS) for i in range(n + 2)
+        )
+        # one page per shard: the first call names the stream, every
+        # follow-up names only the previous page's NextToken
+        calls = consumer_stub[0].list_calls
+        assert calls[:3] == [
+            {"StreamName": "events"},
+            {"NextToken": "events/1"},
+            {"NextToken": "events/2"},
+        ]

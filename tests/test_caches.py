@@ -241,6 +241,33 @@ def test_clear_all_unpersists_dataframe_entries():
         memo._CACHES.remove(cache)
 
 
+def test_clear_all_warns_once_when_unpersist_raises(monkeypatch, caplog):
+    """A failing release is logged, not swallowed: one warning however many
+    clears hit it, and every cache still empties."""
+    import logging
+
+    from kinesis_writer_spark import memo
+
+    class BrokenDF:
+        def unpersist(self):
+            raise RuntimeError("release failed")
+
+    monkeypatch.setattr(memo, "_unpersist_warned", False, raising=False)
+    failing, other = memo.register({}), memo.register({})
+    try:
+        with caplog.at_level(logging.WARNING, logger=memo.__name__):
+            for _ in range(2):
+                failing["k"] = BrokenDF()
+                other["plain"] = 42
+                memo.clear_all()
+                assert not failing and not other
+        warnings = [r for r in caplog.records if "unpersist() failed" in r.getMessage()]
+        assert len(warnings) == 1
+    finally:
+        memo._CACHES.remove(failing)
+        memo._CACHES.remove(other)
+
+
 def test_clear_all_frees_local_checkpoint_blocks(spark):
     """DataFrame.unpersist() is a no-op for localCheckpointed DataFrames
     (their blocks live in an internal RDD outside the CacheManager), so

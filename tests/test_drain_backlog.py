@@ -67,7 +67,6 @@ def _capped_stream(spark, capture_dir: str, cap: int):
     return (
         spark.readStream.format("kinesis")
         .option("stream_name", "drain-test")
-        .option("reader", "partitioned")
         .option(
             "client_factory",
             "kinesis_writer_spark.sources.kinesis_stream:capture_client_factory",

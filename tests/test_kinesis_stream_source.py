@@ -38,6 +38,16 @@ def _make_capture(tmp_path, shards: dict[str, list[bytes]]) -> str:
     return str(root)
 
 
+def _append_frames(capture_dir: str, shard_id: str, name: str, payloads) -> None:
+    """Land one more capture file on a shard, one KPL frame per payload."""
+    frames = []
+    for p in payloads:
+        agg = RecordAggregator()
+        agg.add_user_record("pk", p)
+        frames.append(agg.clear_and_get().to_bytes())
+    write_wire_file(os.path.join(capture_dir, shard_id, name), frames)
+
+
 def _payloads(shard: int, n: int) -> list[bytes]:
     return [
         json.dumps(
@@ -61,7 +71,7 @@ def capture_dir(tmp_path):
     )
 
 
-def _read_stream(spark, capture_dir):
+def _read_stream(spark, capture_dir, **options):
     kinesis_stream.register(spark)
     return (
         spark.readStream.format("kinesis")
@@ -71,6 +81,7 @@ def _read_stream(spark, capture_dir):
             "kinesis_writer_spark.sources.kinesis_stream:capture_client_factory",
         )
         .option("client_kwargs", json.dumps({"capture_dir": capture_dir}))
+        .options(**options)
         .load()
     )
 
@@ -264,9 +275,8 @@ class TestKinesisStreamSink:
 
 
 class TestPartitionedReader:
-    """option('reader','partitioned'): one input partition per shard slice,
-    executor-side polling — the cluster-scale upgrade path, checkpoint-
-    compatible with the Simple reader."""
+    """The stream reader: one input partition per shard slice, executor-side
+    polling."""
 
     def test_partition_planning(self, capture_dir):
         from kinesis_writer_spark.sources.kinesis_stream import (
@@ -290,32 +300,6 @@ class TestPartitionedReader:
         # sequence numbers are dense, so last seq + 1 == frame count
         assert len(rows) == sum(int(e["seq"]) + 1 for e in end.values())
         assert {t[0] for t in rows} == set(end)
-
-    def test_partitioned_roundtrip_matches_simple(self, spark, capture_dir, tmp_path):
-        raw = (
-            spark.readStream.format("kinesis")
-            .option("stream_name", "events")
-            .option("reader", "partitioned")
-            .option(
-                "client_factory",
-                "kinesis_writer_spark.sources.kinesis_stream:capture_client_factory",
-            )
-            .option("client_kwargs", json.dumps({"capture_dir": capture_dir}))
-            .load()
-        )
-        q = (
-            deaggregate_records(raw, wire_col="data", strict=False)
-            .writeStream.format("memory")
-            .queryName("kinesis_partitioned")
-            .option("checkpointLocation", str(tmp_path / "ckpt_part"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.sql("SELECT * FROM kinesis_partitioned").collect()
-        assert len(got) == 40 + 25
-        users = sorted(json.loads(bytes(r["data"]))["user_id"] for r in got)
-        assert users == sorted(list(range(0, 40)) + list(range(1000, 1025)))
 
     def test_rate_limited_batches(self, tmp_path):
         from kinesis_writer_spark.sources.kinesis_stream import (
@@ -349,12 +333,62 @@ class TestPartitionedReader:
         e4 = r.latestOffset()
         assert all(e["seq"] == "2" for e in e4.values())  # and never goes past
 
+    def test_latest_start_pins_exact_tip(self, capture_dir):
+        from kinesis_writer_spark.sources.kinesis_stream import (
+            KinesisPartitionedStreamReader,
+        )
+
+        opts = {
+            "stream_name": "events",
+            "client_factory": "kinesis_writer_spark.sources.kinesis_stream:capture_client_factory",
+            "client_kwargs": json.dumps({"capture_dir": capture_dir}),
+        }
+        tip = KinesisPartitionedStreamReader(opts).latestOffset()
+        r = KinesisPartitionedStreamReader({**opts, "starting_position": "LATEST"})
+        start = r.initialOffset()
+        # an index-exposing client pins the exact tip: no marker, no probe
+        assert start == tip
+        end = r.latestOffset()
+        assert end == start
+        parts = r.partitions(start, end)  # the first batch plans no slice
+        assert len(parts) == 1 and parts[0].shard_id is None
+        # a record that lands after the start is the next batch's only row
+        sid = "shardId-000000000000"
+        _append_frames(capture_dir, sid, "part-1.kpl", [b"after-start"])
+        r._client = None  # the capture client lists its files once
+        nxt = r.latestOffset()
+        rows = [t for p in r.partitions(end, nxt) for t in r.read(p)]
+        assert [(t[0], t[1]) for t in rows] == [(sid, str(int(tip[sid]["seq"]) + 1))]
+
+    def test_latest_stream_reads_only_new_records(self, spark, capture_dir, tmp_path):
+        ckpt = str(tmp_path / "ckpt_latest")
+        out = str(tmp_path / "out_latest")
+
+        def run():
+            raw = _read_stream(spark, capture_dir, starting_position="LATEST")
+            q = (
+                deaggregate_records(raw, wire_col="data", strict=False)
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+
+        run()  # starts at the tip: the 65 captured payloads are not read
+        new = [b"late-0", b"late-1", b"late-2"]
+        _append_frames(capture_dir, "shardId-000000000001", "part-1.kpl", new)
+        run()  # resumes from the pinned tip
+        got = sorted(bytes(r["data"]) for r in spark.read.parquet(out).collect())
+        assert got == new
+
 
 class TestOpaqueSequenceNumbers:
     """Real boto3 shard iterators are opaque strings and sequence numbers
     admit no arithmetic. With ``opaque=True`` the capture client hides its
-    indices, so the readers must go through AFTER_SEQUENCE_NUMBER resume and
-    (for the partitioned reader) the driver-side sequence probe."""
+    indices, so the reader must go through AFTER_SEQUENCE_NUMBER resume and
+    the driver-side sequence probe."""
 
     def _opts(self, capture_dir, **extra):
         kw = {"capture_dir": capture_dir, "opaque": True}
@@ -392,7 +426,6 @@ class TestOpaqueSequenceNumbers:
         for _ in range(2):  # second run resumes from the checkpoint
             raw = (
                 spark.readStream.format("kinesis")
-                .option("reader", "partitioned")
                 .options(**self._opts(capture_dir))
                 .load()
             )
@@ -427,20 +460,50 @@ class TestOpaqueSequenceNumbers:
         users = sorted(json.loads(bytes(r["data"]))["user_id"] for r in got)
         assert users == sorted(list(range(0, 40)) + list(range(1000, 1025)))
 
-    def test_simple_reader_latest_start_is_graceful(self, capture_dir):
+    def test_latest_start_is_graceful(self, capture_dir):
         # ADVICE r02: LATEST on an opaque client used to die in json.loads;
         # it must fall back to a LATEST position marker instead
         from kinesis_writer_spark.sources.kinesis_stream import (
-            KinesisSimpleStreamReader,
+            KinesisPartitionedStreamReader,
         )
 
+        marker = {"seq": None, "done": False, "pos": "LATEST"}
         opts = self._opts(capture_dir)
         opts["starting_position"] = "LATEST"
-        r = KinesisSimpleStreamReader(opts)
-        off = r.initialOffset()
-        assert all(v == {"seq": None, "done": False, "pos": "LATEST"} for v in off.values())
-        rows, end = r.read(off)
-        assert list(rows) == []  # nothing after the tip
+        r = KinesisPartitionedStreamReader(opts)
+        start = r.initialOffset()
+        assert all(v == marker for v in start.values())
+        end = r.latestOffset()
+        assert end == start  # nothing after the tip: the marker stays
+        parts = r.partitions(start, end)
+        assert len(parts) == 1 and parts[0].shard_id is None
+        # records land while a probe's LATEST iterator is open: the probe
+        # pins the last one, but no slice starts at the marker (its
+        # executor would open a fresh LATEST iterator and read past the
+        # pinned end), so they are skipped
+        sid = "shardId-000000000000"
+        before = r._c()  # lists its files once: LATEST stays at the old tip
+        _append_frames(capture_dir, sid, "part-1.kpl", [b"skipped-0", b"skipped-1"])
+        after = kinesis_stream.capture_client_factory(capture_dir, opaque=True)
+
+        class LandsDuringProbe:
+            list_shards = before.list_shards
+            get_shard_iterator = before.get_shard_iterator
+            get_records = after.get_records
+
+        r._client = LandsDuringProbe()
+        e1 = r.latestOffset()
+        assert e1[sid]["seq"] is not None and "pos" not in e1[sid]
+        assert e1["shardId-000000000001"] == marker
+        parts = r.partitions(end, e1)
+        assert len(parts) == 1 and parts[0].shard_id is None
+        # from the first pinned sequence number on, every record is read
+        _append_frames(capture_dir, sid, "part-2.kpl", [b"read-0"])
+        r._client = None
+        e2 = r.latestOffset()
+        rows = [t for p in r.partitions(e1, e2) for t in r.read(p)]
+        assert [t[1] for t in rows] == [e2[sid]["seq"]]
+        assert int(e2[sid]["seq"]) == int(e1[sid]["seq"]) + 1
 
 
 class TestResharding:
@@ -528,7 +591,6 @@ class TestResharding:
         capture, reshard = reshard_capture
         raw = (
             spark.readStream.format("kinesis")
-            .option("reader", "partitioned")
             .options(**self._opts(capture, reshard))
             .load()
         )
@@ -547,48 +609,29 @@ class TestResharding:
             list(range(0, 10)) + list(range(1000, 1007)) + list(range(2000, 2005))
         )
 
-    def test_simple_reader_reshard(self, spark, reshard_capture, tmp_path):
-        capture, reshard = reshard_capture
-        raw = (
-            spark.readStream.format("kinesis")
-            .options(**self._opts(capture, reshard))
-            .load()
-        )
-        q = (
-            deaggregate_records(raw, wire_col="data", strict=False)
-            .writeStream.format("memory")
-            .queryName("kinesis_reshard_simple")
-            .option("checkpointLocation", str(tmp_path / "ckpt_rs_s"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.sql("SELECT * FROM kinesis_reshard_simple").collect()
-        users = sorted(json.loads(bytes(r["data"]))["user_id"] for r in got)
-        assert users == sorted(
-            list(range(0, 10)) + list(range(1000, 1007)) + list(range(2000, 2005))
-        )
-
 
 class TestKinesisBatchRead:
     def test_batch_backfill(self, spark, capture_dir):
         kinesis_stream.register(spark)
-        df = (
-            spark.read.format("kinesis")
-            .option("stream_name", "events")
-            .option(
-                "client_factory",
-                "kinesis_writer_spark.sources.kinesis_stream:capture_client_factory",
+        # a backfill scans from TRIM_HORIZON whatever the stream options say
+        for options in ({}, {"starting_position": "LATEST"}):
+            df = (
+                spark.read.format("kinesis")
+                .option("stream_name", "events")
+                .option(
+                    "client_factory",
+                    "kinesis_writer_spark.sources.kinesis_stream:capture_client_factory",
+                )
+                .option("client_kwargs", json.dumps({"capture_dir": capture_dir}))
+                .options(**options)
+                .load()
             )
-            .option("client_kwargs", json.dumps({"capture_dir": capture_dir}))
-            .load()
-        )
-        assert not df.isStreaming
-        user_records = deaggregate_records(df, wire_col="data", strict=False)
-        users = sorted(
-            json.loads(bytes(r["data"]))["user_id"] for r in user_records.collect()
-        )
-        assert users == sorted(list(range(0, 40)) + list(range(1000, 1025)))
+            assert not df.isStreaming
+            user_records = deaggregate_records(df, wire_col="data", strict=False)
+            users = sorted(
+                json.loads(bytes(r["data"]))["user_id"] for r in user_records.collect()
+            )
+            assert users == sorted(list(range(0, 40)) + list(range(1000, 1025)))
 
 
 class TestKinesisToStatefulPipeline:
@@ -834,7 +877,6 @@ class TestReshardChaosEndToEnd:
         }
         raw = (
             spark.readStream.format("kinesis")
-            .option("reader", "partitioned")
             .option("stream_name", "chaos-stream")
             .option(
                 "client_factory",
@@ -958,7 +1000,6 @@ class TestMergeTopology:
         capture, reshard = merge_capture
         raw = (
             spark.readStream.format("kinesis")
-            .option("reader", "partitioned")
             .options(**self._opts(capture, reshard))
             .load()
         )
@@ -1048,7 +1089,6 @@ class TestMergeChaosEndToEnd:
         }
         raw = (
             spark.readStream.format("kinesis")
-            .option("reader", "partitioned")
             .option("stream_name", "merge-chaos-stream")
             .option(
                 "client_factory",
@@ -1169,7 +1209,6 @@ class TestAdmissionCapBatchZero:
         raw = (
             spark.readStream.format("kinesis")
             .option("stream_name", "capped")
-            .option("reader", "partitioned")
             .option("max_records_per_batch", "2")
             .option(
                 "client_factory",
