@@ -673,58 +673,18 @@ def reshard_throttle_soak(total_records: int = 1_000_000, shards: int = 4,
     )
 
     class ReshardingThrottlingClient(ThrottlingKinesisClient):
-        """ThrottlingKinesisClient + scripted mid-stream SPLIT/MERGE.
-        Routing covers OPEN shards only (the service's behavior: a put
-        routed by a stale parent midpoint lands in the covering child),
-        so closed parents stop spending budget the moment they close."""
+        """ThrottlingKinesisClient + scripted mid-stream SPLIT/MERGE. The
+        shared shard model routes over OPEN shards only (the service's
+        behavior: a put routed by a stale parent midpoint lands in the
+        covering child), so closed parents stop spending budget the
+        moment they close."""
 
         def __init__(self, split_after_puts: int, merge_after_puts: int,
                      **kw) -> None:
             super().__init__(**kw)
             self.split_after_puts = split_after_puts
             self.merge_after_puts = merge_after_puts
-            self._puts_seen = 0
             self.topology_events: list[tuple[float, str, int]] = []
-
-        def _open_shards(self) -> list[dict]:
-            return [
-                s for s in self.shards
-                if not s["SequenceNumberRange"].get("EndingSequenceNumber")
-            ]
-
-        def _shard_for(self, ehk: str | None) -> str:
-            v = int(ehk or "0")
-            open_shards = self._open_shards()
-            for s in open_shards:
-                if int(s["HashKeyRange"]["StartingHashKey"]) <= v <= int(
-                    s["HashKeyRange"]["EndingHashKey"]
-                ):
-                    return s["ShardId"]
-            return open_shards[0]["ShardId"]
-
-        def _merge_adjacent(self) -> None:
-            open_shards = sorted(
-                self._open_shards(),
-                key=lambda s: int(s["HashKeyRange"]["StartingHashKey"]),
-            )
-            children = []
-            for a, b in zip(open_shards[::2], open_shards[1::2]):
-                for s in (a, b):
-                    s["SequenceNumberRange"]["EndingSequenceNumber"] = str(
-                        len(self.received)
-                    )
-                children.append({
-                    "ShardId": f"shardId-{self._next_shard_id:012d}",
-                    "ParentShardId": a["ShardId"],
-                    "AdjacentParentShardId": b["ShardId"],
-                    "HashKeyRange": {
-                        "StartingHashKey": a["HashKeyRange"]["StartingHashKey"],
-                        "EndingHashKey": b["HashKeyRange"]["EndingHashKey"],
-                    },
-                    "SequenceNumberRange": {"StartingSequenceNumber": "0"},
-                })
-                self._next_shard_id += 1
-            self.shards.extend(children)
 
         def put_records(self, StreamName: str, Records: list[dict]):
             with self._lock:
@@ -736,7 +696,7 @@ def reshard_throttle_soak(total_records: int = 1_000_000, shards: int = 4,
                         (self._clock(), "split", len(self._open_shards()))
                     )
                 if self.merge_after_puts and self._puts_seen > self.merge_after_puts:
-                    self._merge_adjacent()
+                    self.merge_adjacent_shards()
                     self.merge_after_puts = 0
                     self.topology_events.append(
                         (self._clock(), "merge", len(self._open_shards()))

@@ -47,11 +47,11 @@ DEFAULT_PARTITION_KEY = "a"
 #: RESHARD (the shard we routed to closed or is being mutated): these
 #: trigger a shard-map re-discovery before the retry re-routes. Throttling
 #: errors (ProvisionedThroughputExceeded / LimitExceeded) are deliberately
-#: NOT here: they usually mean overload, not reshard, and DescribeStream
-#: is itself rate-limited (~10 TPS per stream) — refreshing on every
-#: throttled retry across hundreds of executors would cascade the
-#: throttling into discovery. A reshard that only ever surfaces as reduced
-#: capacity (no error) is covered by the periodic refresh cadence below.
+#: NOT here: they usually mean overload, not reshard, and ListShards is
+#: itself rate-limited per stream — refreshing on every throttled retry
+#: across hundreds of executors would cascade the throttling into
+#: discovery. A reshard that only ever surfaces as reduced capacity (no
+#: error) is covered by the periodic refresh cadence below.
 RESHARD_ERROR_MARKERS = (
     "ResourceInUse",
     "ShardClosed",
@@ -79,12 +79,12 @@ FATAL_ERROR_MARKERS = (
 #: Periodic shard-map re-discovery cadence (flushes between refreshes),
 #: ON by default: a silent split — a capacity change that never raises —
 #: would otherwise halve effective throughput until an error or restart.
-#: At ~1 MiB per flush this is one DescribeStream sweep per ~64 MiB
-#: shipped, far inside the API budget even fleet-wide.
+#: At ~1 MiB per flush this is one ListShards sweep per ~64 MiB shipped,
+#: far inside the API budget even fleet-wide.
 DEFAULT_REFRESH_EVERY_FLUSHES = 64
 
 #: Minimum seconds between *error-triggered* refreshes: a retry storm from
-#: one stuck shard must not turn into a DescribeStream storm.
+#: one stuck shard must not turn into a ListShards storm.
 MIN_ERROR_REFRESH_INTERVAL_S = 5.0
 
 
@@ -102,19 +102,24 @@ def _names_any(exc: Exception, markers: tuple[str, ...]) -> bool:
 # Shard discovery & routing
 # ---------------------------------------------------------------------------
 
-def iter_all_shards(client, stream_name: str) -> Iterator[dict]:
-    """Paginated DescribeStream over every shard of the stream."""
-    start_after: str | None = None
+def list_shards(client, stream_name: str) -> list[dict]:
+    """Every shard of the stream with its reshard metadata (ParentShardId,
+    AdjacentParentShardId, SequenceNumberRange), paging ListShards like the
+    reference walks describeStream (KinesisWriter.scala:46-64). A follow-up
+    page passes ``NextToken`` alone: ListShards rejects it next to
+    ``StreamName``."""
+    out: list[dict] = []
+    token = None
     while True:
-        kwargs = {"StreamName": stream_name}
-        if start_after is not None:
-            kwargs["ExclusiveStartShardId"] = start_after
-        desc = client.describe_stream(**kwargs)["StreamDescription"]
-        shards = desc["Shards"]
-        yield from shards
-        if not desc.get("HasMoreShards") or not shards:
-            return
-        start_after = shards[-1]["ShardId"]
+        resp = (
+            client.list_shards(NextToken=token)
+            if token
+            else client.list_shards(StreamName=stream_name)
+        )
+        out.extend(resp["Shards"])
+        token = resp.get("NextToken")
+        if not token:
+            return out
 
 
 def open_shard_midpoints(client, stream_name: str) -> list[str]:
@@ -125,7 +130,7 @@ def open_shard_midpoints(client, stream_name: str) -> list[str]:
     land inside that shard.
     """
     midpoints = []
-    for shard in iter_all_shards(client, stream_name):
+    for shard in list_shards(client, stream_name):
         if shard.get("SequenceNumberRange", {}).get("EndingSequenceNumber"):
             continue
         lo = int(shard["HashKeyRange"]["StartingHashKey"])
@@ -352,18 +357,15 @@ class KinesisStreamWriter:
         self,
         stream_name: str,
         client,
-        partition_key: str = DEFAULT_PARTITION_KEY,
         max_retries: int = MAX_RETRIES,
         sleep: Callable[[float], None] = time.sleep,
         routing_seed: int = 42,
         rate_limiter: ShardRateLimiter | None = None,
         refresh_every_flushes: int | None = DEFAULT_REFRESH_EVERY_FLUSHES,
-        min_error_refresh_interval_s: float = MIN_ERROR_REFRESH_INTERVAL_S,
         clock: Callable[[], float] = time.monotonic,
     ) -> None:
         self.stream_name = stream_name
         self.client = client
-        self.partition_key = partition_key
         self.max_retries = max_retries
         self._sleep = sleep
         #: with a limiter, every flush and retry is routed when it is sent,
@@ -378,7 +380,6 @@ class KinesisStreamWriter:
         #: never surfaces as an error — e.g. a split that merely halves a
         #: shard's capacity — is picked up within N flushes
         self.refresh_every_flushes = refresh_every_flushes
-        self.min_error_refresh_interval_s = float(min_error_refresh_interval_s)
         self._clock = clock
         self._flushes_since_discovery = 0
         #: -inf so the FIRST reshard-shaped error always refreshes; the
@@ -417,8 +418,8 @@ class KinesisStreamWriter:
         if not _names_any(exc, RESHARD_ERROR_MARKERS):
             return
         now = self._clock()
-        if now - self._last_error_refresh < self.min_error_refresh_interval_s:
-            return  # a retry storm must not become a DescribeStream storm
+        if now - self._last_error_refresh < MIN_ERROR_REFRESH_INTERVAL_S:
+            return  # a retry storm must not become a ListShards storm
         self._last_error_refresh = now
         self.refresh_shard_map()
 
@@ -525,7 +526,7 @@ class KinesisStreamWriter:
         # is re-keyed when it is sent.
         cell = {"ehk": self._next_routing_key()}
         batcher = FastBatcher(
-            self.partition_key, SOFT_MAX_SIZE, MAX_LAST_RECORD_SIZE
+            DEFAULT_PARTITION_KEY, SOFT_MAX_SIZE, MAX_LAST_RECORD_SIZE
         )
         count = 0
         for agg in batcher.flushes(payloads, lambda: cell["ehk"]):
@@ -545,8 +546,12 @@ class KinesisStreamWriter:
 # ---------------------------------------------------------------------------
 
 class FakeKinesisClient:
-    """Offline stand-in for the Kinesis API: captures requests, supports
-    scripted failures and synthetic shard maps.
+    """Offline stand-in for the Kinesis API, and the one in-memory shard
+    model every stand-in builds on: an even split of the 128-bit hash
+    space, ListShards paged one shard per page (so every caller exercises
+    pagination), split and merge reshards, and routing of an explicit hash
+    key to the open shard covering it. Captures requests and supports
+    scripted failures.
     """
 
     def __init__(self, num_shards: int = 4, fail_first_n_puts: int = 0, throttle_every: int = 0) -> None:
@@ -557,19 +562,47 @@ class FakeKinesisClient:
         self.put_requests: list[dict] = []
         self.received: list[bytes] = []
         self._puts_seen = 0
-        self._next_shard_id = num_shards
+        self.shards: list[dict] = []
         space = 1 << 128
-        self.shards = []
         for i in range(num_shards):
-            lo = i * space // num_shards
-            hi = (i + 1) * space // num_shards - 1
-            self.shards.append(
-                {
-                    "ShardId": f"shardId-{i:012d}",
-                    "HashKeyRange": {"StartingHashKey": str(lo), "EndingHashKey": str(hi)},
-                    "SequenceNumberRange": {"StartingSequenceNumber": "0"},
-                }
-            )
+            self._add_shard(i * space // num_shards, (i + 1) * space // num_shards - 1)
+
+    # -- shard model ----------------------------------------------------------
+
+    def _add_shard(self, lo: int, hi: int, **parents: str) -> None:
+        """Open a shard over hash keys ``[lo, hi]``; ``parents`` carries a
+        child's ``ParentShardId`` (and a merge child's
+        ``AdjacentParentShardId``)."""
+        self.shards.append(
+            {
+                "ShardId": f"shardId-{len(self.shards):012d}",
+                **parents,
+                "HashKeyRange": {"StartingHashKey": str(lo), "EndingHashKey": str(hi)},
+                "SequenceNumberRange": {"StartingSequenceNumber": "0"},
+            }
+        )
+
+    def _close(self, shard: dict) -> None:
+        shard["SequenceNumberRange"]["EndingSequenceNumber"] = str(len(self.received))
+
+    def _open_shards(self) -> list[dict]:
+        """Shards without an EndingSequenceNumber, in listing order."""
+        return [
+            s for s in self.shards
+            if not s["SequenceNumberRange"].get("EndingSequenceNumber")
+        ]
+
+    def _shard_for(self, ehk: str | None) -> str:
+        """Route like the service: to the OPEN shard covering ``ehk``, so a
+        key drawn from a closed parent's midpoint lands in the child that
+        now covers it."""
+        v = int(ehk or "0")
+        open_shards = self._open_shards()
+        for s in open_shards:
+            rng = s["HashKeyRange"]
+            if int(rng["StartingHashKey"]) <= v <= int(rng["EndingHashKey"]):
+                return s["ShardId"]
+        return open_shards[0]["ShardId"]
 
     def split_all_shards(self) -> None:
         """Simulate a stream-wide reshard: every open shard closes (gains an
@@ -577,38 +610,49 @@ class FakeKinesisClient:
         Kinesis UpdateShardCount doubling. Parents stay listed (as the real
         API keeps them for their retention window); only children are open.
         """
-        children = []
-        for shard in self.shards:
-            rng = shard["SequenceNumberRange"]
-            if rng.get("EndingSequenceNumber"):
-                continue
-            rng["EndingSequenceNumber"] = str(len(self.received))
+        for shard in self._open_shards():
+            self._close(shard)
             lo = int(shard["HashKeyRange"]["StartingHashKey"])
             hi = int(shard["HashKeyRange"]["EndingHashKey"])
             mid = lo + (hi - lo) // 2
-            for c_lo, c_hi in ((lo, mid), (mid + 1, hi)):
-                children.append(
-                    {
-                        "ShardId": f"shardId-{self._next_shard_id:012d}",
-                        "ParentShardId": shard["ShardId"],
-                        "HashKeyRange": {
-                            "StartingHashKey": str(c_lo),
-                            "EndingHashKey": str(c_hi),
-                        },
-                        "SequenceNumberRange": {"StartingSequenceNumber": "0"},
-                    }
-                )
-                self._next_shard_id += 1
-        self.shards.extend(children)
+            self._add_shard(lo, mid, ParentShardId=shard["ShardId"])
+            self._add_shard(mid + 1, hi, ParentShardId=shard["ShardId"])
+        self._resharded()
 
-    def describe_stream(self, StreamName: str, ExclusiveStartShardId: str | None = None, **_):
-        shards = self.shards
-        if ExclusiveStartShardId is not None:
-            ids = [s["ShardId"] for s in shards]
-            shards = shards[ids.index(ExclusiveStartShardId) + 1 :]
-        # one shard per page to exercise pagination
-        page, more = shards[:1], len(shards) > 1
-        return {"StreamDescription": {"StreamName": StreamName, "Shards": page, "HasMoreShards": more}}
+    def merge_adjacent_shards(self) -> None:
+        """Close open shards pairwise (adjacent in hash space) and open ONE
+        child spanning each pair's combined range — MergeShards semantics:
+        both parents stay listed with an EndingSequenceNumber and the child
+        carries ``ParentShardId`` + ``AdjacentParentShardId``, so consumers
+        must drain BOTH parents before admitting the child."""
+        open_shards = sorted(
+            self._open_shards(),
+            key=lambda s: int(s["HashKeyRange"]["StartingHashKey"]),
+        )
+        for a, b in zip(open_shards[::2], open_shards[1::2]):
+            self._close(a)
+            self._close(b)
+            self._add_shard(
+                int(a["HashKeyRange"]["StartingHashKey"]),
+                int(b["HashKeyRange"]["EndingHashKey"]),
+                ParentShardId=a["ShardId"],
+                AdjacentParentShardId=b["ShardId"],
+            )
+        self._resharded()
+
+    def _resharded(self) -> None:
+        """Runs after every split or merge; a subclass that keeps state per
+        shard outside ``self.shards`` extends it."""
+
+    # -- Kinesis API ----------------------------------------------------------
+
+    def list_shards(self, StreamName: str | None = None, NextToken: str | None = None, **_):
+        stream, _sep, page = (NextToken or f"{StreamName}/0").rpartition("/")
+        i = int(page)
+        resp: dict = {"Shards": self.shards[i : i + 1]}
+        if i + 1 < len(self.shards):
+            resp["NextToken"] = f"{stream}/{i + 1}"
+        return resp
 
     def put_records(self, StreamName: str, Records: list[dict]):
         self._puts_seen += 1
@@ -670,15 +714,6 @@ class ThrottlingKinesisClient(FakeKinesisClient):
         # must be atomic under that
         self._lock = threading.Lock()
 
-    def _shard_for(self, ehk: str | None) -> str:
-        v = int(ehk or "0")
-        for s in self.shards:
-            if int(s["HashKeyRange"]["StartingHashKey"]) <= v <= int(
-                s["HashKeyRange"]["EndingHashKey"]
-            ):
-                return s["ShardId"]
-        return self.shards[0]["ShardId"]
-
     def put_records(self, StreamName: str, Records: list[dict]):
         with self._lock:
             return self._put_records_locked(StreamName, Records)
@@ -721,18 +756,19 @@ class ThrottlingKinesisClient(FakeKinesisClient):
         return {"FailedRecordCount": failed, "Records": results}
 
 
-def default_client_factory(region_name: str | None = None):
-    """Real AWS client factory (boto3), gated behind an import so the engine
-    works fully offline: tests and the driver inject :class:`FakeKinesisClient`.
-    """
+def boto3_client_factory(region_name: str | None = None):
+    """A real boto3 Kinesis client, the default ``client_factory`` (gated
+    import: the engine and its tests run fully offline on the stand-ins)."""
     try:
         import boto3  # noqa: PLC0415
     except ImportError as exc:  # pragma: no cover - boto3 absent in CI image
         raise RuntimeError(
             "boto3 is not installed; pass an explicit client_factory "
-            "(e.g. lambda: FakeKinesisClient()) or install boto3"
+            "(e.g. lambda: FakeKinesisClient(), or "
+            "'kinesis_writer_spark.sources.kinesis_stream:capture_client_factory' "
+            "with client_kwargs={'capture_dir': ...} for offline replay)"
         ) from exc
-    return lambda: boto3.client("kinesis", region_name=region_name)
+    return boto3.client("kinesis", region_name=region_name)
 
 
 # ---------------------------------------------------------------------------
@@ -746,17 +782,13 @@ def write_dataframe(
     data_col: str = "data",
     max_retries: int = MAX_RETRIES,
     sleep: Callable[[float], None] = time.sleep,
-    rate_limiter_factory: Callable[[], ShardRateLimiter] | None = None,
 ) -> int:
     """Write a DataFrame's binary column to the stream, one independent
     batcher per partition. Returns the total user-record count (accumulator).
 
-    ``rate_limiter_factory`` (optional) builds one :class:`ShardRateLimiter`
-    per partition writer — configure its per-second budgets as the shard
-    limit divided by the expected concurrent writers per shard. A writer
-    with a limiter routes each flush by its budget when it is sent, and a
-    rejected put other than a throughput error returns its tokens; without
-    one, each flush follows the seeded-random draw.
+    Each flush follows the reference's seeded-random draw; for paced,
+    budget-routed writes use the streaming sink's ``rate_limit_*`` options,
+    which share one :class:`ShardRateLimiter` per process.
 
     At 100 TB this is the whole design: partitions batch and ship in parallel,
     no shuffle and no driver collect.
@@ -790,7 +822,6 @@ def write_dataframe(
             client,
             max_retries=max_retries,
             sleep=sleep,
-            rate_limiter=rate_limiter_factory() if rate_limiter_factory else None,
         )
 
         def payloads() -> Iterator[bytes]:

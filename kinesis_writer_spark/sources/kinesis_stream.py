@@ -58,6 +58,7 @@ from __future__ import annotations
 import importlib
 import json
 import logging
+import os
 import threading
 from collections.abc import Iterator
 from datetime import datetime, timezone
@@ -68,6 +69,15 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     DataSourceStreamWriter,
     InputPartition,
+)
+
+from ..sink import (
+    DEFAULT_REFRESH_EVERY_FLUSHES,
+    FakeKinesisClient,
+    KinesisStreamWriter,
+    ShardRateLimiter,
+    boto3_client_factory,
+    list_shards,
 )
 
 #: Raw Kinesis record schema (consumer-side; ``data`` may hold a KPL
@@ -100,20 +110,6 @@ def resolve_factory(spec: str, kwargs_json: str | None):
     return factory(**kwargs)
 
 
-def boto3_client_factory(region_name: str | None = None):
-    """Default factory: a real boto3 Kinesis client (gated import — the
-    engine and its tests run fully offline with the capture factory)."""
-    try:
-        import boto3  # noqa: PLC0415
-    except ImportError as exc:  # pragma: no cover - boto3 absent in CI image
-        raise RuntimeError(
-            "boto3 is not installed; pass client_factory="
-            "'kinesis_writer_spark.sources.kinesis_stream:capture_client_factory' "
-            "with client_kwargs={'capture_dir': ...} for offline replay"
-        ) from exc
-    return boto3.client("kinesis", region_name=region_name)
-
-
 class CaptureReplayClient:
     """Offline Kinesis consumer: replays ``.kpl`` capture files through the
     boto3 ``get_records`` API shape.
@@ -141,7 +137,6 @@ class CaptureReplayClient:
         an ``EndingSequenceNumber`` and hit SHARD_END
         (``NextShardIterator == None``) when drained."""
         import glob as _glob
-        import os
 
         self._pk = partition_key
         self._opaque = opaque
@@ -298,11 +293,12 @@ def capture_client_factory(
     return CaptureReplayClient(capture_dir, partition_key, opaque, reshard)
 
 
-class CaptureSinkClient:
-    """Offline Kinesis PRODUCER endpoint: accepts the boto3 producer surface
-    (``describe_stream`` for shard discovery + ``put_records``) and lands
-    every aggregated wire record as frames in ``capture_dir/<shard>/*.kpl``
-    — the same layout :class:`CaptureReplayClient` and
+class CaptureSinkClient(FakeKinesisClient):
+    """Offline Kinesis PRODUCER endpoint on the shared shard model
+    (:class:`...sink.FakeKinesisClient`: ListShards discovery, split and
+    merge, routing over open shards). ``put_records`` lands every
+    aggregated wire record as frames in ``capture_dir/<shard>/*.kpl`` —
+    the same layout :class:`CaptureReplayClient` and
     ``spark.read.format("kpl")`` consume, so a streaming write can be
     round-tripped hermetically: writeStream("kinesis") → capture → read →
     deaggregate → original payloads.
@@ -315,8 +311,7 @@ class CaptureSinkClient:
         split_after_puts: int = 0,
         merge_after_puts: int = 0,
     ) -> None:
-        import os
-
+        super().__init__(num_shards=num_shards)
         self._dir = capture_dir
         #: chaos knob: after N successful put_records calls, every open
         #: shard closes and splits into two children — a mid-stream
@@ -326,22 +321,15 @@ class CaptureSinkClient:
         #: into one child spanning both hash ranges (the real MergeShards
         #: topology: child carries ParentShardId + AdjacentParentShardId)
         self.merge_after_puts = int(merge_after_puts)
-        self._puts_seen = 0
-        self._next_shard_id = num_shards
-        space = 1 << 128
-        self.shards = []
-        for i in range(num_shards):
-            lo = i * space // num_shards
-            hi = (i + 1) * space // num_shards - 1
-            sid = f"shardId-{i:012d}"
-            self.shards.append(
-                {
-                    "ShardId": sid,
-                    "HashKeyRange": {"StartingHashKey": str(lo), "EndingHashKey": str(hi)},
-                    "SequenceNumberRange": {"StartingSequenceNumber": "0"},
-                }
-            )
-            os.makedirs(os.path.join(capture_dir, sid), exist_ok=True)
+        self._make_shard_dirs()
+
+    def _make_shard_dirs(self) -> None:
+        for s in self.shards:
+            os.makedirs(os.path.join(self._dir, s["ShardId"]), exist_ok=True)
+
+    def _resharded(self) -> None:
+        self._make_shard_dirs()
+        self._persist_topology()
 
     def _persist_topology(self) -> None:
         """Write the reshard topology to ``<capture_dir>/_topology.json``
@@ -351,8 +339,6 @@ class CaptureSinkClient:
         needs no file). Chaos knobs assume a single sink client per capture
         dir (coalesce the stream to one partition), so last-write-wins here
         is moot."""
-        import os
-
         closed = [
             s["ShardId"]
             for s in self.shards
@@ -370,118 +356,13 @@ class CaptureSinkClient:
             json.dump({"closed": closed, "parents": parents}, f)
         os.replace(tmp, os.path.join(self._dir, "_topology.json"))
 
-    def split_all_shards(self) -> None:
-        """Close every open shard and open two children over each half of
-        its hash range (parents stay listed with their EndingSequenceNumber,
-        as the real API keeps them for the retention window)."""
-        import os
-
-        children = []
-        for shard in self.shards:
-            rng = shard["SequenceNumberRange"]
-            if rng.get("EndingSequenceNumber"):
-                continue
-            rng["EndingSequenceNumber"] = str(self._puts_seen)
-            lo = int(shard["HashKeyRange"]["StartingHashKey"])
-            hi = int(shard["HashKeyRange"]["EndingHashKey"])
-            mid = lo + (hi - lo) // 2
-            for c_lo, c_hi in ((lo, mid), (mid + 1, hi)):
-                sid = f"shardId-{self._next_shard_id:012d}"
-                self._next_shard_id += 1
-                children.append(
-                    {
-                        "ShardId": sid,
-                        "ParentShardId": shard["ShardId"],
-                        "HashKeyRange": {
-                            "StartingHashKey": str(c_lo),
-                            "EndingHashKey": str(c_hi),
-                        },
-                        "SequenceNumberRange": {"StartingSequenceNumber": "0"},
-                    }
-                )
-                os.makedirs(os.path.join(self._dir, sid), exist_ok=True)
-        self.shards.extend(children)
-        self._persist_topology()
-
-    def merge_adjacent_shards(self) -> None:
-        """Close open shards pairwise (adjacent in hash space) and open ONE
-        child spanning each pair's combined range — MergeShards semantics:
-        both parents stay listed with an EndingSequenceNumber and the child
-        carries ``ParentShardId`` + ``AdjacentParentShardId``, so consumers
-        must drain BOTH parents before admitting the child."""
-        import os
-
-        open_shards = sorted(
-            (
-                s
-                for s in self.shards
-                if not s["SequenceNumberRange"].get("EndingSequenceNumber")
-            ),
-            key=lambda s: int(s["HashKeyRange"]["StartingHashKey"]),
-        )
-        children = []
-        for a, b in zip(open_shards[::2], open_shards[1::2]):
-            for s in (a, b):
-                s["SequenceNumberRange"]["EndingSequenceNumber"] = str(self._puts_seen)
-            sid = f"shardId-{self._next_shard_id:012d}"
-            self._next_shard_id += 1
-            children.append(
-                {
-                    "ShardId": sid,
-                    "ParentShardId": a["ShardId"],
-                    "AdjacentParentShardId": b["ShardId"],
-                    "HashKeyRange": {
-                        "StartingHashKey": a["HashKeyRange"]["StartingHashKey"],
-                        "EndingHashKey": b["HashKeyRange"]["EndingHashKey"],
-                    },
-                    "SequenceNumberRange": {"StartingSequenceNumber": "0"},
-                }
-            )
-            os.makedirs(os.path.join(self._dir, sid), exist_ok=True)
-        self.shards.extend(children)
-        self._persist_topology()
-
-    def describe_stream(self, StreamName: str, ExclusiveStartShardId: str | None = None, **_):
-        shards = self.shards
-        if ExclusiveStartShardId is not None:
-            ids = [s["ShardId"] for s in shards]
-            shards = shards[ids.index(ExclusiveStartShardId) + 1 :]
-        return {
-            "StreamDescription": {
-                "StreamName": StreamName,
-                "Shards": shards,
-                "HasMoreShards": False,
-            }
-        }
-
-    def _shard_for(self, ehk: str) -> str:
-        """Route like the service: over OPEN shards only (after a reshard a
-        stale parent-midpoint key still lands — in the child covering it)."""
-        v = int(ehk)
-        open_shards = [
-            s
-            for s in self.shards
-            if not s["SequenceNumberRange"].get("EndingSequenceNumber")
-        ]
-        for s in open_shards:
-            if int(s["HashKeyRange"]["StartingHashKey"]) <= v <= int(
-                s["HashKeyRange"]["EndingHashKey"]
-            ):
-                return s["ShardId"]
-        return open_shards[0]["ShardId"]
-
     def put_records(self, StreamName: str, Records: list[dict]):
-        import os
         import uuid as _uuid
 
         from .kpl_datasource import write_wire_file
 
         self._puts_seen += 1
-        if (
-            self.split_after_puts
-            and self._next_shard_id == len(self.shards)  # == until first split
-            and self._puts_seen > self.split_after_puts
-        ):
+        if self.split_after_puts and self._puts_seen > self.split_after_puts:
             self.split_all_shards()
             self.split_after_puts = 0  # scripted chaos fires once
         if self.merge_after_puts and self._puts_seen > self.merge_after_puts:
@@ -491,7 +372,7 @@ class CaptureSinkClient:
         out = []
         by_shard: dict[str, list[bytes]] = {}
         for rec in Records:
-            shard = self._shard_for(rec.get("ExplicitHashKey") or "0")
+            shard = self._shard_for(rec.get("ExplicitHashKey"))
             by_shard.setdefault(shard, []).append(bytes(rec["Data"]))
             out.append({"SequenceNumber": "0", "ShardId": shard})
         for shard, frames in by_shard.items():
@@ -547,25 +428,6 @@ def _seq_ge(a: str | None, b: str | None) -> bool:
     if a is None:
         return False
     return int(a) >= int(b)
-
-
-def _list_shards_meta(client, stream: str) -> list[dict]:
-    """Full shard map with reshard metadata (ParentShardId /
-    SequenceNumberRange), paginated like the reference walks describeStream
-    (KinesisWriter.scala:46-64). A follow-up page passes ``NextToken``
-    alone: ListShards rejects it next to ``StreamName``."""
-    out: list[dict] = []
-    token = None
-    while True:
-        resp = (
-            client.list_shards(NextToken=token)
-            if token
-            else client.list_shards(StreamName=stream)
-        )
-        out.extend(resp["Shards"])
-        token = resp.get("NextToken")
-        if not token:
-            return out
 
 
 def _parents_done(meta: dict, known_ids: set[str], offsets: dict) -> bool:
@@ -783,7 +645,7 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
             return None
 
     def initialOffset(self) -> dict:
-        metas = _list_shards_meta(self._c(), self._stream)
+        metas = list_shards(self._c(), self._stream)
         if self._starting_position == "LATEST":
             start = {m["ShardId"]: self._latest_start(m["ShardId"]) for m in metas}
         else:
@@ -838,7 +700,7 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
             # with a deep backlog planned the WHOLE backlog as one batch
             # — the cap only ever applied from batch 1 on.)
             self._last_start = self.initialOffset()
-        metas = _list_shards_meta(self._c(), self._stream)
+        metas = list_shards(self._c(), self._stream)
         known = {m["ShardId"] for m in metas}
         start = self._last_start or {}
         end: dict = {}
@@ -1007,8 +869,6 @@ _SINK_LIMITERS_LOCK = threading.Lock()
 
 
 def _shared_sink_limiter(stream: str, bps: float, pps: float, burst: float):
-    from ..sink import ShardRateLimiter
-
     key = (stream, bps, pps, burst)
     with _SINK_LIMITERS_LOCK:
         limiter = _SINK_LIMITERS.get(key)
@@ -1054,8 +914,6 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
         # periodic shard-map re-discovery (long-running sinks survive
         # resharding without a restart): ON by default at the sink module's
         # cadence; '0' disables; error-triggered refresh is always on
-        from ..sink import DEFAULT_REFRESH_EVERY_FLUSHES
-
         refresh = int(options.get("shard_map_refresh_flushes", DEFAULT_REFRESH_EVERY_FLUSHES))
         if refresh < 0:
             raise ValueError(f"shard_map_refresh_flushes must be >= 0, got {refresh}")
@@ -1063,8 +921,6 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
 
     def write(self, iterator):
         from pyspark.sql.datasource import WriterCommitMessage
-
-        from ..sink import KinesisStreamWriter as _Writer
 
         limiter = None
         if self._rl_bytes is not None or self._rl_puts is not None:
@@ -1075,7 +931,7 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
                 self._rl_burst,
             )
         client = resolve_factory(self._factory_spec, self._factory_kwargs)
-        writer = _Writer(
+        writer = KinesisStreamWriter(
             self._stream,
             client,
             rate_limiter=limiter,

@@ -24,8 +24,9 @@ import glob as _glob
 import os
 import struct
 import uuid
-
+from collections.abc import Iterator
 from dataclasses import dataclass
+from itertools import islice
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -63,63 +64,15 @@ def write_wire_file(path: str, frames: list[bytes]) -> None:
             f.write(frame)
 
 
-def read_wire_file(path: str) -> list[bytes]:
-    """Read back every frame of a ``.kpl`` container (validates framing)."""
-    frames = []
+def _walk_frames(path: str, lo: float = 0, hi: float = float("inf")) -> Iterator[bytes | None]:
+    """Walk one ``.kpl`` container's frames in order, stopping before frame
+    ``hi``: frame ``i >= lo`` comes back as its bytes, an earlier one as
+    ``None`` — skipped by seeking past it on its 4-byte length prefix, so
+    no payload bytes are read. A torn prefix or frame raises ValueError."""
     with open(path, "rb") as f:
-        while True:
-            head = f.read(4)
-            if not head:
-                break
-            if len(head) != 4:
-                raise ValueError(f"{path}: torn length prefix")
-            (n,) = _LEN.unpack(head)
-            frame = f.read(n)
-            if len(frame) != n:
-                raise ValueError(f"{path}: torn frame (want {n}, got {len(frame)})")
-            frames.append(frame)
-    return frames
-
-
-def count_wire_frames(path: str) -> int:
-    """Frame count of one ``.kpl`` container WITHOUT materializing payloads:
-    read each 4-byte length prefix and seek past the frame. The capture
-    replay client's driver-side LATEST probes only need counts (sequence
-    numbers are dense frame indices) — seeking keeps that O(frames) prefix
-    reads instead of parsing the whole multi-GB capture per planning call."""
-    n = 0
-    with open(path, "rb") as f:
-        f.seek(0, 2)
-        end = f.tell()
+        end = f.seek(0, 2)
         f.seek(0)
-        pos = 0
-        while pos < end:
-            head = f.read(4)
-            if len(head) != 4:
-                raise ValueError(f"{path}: torn length prefix")
-            (ln,) = _LEN.unpack(head)
-            pos += 4 + ln
-            if pos > end:
-                raise ValueError(f"{path}: torn frame (want {ln} more bytes)")
-            f.seek(pos)
-            n += 1
-    return n
-
-
-def read_wire_slice(path: str, lo: int, hi: int) -> list[bytes]:
-    """Frames ``[lo, hi)`` of one ``.kpl`` container, materializing ONLY that
-    slice: the first ``lo`` frames are skipped by seeking past their length
-    prefixes (4-byte reads, no payload bytes), and reading stops at ``hi``.
-    Serving a capped micro-batch this way costs O(cap) payload bytes instead
-    of O(shard) — the difference between a drain whose per-batch cost tracks
-    the admission cap and one that re-parses the whole shard every batch."""
-    frames: list[bytes] = []
-    with open(path, "rb") as f:
-        f.seek(0, 2)
-        end = f.tell()
-        f.seek(0)
-        pos = 0
-        i = 0
+        pos = i = 0
         while pos < end and i < hi:
             head = f.read(4)
             if len(head) != 4:
@@ -132,11 +85,35 @@ def read_wire_slice(path: str, lo: int, hi: int) -> list[bytes]:
                 frame = f.read(n)
                 if len(frame) != n:
                     raise ValueError(f"{path}: torn frame (want {n}, got {len(frame)})")
-                frames.append(frame)
+                yield frame
             else:
                 f.seek(pos)
+                yield None
             i += 1
-    return frames
+
+
+def read_wire_file(path: str) -> list[bytes]:
+    """Read back every frame of a ``.kpl`` container (validates framing)."""
+    return list(_walk_frames(path))
+
+
+def count_wire_frames(path: str) -> int:
+    """Frame count of one ``.kpl`` container WITHOUT materializing payloads:
+    read each 4-byte length prefix and seek past the frame. The capture
+    replay client's driver-side LATEST probes only need counts (sequence
+    numbers are dense frame indices) — seeking keeps that O(frames) prefix
+    reads instead of parsing the whole multi-GB capture per planning call."""
+    return sum(1 for _ in _walk_frames(path, lo=float("inf")))
+
+
+def read_wire_slice(path: str, lo: int, hi: int) -> list[bytes]:
+    """Frames ``[lo, hi)`` of one ``.kpl`` container, materializing ONLY that
+    slice: the first ``lo`` frames are skipped by seeking past their length
+    prefixes (4-byte reads, no payload bytes), and reading stops at ``hi``.
+    Serving a capped micro-batch this way costs O(cap) payload bytes instead
+    of O(shard) — the difference between a drain whose per-batch cost tracks
+    the admission cap and one that re-parses the whole shard every batch."""
+    return list(islice(_walk_frames(path, lo, hi), lo, None))
 
 
 def write_wire_dir(wire_df, directory: str, wire_col: str = "wire") -> None:

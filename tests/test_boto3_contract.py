@@ -1,8 +1,8 @@
 """boto3 client-factory contract tests (r8 VERDICT task #6).
 
-``sink.default_client_factory`` (sink.py:508) was previously covered only
-by its ImportError branch; the real-client path had no test pinning that
-the engine's API calls are shaped the way botocore validates them. These
+``sink.boto3_client_factory`` was once covered only by its ImportError
+branch; the real-client path had no test pinning that the engine's API
+calls are shaped the way botocore validates them. These
 tests install a STUB ``boto3`` module (the sandbox has no boto3/AWS) whose
 client validates every call against the Kinesis API's parameter contract —
 required params, allowed params, value types — exactly the checks
@@ -15,6 +15,7 @@ itself exposes (KinesisWriter.scala:141).
 
 from __future__ import annotations
 
+import functools
 import sys
 import types
 
@@ -24,7 +25,7 @@ from kinesis_writer_spark.kpl.aggregator import RecordAggregator
 from kinesis_writer_spark.sink import (
     FakeKinesisClient,
     KinesisStreamWriter,
-    default_client_factory,
+    boto3_client_factory,
     open_shard_midpoints,
 )
 from kinesis_writer_spark.sources.kinesis_stream import (
@@ -38,30 +39,49 @@ class ValidationError(AssertionError):
     """Stands in for botocore.exceptions.ParamValidationError."""
 
 
+def _check_known(kwargs: dict, allowed: set[str], op: str) -> None:
+    unknown = set(kwargs) - allowed
+    if unknown:
+        raise ValidationError(f"Unknown parameter(s) {unknown} for {op}")
+
+
+def _check_list_shards(kwargs: dict) -> None:
+    """ListShards, for the producer and the consumer alike: a follow-up page
+    names only NextToken; the service rejects it next to StreamName
+    (InvalidArgumentException)."""
+    _check_known(
+        kwargs,
+        {"StreamName", "NextToken", "ExclusiveStartShardId", "MaxResults",
+         "StreamCreationTimestamp", "ShardFilter", "StreamARN"},
+        "ListShards",
+    )
+    token = kwargs.get("NextToken")
+    if token is not None:
+        if not isinstance(token, str) or not token:
+            raise ValidationError("NextToken must be a non-empty str")
+        clash = {"StreamName", "ExclusiveStartShardId",
+                 "StreamCreationTimestamp", "StreamARN"} & set(kwargs)
+        if clash:
+            raise ValidationError(
+                f"InvalidArgumentException: NextToken with {sorted(clash)}"
+            )
+    elif not isinstance(kwargs.get("StreamName"), str) or not kwargs["StreamName"]:
+        raise ValidationError("ListShards needs StreamName or NextToken")
+
+
 class _ContractKinesisClient:
     """Validates call shapes per the AWS Kinesis API, then delegates to
     FakeKinesisClient so engine behavior runs end-to-end."""
 
     def __init__(self, inner: FakeKinesisClient) -> None:
         self._inner = inner
-        self.describe_calls: list[dict] = []
+        self.list_calls: list[dict] = []
         self.put_calls: list[dict] = []
 
-    # --- DescribeStream: StreamName required; optional Limit /
-    #     ExclusiveStartShardId; positional args are a botocore TypeError.
-    def describe_stream(self, **kwargs):
-        allowed = {"StreamName", "Limit", "ExclusiveStartShardId"}
-        unknown = set(kwargs) - allowed
-        if unknown:
-            raise ValidationError(f"Unknown parameter(s) {unknown} for DescribeStream")
-        if not isinstance(kwargs.get("StreamName"), str) or not kwargs["StreamName"]:
-            raise ValidationError("DescribeStream requires non-empty str StreamName")
-        if "ExclusiveStartShardId" in kwargs and not isinstance(
-            kwargs["ExclusiveStartShardId"], str
-        ):
-            raise ValidationError("ExclusiveStartShardId must be str")
-        self.describe_calls.append(dict(kwargs))
-        return self._inner.describe_stream(**kwargs)
+    def list_shards(self, **kwargs):
+        _check_list_shards(kwargs)
+        self.list_calls.append(dict(kwargs))
+        return self._inner.list_shards(**kwargs)
 
     # --- PutRecords: StreamName + Records (1..500); each entry needs
     #     bytes Data + str PartitionKey; ExplicitHashKey optional but must
@@ -116,37 +136,11 @@ class _ContractConsumerClient:
         self._inner = inner
         self.list_calls: list[dict] = []
 
-    @staticmethod
-    def _check_known(kwargs: dict, allowed: set[str], op: str) -> None:
-        unknown = set(kwargs) - allowed
-        if unknown:
-            raise ValidationError(f"Unknown parameter(s) {unknown} for {op}")
-
-    # --- ListShards: a follow-up page names only NextToken; the service
-    #     rejects it next to StreamName (InvalidArgumentException).
     def list_shards(self, **kwargs):
-        self._check_known(
-            kwargs,
-            {"StreamName", "NextToken", "ExclusiveStartShardId", "MaxResults",
-             "StreamCreationTimestamp", "ShardFilter", "StreamARN"},
-            "ListShards",
-        )
+        _check_list_shards(kwargs)
         self.list_calls.append(dict(kwargs))
         token = kwargs.get("NextToken")
-        if token is not None:
-            if not isinstance(token, str) or not token:
-                raise ValidationError("NextToken must be a non-empty str")
-            clash = {"StreamName", "ExclusiveStartShardId",
-                     "StreamCreationTimestamp", "StreamARN"} & set(kwargs)
-            if clash:
-                raise ValidationError(
-                    f"InvalidArgumentException: NextToken with {sorted(clash)}"
-                )
-            stream, page = token.split("/")
-        elif isinstance(kwargs.get("StreamName"), str) and kwargs["StreamName"]:
-            stream, page = kwargs["StreamName"], "0"
-        else:
-            raise ValidationError("ListShards needs StreamName or NextToken")
+        stream, page = token.split("/") if token else (kwargs["StreamName"], "0")
         shards = self._inner.list_shards(StreamName=stream)["Shards"]
         i = int(page)
         resp: dict = {"Shards": shards[i : i + 1]}
@@ -155,7 +149,7 @@ class _ContractConsumerClient:
         return resp
 
     def get_shard_iterator(self, **kwargs):
-        self._check_known(
+        _check_known(
             kwargs,
             {"StreamName", "ShardId", "ShardIteratorType",
              "StartingSequenceNumber", "Timestamp", "StreamARN"},
@@ -176,7 +170,7 @@ class _ContractConsumerClient:
         return self._inner.get_shard_iterator(**kwargs)
 
     def get_records(self, **kwargs):
-        self._check_known(kwargs, {"ShardIterator", "Limit", "StreamARN"}, "GetRecords")
+        _check_known(kwargs, {"ShardIterator", "Limit", "StreamARN"}, "GetRecords")
         it = kwargs.get("ShardIterator")
         if not isinstance(it, str) or not (1 <= len(it) <= 512):
             raise ValidationError("ShardIterator must be a str of 1..512")
@@ -209,20 +203,20 @@ def boto3_stub(monkeypatch):
 class TestDefaultClientFactory:
     def test_factory_builds_kinesis_client_with_region(self, boto3_stub):
         made, _ = boto3_stub
-        factory = default_client_factory(region_name="eu-west-1")
+        factory = functools.partial(boto3_client_factory, region_name="eu-west-1")
         assert made == []  # lazy: nothing constructed until factory()
         factory()
         assert made == [("kinesis", "eu-west-1", {})]
 
     def test_factory_default_region_is_none(self, boto3_stub):
         made, _ = boto3_stub
-        default_client_factory()()
+        boto3_client_factory()
         assert made == [("kinesis", None, {})]
 
     def test_missing_boto3_raises_actionable_error(self, monkeypatch):
         monkeypatch.setitem(sys.modules, "boto3", None)  # import -> ImportError
         with pytest.raises(RuntimeError, match="client_factory"):
-            default_client_factory()
+            boto3_client_factory()
 
 
 class TestEngineCallShapes:
@@ -231,23 +225,20 @@ class TestEngineCallShapes:
 
     def test_shard_discovery_pagination_contract(self, boto3_stub):
         _, clients = boto3_stub
-        client = default_client_factory("us-east-1")()
+        client = boto3_client_factory("us-east-1")
         mids = open_shard_midpoints(client, "prod-stream")
         assert len(mids) == 3
-        calls = clients[0].describe_calls
-        # FakeKinesisClient pages one shard at a time: 3 open shards ->
-        # >=3 calls; every call after the first resumes from the previous
-        # page's last ShardId.
-        assert len(calls) >= 3
-        assert all(c["StreamName"] == "prod-stream" for c in calls)
-        assert "ExclusiveStartShardId" not in calls[0]
-        for c in calls[1:]:
-            assert c["ExclusiveStartShardId"], calls
-        assert calls[1]["ExclusiveStartShardId"] == "shardId-000000000000"
+        # FakeKinesisClient pages one shard at a time: the first call names
+        # the stream, every follow-up names only the previous NextToken
+        assert clients[0].list_calls == [
+            {"StreamName": "prod-stream"},
+            {"NextToken": "prod-stream/1"},
+            {"NextToken": "prod-stream/2"},
+        ]
 
     def test_write_path_put_records_contract(self, boto3_stub):
         _, clients = boto3_stub
-        client = default_client_factory("us-east-1")()
+        client = boto3_client_factory("us-east-1")
         writer = KinesisStreamWriter("prod-stream", client, sleep=lambda s: None)
         n = writer.write([f"payload-{i}".encode() for i in range(100)])
         assert n == 100

@@ -52,6 +52,8 @@ class TestContainerFormat:
             f.truncate(7)  # cut mid-frame
         with pytest.raises(ValueError, match="torn"):
             read_wire_file(p)
+        with pytest.raises(ValueError, match="torn"):
+            read_wire_slice(p, 0, 1)
 
     def test_count_matches_read(self, tmp_path):
         # seek-based count == materializing read, incl. empty frames

@@ -51,7 +51,7 @@ def _slow_write(writer: KinesisStreamWriter, payloads) -> int:
 
     def keyed_dynamic():
         for data in payloads:
-            yield writer.partition_key, cell["ehk"], data
+            yield DEFAULT_PARTITION_KEY, cell["ehk"], data
 
     count = 0
     for agg in batch_records(keyed_dynamic()):

@@ -182,6 +182,20 @@ class TestThrottlingClient:
         assert self._put(c, 1000)["FailedRecordCount"] == 0
         assert c.throttle_errors == 1
 
+    def test_split_charges_the_open_childrens_buckets(self):
+        # after a split the service routes each key to the open child that
+        # covers it; the closed parents' buckets are never charged again
+        vc = VirtualClock()
+        c = self._client(vc, num_shards=2)
+        c.split_all_shards()
+        children = [s["ShardId"] for s in c.shards if s.get("ParentShardId")]
+        routed = [
+            self._put(c, 100, ehk)["Records"][0]["ShardId"]
+            for ehk in open_shard_midpoints(c, "s")
+        ]
+        assert routed == children
+        assert sorted(c._buckets) == sorted(children)
+
     def test_writer_rides_out_sustained_throttle_on_virtual_time(self):
         """The reactive envelope end-to-end: offered load far above the cap
         must DEGRADE to ~the cap via linear back-off + re-route, complete

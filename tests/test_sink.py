@@ -13,12 +13,14 @@ from kinesis_writer_spark.kpl import MAX_BYTES_PER_RECORD
 from kinesis_writer_spark.sink import (
     FATAL_ERROR_MARKERS,
     MAX_LAST_RECORD_SIZE,
+    MIN_ERROR_REFRESH_INTERVAL_S,
     SOFT_MAX_SIZE,
     FakeKinesisClient,
     KinesisStreamWriter,
     ShardRateLimiter,
     ShardRouter,
     batch_records,
+    list_shards,
     open_shard_midpoints,
     retry_delay_seconds,
 )
@@ -49,17 +51,36 @@ class TestShardDiscovery:
                 super().__init__(num_shards=2)
                 self.calls = 0
 
-            def describe_stream(self, *a, **kw):
+            def list_shards(self, *a, **kw):
                 self.calls += 1
                 if self.calls <= 2:
                     raise RuntimeError("LimitExceededException: simulated")
-                return super().describe_stream(*a, **kw)
+                return super().list_shards(*a, **kw)
 
         sleeps = []
         client = FlakyClient()
         writer = KinesisStreamWriter("s", client, sleep=sleeps.append)
         assert sleeps == [2, 4]  # back-off applied to the discovery phase too
         assert writer.write([b"x"]) == 1
+
+    def test_merge_reports_both_parents(self):
+        client = FakeKinesisClient(num_shards=4)
+        client.merge_adjacent_shards()
+        shards = {s["ShardId"]: s for s in list_shards(client, "s")}
+        children = {sid: s for sid, s in shards.items() if s.get("ParentShardId")}
+        assert {
+            sid: (s["ParentShardId"], s["AdjacentParentShardId"])
+            for sid, s in children.items()
+        } == {
+            "shardId-000000000004": ("shardId-000000000000", "shardId-000000000001"),
+            "shardId-000000000005": ("shardId-000000000002", "shardId-000000000003"),
+        }
+        # each child spans its two parents' hash ranges; only children stay open
+        for s in children.values():
+            lo = shards[s["ParentShardId"]]["HashKeyRange"]["StartingHashKey"]
+            hi = shards[s["AdjacentParentShardId"]]["HashKeyRange"]["EndingHashKey"]
+            assert s["HashKeyRange"] == {"StartingHashKey": lo, "EndingHashKey": hi}
+        assert len(open_shard_midpoints(client, "s")) == 2
 
     def test_router_deterministic_with_seed(self):
         mids = [str(i) for i in range(8)]
@@ -140,7 +161,7 @@ class TestRetryReplay:
 
     def test_fatal_discovery_error_raises_without_back_off(self):
         client = FakeKinesisClient(num_shards=2)
-        client.describe_stream = lambda **kw: (_ for _ in ()).throw(
+        client.list_shards = lambda **kw: (_ for _ in ()).throw(
             RuntimeError("AccessDeniedException: not authorized")
         )
         sleeps = []
@@ -152,11 +173,11 @@ class TestRetryReplay:
         client = FakeKinesisClient(num_shards=2)
         sleeps = []
         writer = KinesisStreamWriter("s", client, sleep=sleeps.append)
-        describes = TestRefreshHygiene._count_describes(client)
+        listings = TestRefreshHygiene._count_list_shards(client)
         client.fail_next_put_with = "ResourceInUseException: stream is being updated"
         assert writer.write([b"x" * 1000]) == 1
         assert sleeps == [2]
-        assert describes["n"] > 0
+        assert listings["n"] > 0
         assert len(client.put_requests) == 2 and len(client.received) == 1
 
     def test_replay_payloads_intact(self):
@@ -298,9 +319,9 @@ class TestReshardRefresh:
         client = FakeKinesisClient(num_shards=2)
         writer = KinesisStreamWriter("s", client, sleep=self._no_sleep)
         before = writer.router.midpoints
-        orig = client.describe_stream
-        client.describe_stream = lambda **kw: (_ for _ in ()).throw(
-            RuntimeError("transient describe failure")
+        orig = client.list_shards
+        client.list_shards = lambda **kw: (_ for _ in ()).throw(
+            RuntimeError("transient listing failure")
         )
         with caplog.at_level(logging.WARNING, logger="kinesis_writer_spark.sink"):
             writer.refresh_shard_map()  # must not raise, must not clear the map
@@ -308,28 +329,28 @@ class TestReshardRefresh:
         [record] = caplog.records  # loud, once
         assert record.levelno == logging.WARNING
         assert "'s'" in record.getMessage()
-        assert "transient describe failure" in record.getMessage()
-        client.describe_stream = orig
+        assert "transient listing failure" in record.getMessage()
+        client.list_shards = orig
 
 
 class TestRefreshHygiene:
     """Round-6 hardening: refresh is ON by default (silent splits are picked
     up without any error trigger), throttling never triggers discovery, and
-    a reshard-error retry storm can't become a DescribeStream storm."""
+    a reshard-error retry storm can't become a ListShards storm."""
 
     def _no_sleep(self, _s):
         pass
 
     @staticmethod
-    def _count_describes(client):
+    def _count_list_shards(client):
         calls = {"n": 0}
-        orig = client.describe_stream
+        orig = client.list_shards
 
         def counting(**kw):
             calls["n"] += 1
             return orig(**kw)
 
-        client.describe_stream = counting
+        client.list_shards = counting
         return calls
 
     def test_default_on_periodic_refresh_picks_up_silent_split(self):
@@ -344,7 +365,7 @@ class TestRefreshHygiene:
     def test_throttle_error_does_not_trigger_discovery(self):
         client = FakeKinesisClient(num_shards=2)
         writer = KinesisStreamWriter("s", client, sleep=self._no_sleep)
-        calls = self._count_describes(client)
+        calls = self._count_list_shards(client)
         client.fail_next_put_with = (
             "ProvisionedThroughputExceededException: rate exceeded"
         )
@@ -357,10 +378,10 @@ class TestRefreshHygiene:
         writer = KinesisStreamWriter(
             "s", client, sleep=self._no_sleep, clock=lambda: now["t"]
         )
-        calls = self._count_describes(client)
+        calls = self._count_list_shards(client)
 
         # three reshard-shaped errors within the cooldown window: only the
-        # FIRST refreshes (paginated fake: 1 describe call per shard page)
+        # FIRST refreshes (paginated fake: 1 ListShards call per shard page)
         for _ in range(3):
             client.fail_next_put_with = "ResourceInUseException: resharding"
             writer.write([b"b" * 1000])
@@ -369,19 +390,19 @@ class TestRefreshHygiene:
         per_sweep = first_burst  # one full pagination sweep
 
         # past the cooldown, the next reshard error refreshes again
-        now["t"] += writer.min_error_refresh_interval_s + 1
+        now["t"] += MIN_ERROR_REFRESH_INTERVAL_S + 1
         client.fail_next_put_with = "ShardClosed: gone"
         writer.write([b"c" * 1000])
         assert calls["n"] == per_sweep * 2
 
     def test_resource_not_found_does_not_trigger_refresh(self):
         # ResourceNotFound = the stream is GONE, not resharded; re-discovery
-        # cannot succeed, so the error path must not burn a DescribeStream
+        # cannot succeed, so the error path must not burn a ListShards
         # sweep (ADVICE r6: a deleted stream would otherwise surface a
         # discovery error in place of the original fatal put error).
         client = FakeKinesisClient(num_shards=2)
         writer = KinesisStreamWriter("s", client, sleep=self._no_sleep)
-        calls = self._count_describes(client)
+        calls = self._count_list_shards(client)
         client.fail_next_put_with = (
             "ResourceNotFoundException: Stream s under account not found"
         )
