@@ -8,7 +8,6 @@ wire format — no code is translated from the reference.
 """
 
 from .aggregator import AggRecordBuilder, RecordAggregator
-from .deaggregator import DeaggregationError, UserRecord, deaggregate, is_aggregated
 from .protocol import (
     DIGEST_SIZE,
     MAGIC,
@@ -17,6 +16,20 @@ from .protocol import (
     derive_explicit_hash_key,
     varint_size,
 )
+
+#: Consumer-side names, resolved from :mod:`.deaggregator` on first use so
+#: that a producer importing the package never loads the consumer codec.
+_DEAGGREGATOR_NAMES = frozenset(
+    {"DeaggregationError", "UserRecord", "deaggregate", "is_aggregated"}
+)
+
+
+def __getattr__(name: str):
+    if name in _DEAGGREGATOR_NAMES:
+        from . import deaggregator
+
+        return getattr(deaggregator, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 __all__ = [
     "AggRecordBuilder",

@@ -16,7 +16,6 @@ property tests in tests/test_kpl.py.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
 
 from . import protocol as P
 
@@ -56,13 +55,22 @@ class _KeyDictionary:
         return len(self._index)
 
 
-@dataclass
 class _UserRecord:
-    partition_key: str
-    explicit_hash_key: str | None
-    data: bytes
-    pk_index: int = 0
-    ehk_index: int | None = None
+    __slots__ = ("partition_key", "explicit_hash_key", "data", "pk_index", "ehk_index")
+
+    def __init__(
+        self,
+        partition_key: str,
+        explicit_hash_key: str | None,
+        data: bytes,
+        pk_index: int = 0,
+        ehk_index: int | None = None,
+    ) -> None:
+        self.partition_key = partition_key
+        self.explicit_hash_key = explicit_hash_key
+        self.data = data
+        self.pk_index = pk_index
+        self.ehk_index = ehk_index
 
 
 class AggRecordBuilder:

@@ -9,7 +9,7 @@ Round-trip property with :mod:`.aggregator` is enforced in tests/test_kpl.py.
 from __future__ import annotations
 
 import hashlib
-from dataclasses import dataclass
+from collections import namedtuple
 
 from . import protocol as P
 
@@ -18,11 +18,12 @@ class DeaggregationError(ValueError):
     pass
 
 
-@dataclass(frozen=True)
-class UserRecord:
-    partition_key: str
-    explicit_hash_key: str | None
-    data: bytes
+class UserRecord(namedtuple("UserRecord", "partition_key explicit_hash_key data")):
+    """One deaggregated user record: ``partition_key`` (str),
+    ``explicit_hash_key`` (str or None) and ``data`` (bytes). Immutable,
+    compared by value, hashable."""
+
+    __slots__ = ()
 
 
 def is_aggregated(wire: bytes) -> bool:

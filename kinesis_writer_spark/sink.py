@@ -555,7 +555,6 @@ class FakeKinesisClient:
     """
 
     def __init__(self, num_shards: int = 4, fail_first_n_puts: int = 0, throttle_every: int = 0) -> None:
-        self.num_shards = num_shards
         self.fail_first_n_puts = fail_first_n_puts
         self.throttle_every = throttle_every
         self.fail_next_put_with: str | None = None

@@ -58,6 +58,7 @@ from __future__ import annotations
 import importlib
 import json
 import logging
+import math
 import os
 import threading
 from collections.abc import Iterator
@@ -604,6 +605,12 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
         # therefore recovery replay) the way maxOffsetsPerTrigger does for
         # Kafka; 0 = unbounded
         self._max_per_batch = int(options.get("max_records_per_batch", "0"))
+        if self._max_per_batch < 0:
+            # a negative cap would put every latestOffset behind its start,
+            # so each batch would plan empty and the stream would stall
+            raise ValueError(
+                f"max_records_per_batch must be >= 0, got {self._max_per_batch}"
+            )
         if self._max_per_batch > 0:
             # planning-time defense for the cap x availableNow footgun (the
             # reader cannot see the trigger, so warn whenever the cap is
@@ -837,14 +844,17 @@ class KinesisDataSource(DataSource):
 def _parse_positive_rate(options, key: str) -> float | None:
     """Parse a rate option; absent → None (no limit). '0' and negatives are
     config errors — a 0.0-rate token bucket can never refill, so the first
-    acquire would divide by zero deep inside a partition write. Fail loud at
-    plan time instead."""
+    acquire would divide by zero deep inside a partition write. 'nan' and
+    'inf' are errors too: either one makes every acquire return at once,
+    which switches pacing off. Fail loud at plan time instead."""
     raw = options.get(key)
     if raw is None:
         return None
     val = float(raw)
-    if val <= 0:
-        raise ValueError(f"{key} must be > 0 (got {raw!r}); omit the option for no limit")
+    if not (math.isfinite(val) and val > 0):
+        raise ValueError(
+            f"{key} must be > 0 and finite (got {raw!r}); omit the option for no limit"
+        )
     return val
 
 
@@ -907,9 +917,9 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
         self._rl_bytes = _parse_positive_rate(options, "rate_limit_bytes_per_sec")
         self._rl_puts = _parse_positive_rate(options, "rate_limit_puts_per_sec")
         self._rl_burst = float(options.get("rate_limit_burst_seconds", "1.0"))
-        if self._rl_burst <= 0:
+        if not (math.isfinite(self._rl_burst) and self._rl_burst > 0):
             raise ValueError(
-                f"rate_limit_burst_seconds must be > 0, got {self._rl_burst!r}"
+                f"rate_limit_burst_seconds must be > 0 and finite, got {self._rl_burst!r}"
             )
         # periodic shard-map re-discovery (long-running sinks survive
         # resharding without a restart): ON by default at the sink module's

@@ -301,6 +301,15 @@ class TestPartitionedReader:
         assert len(rows) == sum(int(e["seq"]) + 1 for e in end.values())
         assert {t[0] for t in rows} == set(end)
 
+    def test_negative_cap_rejected(self):
+        from kinesis_writer_spark.sources.kinesis_stream import (
+            KinesisPartitionedStreamReader,
+        )
+
+        # a negative cap would plan every batch empty, stalling the stream
+        with pytest.raises(ValueError, match="max_records_per_batch must be >= 0, got -2"):
+            KinesisPartitionedStreamReader({"stream_name": "events", "max_records_per_batch": "-2"})
+
     def test_rate_limited_batches(self, tmp_path):
         from kinesis_writer_spark.sources.kinesis_stream import (
             KinesisPartitionedStreamReader,
@@ -776,6 +785,16 @@ class TestSinkOptionValidation:
             self._writer(rate_limit_puts_per_sec="-5")
         with pytest.raises(ValueError, match="rate_limit_burst_seconds must be > 0"):
             self._writer(rate_limit_bytes_per_sec="1000", rate_limit_burst_seconds="0")
+
+    @pytest.mark.parametrize("bad", ["nan", "inf"])
+    def test_non_finite_rates_rejected(self, bad):
+        # nan and inf would pass a bare <= 0 check and switch pacing off
+        with pytest.raises(ValueError, match="rate_limit_bytes_per_sec must be > 0 and finite"):
+            self._writer(rate_limit_bytes_per_sec=bad)
+        with pytest.raises(ValueError, match="rate_limit_puts_per_sec must be > 0 and finite"):
+            self._writer(rate_limit_puts_per_sec=bad)
+        with pytest.raises(ValueError, match="rate_limit_burst_seconds must be > 0 and finite"):
+            self._writer(rate_limit_bytes_per_sec="1000", rate_limit_burst_seconds=bad)
 
     def test_refresh_cadence_validated(self):
         with pytest.raises(ValueError, match="shard_map_refresh_flushes must be >= 0"):
