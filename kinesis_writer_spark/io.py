@@ -11,18 +11,42 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+#: Each fixture table's declared schema (DDL), in file column order. The
+#: loads pass it to the reader, so opening a table runs no Spark job: parquet
+#: schema inference runs one (``parallelize(...).collect()``) per table even
+#: for a single file. This is the module's ingestion policy (schemas are
+#: declared, see :func:`read_csv`), and tests/test_io_formats.py checks each
+#: DDL against the schema Spark infers from every fixture directory.
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, "
+        "p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, "
+        "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+        "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+TABLES = tuple(SCHEMAS)
 
 # Small dimension tables that should always be broadcast in joins.
 DIM_TABLES = frozenset({"region", "nation"})
@@ -36,8 +60,8 @@ def table_path(sf_dir: str, name: str) -> str:
 
 #: (applicationId, sf_dir, table) -> loaded DataFrame HANDLE (r15).
 #:
-#: ``spark.read.parquet`` builds a fresh file index + reads the schema
-#: footer on every call (~85 ms/table measured) and every query
+#: ``spark.read.parquet`` builds a fresh file index on every call (~85
+#: ms/table measured while it also inferred the schema) and every query
 #: construction re-pays it per table. A DataFrame is an immutable
 #: unresolved logical plan — holding the handle caches file-listing
 #: METADATA, never data, blocks or results; every execution still scans
@@ -55,15 +79,13 @@ _DF_HANDLE_CACHE: dict = {}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table as a DataFrame.
+    """Load one fixture table as a DataFrame, read with its declared schema.
 
-    ``events.ts`` is TIMESTAMP(NANOS) in the parquet footer, which Spark has
-    no native type for. Spark 4 scans it as ``TIMESTAMP_NTZ`` (micros,
-    truncated — the same truncation DuckDB applies); we normalize to a
+    ``events.ts`` is TIMESTAMP(MICROS, isAdjustedToUTC=false) in the parquet
+    footer, which Spark reads as ``TIMESTAMP_NTZ``; we normalize it to a
     session-zoned ``timestamp`` here so downstream ``unix_micros``/interval
     arithmetic resolves. The session timezone is pinned to UTC
-    (session.py), so the cast is shift-free. Older readers that surface the
-    column as nanos-since-epoch LONG are handled too.
+    (session.py), so the cast is shift-free.
     """
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -71,16 +93,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     got = _DF_HANDLE_CACHE.get(key)
     if got is not None:
         return got
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = spark.read.schema(SCHEMAS[name]).parquet(table_path(sf_dir, name))
     if name == "events":
         from pyspark.sql import functions as F
 
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # integer division: epoch-nanos exceed double's 53-bit mantissa
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return _DF_HANDLE_CACHE.setdefault(key, df)
 
 

@@ -9,7 +9,7 @@ from .. import io
 
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    """Load fixture tables (events gets its ns→µs timestamp conversion)."""
+    """Load fixture tables (events.ts gets its TIMESTAMP_NTZ → session timestamp cast)."""
     return tuple(io.load(spark, sf_dir, n) for n in names)
 
 

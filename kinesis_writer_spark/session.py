@@ -9,8 +9,55 @@ Pandas-UDF paths, shuffle partitions sized to the parallelism at hand.
 from __future__ import annotations
 
 import os
+import threading
+from concurrent.futures import Future
 
 from pyspark.sql import SparkSession
+
+#: The data-source registration ``get_spark`` started: ``(applicationId,
+#: session, future)`` for the newest SparkContext it built, or None. One
+#: entry by construction: a new context replaces it, and a session that
+#: ``get_spark`` did not build never enters it (its ``register()`` calls
+#: register synchronously).
+_REGISTRATION: tuple[str, SparkSession, Future] | None = None
+_REGISTRATION_LOCK = threading.Lock()
+
+
+def _register_data_sources(spark: SparkSession) -> Future:
+    """Register the engine's Python data sources (``kinesis``, ``kpl``) on a
+    background thread. The first ``spark.dataSource.register`` in a JVM
+    waits for Spark's once-per-JVM discovery of Python data sources (a fresh
+    Python worker, about 2 s at local[4]); off the caller's thread it
+    overlaps with whatever the caller does next, such as loading tables."""
+    from .sources.kinesis_stream import KinesisDataSource
+    from .sources.kpl_datasource import KplDataSource
+
+    done: Future = Future()
+
+    def run() -> None:
+        try:
+            for source in (KinesisDataSource, KplDataSource):
+                spark.dataSource.register(source)
+        except Exception as exc:
+            # register() re-raises it; a session that never calls register()
+            # (say, one stopped at once) never needed the sources
+            done.set_exception(exc)
+        else:
+            done.set_result(None)
+
+    threading.Thread(target=run, name="register-data-sources", daemon=True).start()
+    return done
+
+
+def await_data_sources(spark: SparkSession) -> bool:
+    """Wait for the background registration ``get_spark`` started on this
+    session and re-raise any error it hit. False when ``get_spark`` did not
+    build this session: the caller then registers synchronously."""
+    entry = _REGISTRATION
+    if entry is None or entry[1] is not spark:
+        return False
+    entry[2].result()
+    return True
 
 
 def get_spark(app_name: str = "kinesis_writer_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -20,6 +67,10 @@ def get_spark(app_name: str = "kinesis_writer_spark", shuffle_partitions: int | 
     sized to ~2-3x total cores (or left to AQE's coalescing with a high
     initial value); locally we match the core count to avoid tiny-task
     overhead.
+
+    Once per SparkContext it also starts registering the engine's data
+    sources, ``kinesis`` and ``kpl``, on a background thread;
+    ``kinesis_stream.register`` and ``kpl_datasource.register`` wait for it.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -104,4 +155,9 @@ def get_spark(app_name: str = "kinesis_writer_spark", shuffle_partitions: int | 
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    global _REGISTRATION
+    app_id = spark.sparkContext.applicationId
+    with _REGISTRATION_LOCK:
+        if _REGISTRATION is None or _REGISTRATION[0] != app_id:
+            _REGISTRATION = (app_id, spark, _register_data_sources(spark))
     return spark

@@ -192,6 +192,12 @@ class ShardRateLimiter:
         self.bytes_per_sec = float(bytes_per_sec)
         self.puts_per_sec = float(puts_per_sec)
         self.burst_seconds = float(burst_seconds)
+        # a zero rate divides by zero inside acquire; a negative one, nan or
+        # inf makes every acquire return at once, which switches pacing off
+        for key in ("bytes_per_sec", "puts_per_sec", "burst_seconds"):
+            value = getattr(self, key)
+            if not (0 < value < float("inf")):
+                raise ValueError(f"{key} must be > 0 and finite (got {value!r})")
         self._clock = clock
         self._sleep = sleep
         # key -> [bytes_tokens, put_tokens, last_refill_ts]

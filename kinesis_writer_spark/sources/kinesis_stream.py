@@ -959,5 +959,12 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
 
 def register(spark) -> None:
     """Register on a session: ``spark.readStream.format("kinesis")`` and
-    ``df.writeStream.format("kinesis")``."""
-    spark.dataSource.register(KinesisDataSource)
+    ``df.writeStream.format("kinesis")``.
+
+    On a session ``get_spark`` built this waits for the registration it
+    started in the background (and re-raises its error) instead of
+    registering again; any other session registers here."""
+    from ..session import await_data_sources  # the driver only, not executors
+
+    if not await_data_sources(spark):
+        spark.dataSource.register(KinesisDataSource)

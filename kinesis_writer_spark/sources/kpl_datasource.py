@@ -278,5 +278,12 @@ class KplWriter(DataSourceWriter):
 
 def register(spark) -> None:
     """Register the source on a session: ``spark.read.format("kpl")`` and
-    ``df.write.format("kpl")``."""
-    spark.dataSource.register(KplDataSource)
+    ``df.write.format("kpl")``.
+
+    On a session ``get_spark`` built this waits for the registration it
+    started in the background (and re-raises its error) instead of
+    registering again; any other session registers here."""
+    from ..session import await_data_sources  # the driver only, not executors
+
+    if not await_data_sources(spark):
+        spark.dataSource.register(KplDataSource)

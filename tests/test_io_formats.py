@@ -158,3 +158,37 @@ def test_io_load_handle_cache(spark):
     assert kio.load(spark, SF_DIR, "orders") is not a
     key_apps = {k[0] for k in kio._DF_HANDLE_CACHE}
     assert key_apps == {spark.sparkContext.applicationId}
+
+
+def test_io_load_runs_no_spark_job(spark, monkeypatch):
+    """Opening the ten fixture tables under a fresh handle-cache key is
+    driver-side work only: each table is read with its declared schema, so
+    no schema-inference job runs (parquet inference runs one per table)."""
+    monkeypatch.setattr(kio, "_DF_HANDLE_CACHE", {})
+    sc = spark.sparkContext
+    group = "io-load-no-job"
+    sc.setJobGroup(group, "io.load of every fixture table")
+    try:
+        for name in kio.TABLES:
+            kio.load(spark, SF_DIR, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize(
+    "sf_dir", sorted(glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*")))
+)
+def test_declared_schemas_match_inferred(spark, sf_dir):
+    """The oracle for ``io.SCHEMAS``: each declared schema equals the one
+    Spark infers from the parquet footer (names, order, types, nullability),
+    and the load still casts ``events.ts`` to the session timestamp."""
+    from pyspark.sql.types import StructType
+
+    for name in kio.TABLES:
+        inferred = spark.read.parquet(kio.table_path(sf_dir, name)).schema
+        assert StructType.fromDDL(kio.SCHEMAS[name]) == inferred, name
+    events = spark.read.schema(kio.SCHEMAS["events"]).parquet(kio.table_path(sf_dir, "events"))
+    assert dict(events.dtypes)["ts"] == "timestamp_ntz"
+    assert dict(kio.load(spark, sf_dir, "events").dtypes)["ts"] == "timestamp"

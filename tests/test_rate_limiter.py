@@ -3,6 +3,8 @@ per-shard bytes/s and puts/s budgets without ever deadlocking."""
 
 from __future__ import annotations
 
+import pytest
+
 from kinesis_writer_spark.kpl.deaggregator import deaggregate
 from kinesis_writer_spark.sink import (
     FakeKinesisClient,
@@ -104,6 +106,24 @@ class TestBuckets:
         vc.now += 100.0  # long idle: tokens must cap at burst, not 100x
         assert rl.acquire("s0", 1000) == 0.0
         assert rl.acquire("s0", 1000) > 0.0
+
+    @pytest.mark.parametrize(
+        "key,value",
+        [
+            ("bytes_per_sec", float("inf")),
+            ("bytes_per_sec", float("nan")),
+            ("bytes_per_sec", -5),
+            ("puts_per_sec", 0),
+            ("puts_per_sec", float("inf")),
+            ("burst_seconds", float("nan")),
+            ("burst_seconds", 0),
+        ],
+    )
+    def test_rates_that_switch_pacing_off_are_rejected(self, key, value):
+        # a nan, inf or negative rate makes every acquire return 0.0 (pacing
+        # off) and a zero one divides by zero inside acquire
+        with pytest.raises(ValueError, match=f"{key} must be > 0 and finite"):
+            make_limiter(VirtualClock(), **{key: value})
 
 
 class TestWriterIntegration:
