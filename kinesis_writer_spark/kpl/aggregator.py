@@ -15,7 +15,7 @@ property tests in tests/test_kpl.py.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Iterator
 
 from . import protocol as P
 
@@ -237,3 +237,18 @@ class RecordAggregator:
         completed = self._current
         self._current = AggRecordBuilder()
         return completed
+
+
+def pack_records(records: Iterable[tuple[str, bytes]]) -> Iterator[AggRecordBuilder]:
+    """Pack ``(partition_key, data)`` user records, in order, into aggregated
+    records bounded only by the protocol cap: each one is yielded as it
+    fills, the partial tail last. The one packing loop of the ``kpl``
+    writer, ``kpl_stream.aggregate_payloads`` and q90."""
+    agg = RecordAggregator()
+    for partition_key, data in records:
+        completed = agg.add_user_record(partition_key, data)
+        if completed is not None:
+            yield completed
+    tail = agg.clear_and_get()
+    if tail is not None:
+        yield tail

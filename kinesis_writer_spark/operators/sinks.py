@@ -11,43 +11,11 @@ tests/test_sink.py.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ._util import tables
-
-
-def batch_stats(df: DataFrame, data_col: str = "data") -> DataFrame:
-    """mapInPandas KPL batcher: binary payloads → one row per aggregated
-    record (n_records, size_bytes, pk of first record). Batching is
-    per-partition — the cluster-parallel shape — with generator state
-    carried across Arrow batches inside each partition.
-    """
-    import pandas as pd
-
-    from ..kpl.aggregator import RecordAggregator
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        agg = RecordAggregator()
-        out_rows: list[tuple[int, int]] = []
-        for pdf in batches:
-            for data in pdf[data_col]:
-                completed = agg.add_user_record("a", bytes(data))
-                if completed is not None:
-                    out_rows.append((completed.num_user_records, completed.size_bytes))
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=["n_records", "size_bytes"])
-                out_rows = []
-        tail = agg.clear_and_get()
-        if tail is not None:
-            yield pd.DataFrame(
-                [(tail.num_user_records, tail.size_bytes)], columns=["n_records", "size_bytes"]
-            )
-
-    return df.mapInPandas(run, "n_records long, size_bytes long")
 
 
 #: Greedy KPL packing constants for the q90 oracle: with the single 1-byte
@@ -128,7 +96,8 @@ def q90_kpl_batch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 5 closed the last rows-only registry entry by making the batching
     boundary SEMANTIC instead of physical: records group by ``user_id % 8``
     (the shard a partition-key router would pick) and each shard's ordered
-    payload sequence is packed by the real ``RecordAggregator`` inside
+    payload sequence is packed by the real ``RecordAggregator`` (through
+    ``pack_records``, the ``kpl`` writer's loop) inside
     ``applyInPandas``. That is exactly Kinesis's own unit of aggregation —
     KPL batches never span shards — and, unlike hash-partition placement,
     it is reproducible in ANSI SQL: the oracle re-derives every batch
@@ -143,7 +112,7 @@ def q90_kpl_batch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
-    from ..kpl.aggregator import RecordAggregator
+    from ..kpl.aggregator import pack_records
 
     (events,) = tables(spark, sf_dir, "events")
     recs = events.select(
@@ -170,15 +139,12 @@ def q90_kpl_batch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("event_id")
         shard = int(pdf["shard_id"].iloc[0])
-        agg = RecordAggregator()
-        out: list[tuple[int, int, int, int]] = []
-        for data in pdf["data"]:
-            done = agg.add_user_record("a", bytes(data))
-            if done is not None:
-                out.append((shard, len(out) + 1, done.num_user_records, done.size_bytes))
-        tail = agg.clear_and_get()
-        if tail is not None:
-            out.append((shard, len(out) + 1, tail.num_user_records, tail.size_bytes))
+        out = [
+            (shard, seq, rec.num_user_records, rec.size_bytes)
+            for seq, rec in enumerate(
+                pack_records(("a", bytes(data)) for data in pdf["data"]), 1
+            )
+        ]
         return pd.DataFrame(
             out, columns=["shard_id", "batch_seq", "n_records", "size_bytes"]
         )
@@ -206,9 +172,10 @@ def q92_kpl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal a plain SQL aggregate over the source table, proving the wire
     codec is lossless end-to-end *inside* a distributed plan.
 
-    Both codec hops are narrow mapInPandas transforms; the only shuffle is
-    the final small groupBy. This is the full producer→consumer path of the
-    reference (AggRecord.java:61-74 wire format) exercised at plan level.
+    Both codec hops are narrow transforms (``mapInArrow`` packs,
+    ``mapInPandas`` unpacks); the only shuffle is the final small groupBy.
+    This is the full producer→consumer path of the reference
+    (AggRecord.java:61-74 wire format) exercised at plan level.
     """
     import os
 

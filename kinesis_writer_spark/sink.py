@@ -8,15 +8,16 @@ Capability parity targets (implementation original, Spark-first):
   - seeded random routing per flush /root/reference KinesisWriter.scala:37-43,184
   - returned user-record count      /root/reference KinesisWriter.scala:115,192
 
-Cluster model: one :class:`KinesisStreamWriter` per Spark partition inside
-an Arrow-batched ``mapInPandas`` (batch) or ``foreachBatch`` (streaming;
-same path per micro-batch). Each partition
-batches independently to ~1 MiB aggregated records. With a rate limiter
-attached, each flush is routed when it is sent, to the open shard with the
-most limiter budget, and a rejected put other than a throughput error
-returns its tokens; without one, each flush goes to the reference's
-seeded-random open shard. Either way N executors saturate all shards
-without coordination. No driver-side collect anywhere.
+Cluster model: one :class:`KinesisStreamWriter` per Spark partition, fed
+the partition's Arrow record batches by :func:`write_partition` from both
+Spark fronts: :func:`write_dataframe` (batch, ``mapInArrow``) and
+``writeStream.format("kinesis")`` (streaming, one task per partition per
+micro-batch). Each partition batches independently to ~1 MiB aggregated
+records. With a rate limiter attached, each flush is routed when it is
+sent, to the open shard with the most limiter budget, and a rejected put
+other than a throughput error returns its tokens; without one, each flush
+goes to the reference's seeded-random open shard. Either way N executors
+saturate all shards without coordination. No driver-side collect anywhere.
 """
 
 from __future__ import annotations
@@ -780,6 +781,26 @@ def boto3_client_factory(region_name: str | None = None):
 # Spark fronts
 # ---------------------------------------------------------------------------
 
+def write_partition(
+    batches: Iterable, data_col: str, make_writer: Callable[[], KinesisStreamWriter]
+) -> int:
+    """Write one Spark partition: the ``data_col`` payloads of its Arrow
+    record batches, in order, through one writer from ``make_writer``.
+    Returns the user-record count. A partition without rows returns 0
+    before ``make_writer`` runs: no client, no shard discovery."""
+    batches = iter(batches)
+    first = next((batch for batch in batches if batch.num_rows), None)
+    if first is None:
+        return 0
+
+    def payloads() -> Iterator[bytes]:
+        yield from first.column(data_col).to_pylist()
+        for batch in batches:
+            yield from batch.column(data_col).to_pylist()
+
+    return make_writer().write(payloads())
+
+
 def write_dataframe(
     df,
     stream_name: str,
@@ -789,66 +810,33 @@ def write_dataframe(
     sleep: Callable[[float], None] = time.sleep,
 ) -> int:
     """Write a DataFrame's binary column to the stream, one independent
-    batcher per partition. Returns the total user-record count (accumulator).
+    batcher per partition. Returns the total user-record count.
 
     Each flush follows the reference's seeded-random draw; for paced,
     budget-routed writes use the streaming sink's ``rate_limit_*`` options,
     which share one :class:`ShardRateLimiter` per process.
 
     At 100 TB this is the whole design: partitions batch and ship in parallel,
-    no shuffle and no driver collect.
-
-    Arrow-batched (r11): the payload column reaches the Python worker as
-    Arrow record batches via ``mapInPandas`` — the r11 streaming soak
-    measured the previous row-at-a-time ``foreachPartition`` path at
-    9.1k recs/s/core on ~100 B payloads vs the pure codec's 184k/core,
-    i.e. Row pickling, not the KPL codec, was the sink bottleneck
-    (artifacts/bench_stream_soak.json). Only ``data_col`` is shipped
-    (column pruning reaches the scan), one batcher per partition as
-    before, and the count comes back as the job's OUTPUT rather than an
-    accumulator. (The Arrow transfer is the motivation; the count change
-    is a hygiene bonus — action-side accumulators are exactly-once for
-    successful tasks, but only best-effort under stage retries and
-    speculative execution, while a job output is always exact.)
+    no shuffle and no driver collect. Only ``data_col`` is shipped, as Arrow
+    record batches (``mapInArrow``), because building and pickling a Row per
+    record, not the KPL codec, bounds a row-at-a-time sink
+    (artifacts/bench_stream_soak.json). The count comes back as the job's
+    output: an accumulator is only best-effort under stage retries and
+    speculative execution.
     """
 
-    def handle_batches(pdf_iter):
-        import itertools
-
-        import pandas as pd
-
-        nonempty = (pdf for pdf in pdf_iter if len(pdf))
-        first = next(nonempty, None)
-        if first is None:
-            return  # empty partition: no client, no shard discovery
-        client = client_factory()
-        writer = KinesisStreamWriter(
-            stream_name,
-            client,
-            max_retries=max_retries,
-            sleep=sleep,
+    def make_writer() -> KinesisStreamWriter:
+        return KinesisStreamWriter(
+            stream_name, client_factory(), max_retries=max_retries, sleep=sleep
         )
 
-        def payloads() -> Iterator[bytes]:
-            # numpy object-array iteration measures 2.4x cheaper than
-            # pandas Series __iter__ (artifacts/sink_percore_attrib.json);
-            # bytes coercion happens inside the batcher's single loop
-            for pdf in itertools.chain([first], nonempty):
-                yield from pdf[data_col].to_numpy()
+    def handle_batches(batches):
+        import pyarrow as pa
 
-        yield pd.DataFrame({"n": [writer.write(payloads())]})
+        n = write_partition(batches, data_col, make_writer)
+        yield pa.record_batch([pa.array([n], pa.int64())], names=["n"])
 
     from pyspark.sql import functions as F
 
-    counts = df.select(data_col).mapInPandas(handle_batches, "n bigint")
-    total = counts.agg(F.sum("n")).first()[0]
-    return int(total or 0)
-
-
-def foreach_batch_sink(stream_name: str, client_factory: Callable[[], object], data_col: str = "data"):
-    """``writeStream.foreachBatch`` adapter over :func:`write_dataframe`."""
-
-    def sink(batch_df, epoch_id: int) -> None:
-        write_dataframe(batch_df, stream_name, client_factory, data_col=data_col)
-
-    return sink
+    counts = df.select(data_col).mapInArrow(handle_batches, "n bigint")
+    return int(counts.agg(F.sum("n")).first()[0] or 0)

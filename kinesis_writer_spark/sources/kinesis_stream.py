@@ -67,9 +67,10 @@ from datetime import datetime, timezone
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
     InputPartition,
+    WriterCommitMessage,
 )
 
 from ..sink import (
@@ -79,6 +80,7 @@ from ..sink import (
     ShardRateLimiter,
     boto3_client_factory,
     list_shards,
+    write_partition,
 )
 
 #: Raw Kinesis record schema (consumer-side; ``data`` may hold a KPL
@@ -870,7 +872,7 @@ _SINK_LIMITERS: dict[tuple, "object"] = {}
 #: Guards the get-or-create below (r13 singleton audit). The registry's
 #: whole point is ONE limiter per (stream, budget) per process; an
 #: unsynchronized check-then-insert can hand two concurrent writer threads
-#: (streaming foreachBatch bindings share the driver process) two DISTINCT
+#: (several sink writers in one process) two DISTINCT
 #: limiters for the same key — each tracking its own token buckets, so the
 #: pair admits up to 2x the configured budget until one is dropped.
 #: Creation is cheap, so the lock covers the whole get-or-create.
@@ -889,18 +891,20 @@ def _shared_sink_limiter(stream: str, bps: float, pps: float, burst: float):
     return limiter
 
 
-class KinesisStreamSinkWriter(DataSourceStreamWriter):
+class KinesisStreamSinkWriter(DataSourceStreamArrowWriter):
     """``payloads.writeStream.format("kinesis")`` — the reference's producer
     loop (KinesisWriter.scala:147-197: aggregate → route → PutRecords with
     linear back-off) as a first-class Structured Streaming sink.
 
-    Each task builds a client from ``client_factory`` and pushes its
-    partition's ``data`` payloads through
-    :class:`...sink.KinesisStreamWriter` (exact KPL sizing, shard-midpoint
-    routing, retry ×30, replay-from-raw). Delivery is AT-LEAST-ONCE: a
-    retried task re-sends its partition for that epoch — the same contract
-    as the reference and every PutRecords producer; dedup belongs to the
-    consumer (see deaggregate + q36-style dedup-latest).
+    Each task gets its partition as Arrow record batches and hands them to
+    :func:`...sink.write_partition`, the same function ``write_dataframe``
+    runs: a non-empty partition builds a client from ``client_factory`` and
+    pushes its ``data`` payloads through :class:`...sink.KinesisStreamWriter`
+    (exact KPL sizing, shard-midpoint routing, retry ×30, replay-from-raw).
+    Delivery is AT-LEAST-ONCE: a retried task re-sends its partition for
+    that epoch — the same contract as the reference and every PutRecords
+    producer; dedup belongs to the consumer (see deaggregate + q36-style
+    dedup-latest).
     """
 
     def __init__(self, options, field_names: list[str]):
@@ -930,8 +934,10 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
         self._refresh_flushes: int | None = refresh or None
 
     def write(self, iterator):
-        from pyspark.sql.datasource import WriterCommitMessage
+        write_partition(iterator, "data", self._make_writer)
+        return WriterCommitMessage()
 
+    def _make_writer(self) -> KinesisStreamWriter:
         limiter = None
         if self._rl_bytes is not None or self._rl_puts is not None:
             limiter = _shared_sink_limiter(
@@ -940,15 +946,12 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
                 self._rl_puts if self._rl_puts is not None else 1000.0,
                 self._rl_burst,
             )
-        client = resolve_factory(self._factory_spec, self._factory_kwargs)
-        writer = KinesisStreamWriter(
+        return KinesisStreamWriter(
             self._stream,
-            client,
+            resolve_factory(self._factory_spec, self._factory_kwargs),
             rate_limiter=limiter,
             refresh_every_flushes=self._refresh_flushes,
         )
-        writer.write(bytes(row["data"]) for row in iterator)
-        return WriterCommitMessage()
 
     def commit(self, messages, batchId) -> None:
         pass  # offsets commit in the streaming checkpoint

@@ -8,10 +8,12 @@ deaggregated user-record DataFrame, one input partition per file.
 This is the idiomatic Spark 4 packaging of the consumer path in
 :mod:`.kpl_stream` (reference contract: awslabs/kinesis-aggregation
 deaggregation; wire format per AggRecord.java:61-74 — magic ``F3899AC2`` +
-protobuf + MD5 trailer). The mapInPandas variant remains for streaming; the
-DataSource variant gives planners a real scan node with per-file task
-parallelism, usable from SQL (``CREATE TABLE ... USING kpl`` semantics) and
-`spark.read` alike.
+protobuf + MD5 trailer). :func:`.kpl_stream.deaggregate_records` decodes
+wire records that are already a DataFrame column (a stream, a parquet
+capture); this source gives planners a real scan node over container
+files with per-file task parallelism, usable from SQL (``CREATE TABLE ...
+USING kpl`` semantics) and `spark.read` alike. Its writer packs payloads
+with the same loop as :func:`.kpl_stream.aggregate_payloads`.
 
 Container framing: ``[uint32 BE frame length][frame bytes]`` repeated. The
 aggregated record frame itself is self-validating (MD5 trailer), so torn
@@ -26,12 +28,12 @@ import struct
 import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
-from itertools import islice
+from itertools import islice, repeat
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -189,20 +191,20 @@ class KplReader(DataSourceReader):
                 yield (rec.partition_key, rec.explicit_hash_key, rec.data, partition.path)
 
 
-class KplWriter(DataSourceWriter):
+class KplWriter(DataSourceArrowWriter):
     """``df.write.format("kpl").save(dir)`` — the producer half of the
-    DataSource: each task aggregates its partition's payload rows into
-    ~1 MiB KPL wire records (the R3/R16 batching contract,
-    RecordAggregator.java:40-75) and spills them as ONE ``.kpl`` container
-    per partition. Commit is rename-free: task files are uuid-named, so a
-    retried task writes a new file and the driver's commit simply reports
-    the set — at 100 TB this is the executor-parallel shape of
-    ``write_wire_dir`` with write-path planning (mode checks, schema
-    validation) done by Spark.
+    DataSource: each task aggregates its partition's payloads into ~1 MiB
+    KPL wire records (the R3/R16 batching contract,
+    RecordAggregator.java:40-75, through :func:`..kpl.aggregator.pack_records`)
+    and spills them as ONE ``.kpl`` container per partition. Commit is
+    rename-free: task files are uuid-named, so a retried task writes a new
+    file and the driver's commit simply reports the set — at 100 TB this is
+    the executor-parallel shape of ``write_wire_dir`` with write-path
+    planning (mode checks, schema validation) done by Spark.
 
     Expected input schema: a binary ``data`` column (payloads); optional
     ``partition_key`` string column (defaults to ``"a"`` like the sink's
-    static keying).
+    static keying). Both arrive as Arrow record batches.
     """
 
     def __init__(self, options, field_names: list[str], overwrite: bool):
@@ -215,26 +217,28 @@ class KplWriter(DataSourceWriter):
         self.has_pk = "partition_key" in field_names
         self.overwrite = overwrite
 
-    def write(self, iterator):
-        import uuid as _uuid
+    def _records(self, batches) -> Iterator[tuple[str, bytes]]:
+        for batch in batches:
+            data = batch.column("data").to_pylist()
+            keys = (
+                batch.column("partition_key").to_pylist()
+                if self.has_pk
+                else repeat("a", len(data))
+            )
+            yield from zip(keys, data)
 
-        from ..kpl.aggregator import RecordAggregator
+    def write(self, iterator):
+        from ..kpl.aggregator import pack_records
 
         os.makedirs(self.path, exist_ok=True)
-        agg = RecordAggregator()
-        frames: list[bytes] = []
-        agg.on_record_complete(lambda rec: frames.append(rec.to_bytes()))
         n = 0
-        for row in iterator:
-            pk = row["partition_key"] if self.has_pk else "a"
-            agg.add_user_record(pk, bytes(row["data"]))
-            n += 1
-        tail = agg.clear_and_get()
-        if tail is not None:
-            frames.append(tail.to_bytes())
+        frames: list[bytes] = []
+        for rec in pack_records(self._records(iterator)):
+            n += rec.num_user_records
+            frames.append(rec.to_bytes())
         fname = None
         if frames:
-            fname = f"part-{_uuid.uuid4().hex}.kpl"
+            fname = f"part-{uuid.uuid4().hex}.kpl"
             write_wire_file(os.path.join(self.path, fname), frames)
         return SimpleCommitMessage(n_records=n, n_frames=len(frames), file=fname)
 

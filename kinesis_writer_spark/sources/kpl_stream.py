@@ -69,26 +69,20 @@ def aggregate_payloads(
     """Pack binary payloads into KPL aggregated wire records, one output row
     per filled ~1 MiB record (plus each partition's tail). The producer-side
     twin of :func:`deaggregate_records`, used to build test captures and the
-    oracle-checked roundtrip query.
+    oracle-checked roundtrip query. Payloads arrive as Arrow record batches
+    (``mapInArrow``).
     """
-    import pandas as pd
+    from ..kpl.aggregator import pack_records
 
-    from ..kpl.aggregator import RecordAggregator
+    def run(batches):
+        import pyarrow as pa
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        agg = RecordAggregator()
-        wires: list[bytes] = []
-        agg.on_record_complete(lambda rec: wires.append(rec.to_bytes()))
-        for pdf in batches:
-            for data in pdf[data_col]:
-                agg.add_user_record(partition_key, bytes(data))
-            if wires:
-                yield pd.DataFrame({"wire": wires})
-                wires = []
-        tail = agg.clear_and_get()
-        if tail is not None:
-            wires.append(tail.to_bytes())
-        if wires:
-            yield pd.DataFrame({"wire": wires})
+        records = (
+            (partition_key, data)
+            for batch in batches
+            for data in batch.column(data_col).to_pylist()
+        )
+        for rec in pack_records(records):
+            yield pa.record_batch([pa.array([rec.to_bytes()], pa.binary())], names=["wire"])
 
-    return df.mapInPandas(run, "wire binary")
+    return df.select(data_col).mapInArrow(run, "wire binary")

@@ -1,5 +1,5 @@
 """Structured Streaming layer: file-replay sources, windowed aggregations
-with watermarks, stateful dedup, and the KPL foreachBatch sink.
+with watermarks, stateful dedup, and backlog draining.
 """
 
 from .drain import (

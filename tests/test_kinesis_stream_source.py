@@ -11,6 +11,7 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -820,6 +821,42 @@ class TestSinkOptionValidation:
         assert a is not c  # different budget, different bucket
 
 
+class TestSinkArrowWriter:
+    """``writeStream.format("kinesis")`` tasks get Arrow record batches and
+    run the sink's one partition function."""
+
+    def test_is_a_stream_arrow_writer(self):
+        from pyspark.sql.datasource import DataSourceStreamArrowWriter
+
+        assert issubclass(kinesis_stream.KinesisStreamSinkWriter, DataSourceStreamArrowWriter)
+
+    @pytest.mark.parametrize("n_batches", [0, 2])
+    def test_empty_partition_builds_no_client(self, monkeypatch, n_batches):
+        from pyspark.sql.datasource import WriterCommitMessage
+
+        from kinesis_writer_spark.sink import FakeKinesisClient
+
+        calls = {"client_factory": 0, "list_shards": 0}
+
+        class Counting(FakeKinesisClient):
+            def list_shards(self, **kwargs):
+                calls["list_shards"] += 1
+                return super().list_shards(**kwargs)
+
+        def factory(*args):
+            calls["client_factory"] += 1
+            return Counting(num_shards=2)
+
+        monkeypatch.setattr(kinesis_stream, "resolve_factory", factory)
+        writer = kinesis_stream.KinesisStreamSinkWriter({"stream_name": "s"}, ["data"])
+        empty = pa.record_batch([pa.array([], pa.binary())], ["data"])
+        assert isinstance(writer.write(iter([empty] * n_batches)), WriterCommitMessage)
+        assert calls == {"client_factory": 0, "list_shards": 0}
+        # a partition with rows builds one client and discovers its shards
+        writer.write(iter([empty, pa.record_batch([pa.array([b"x"], pa.binary())], ["data"])]))
+        assert calls == {"client_factory": 1, "list_shards": 2}
+
+
 class TestReshardChaosEndToEnd:
     """Mid-writeStream split: the sink writes through a live reshard (the
     capture client closes its only shard and opens two children after 3
@@ -1326,7 +1363,8 @@ class TestSinkBudgetRoutingOption:
         base.update(opts)
         return kinesis_stream.KinesisStreamSinkWriter(base, ["data"])
 
-    _ROWS = [{"data": b"r" * 1000}] * 4000  # four ~1 MB flushes and a tail
+    # four ~1 MB flushes and a tail, as the four Arrow batches a task gets
+    _BATCHES = [pa.record_batch([pa.array([b"r" * 1000] * 1000, pa.binary())], ["data"])] * 4
 
     def _routed(self, monkeypatch, **opts) -> list[str]:
         """The explicit hash key of every put one sink task makes."""
@@ -1335,7 +1373,7 @@ class TestSinkBudgetRoutingOption:
         monkeypatch.setattr(kinesis_stream, "_SINK_LIMITERS", {})
         client = FakeKinesisClient(num_shards=4)
         monkeypatch.setattr(kinesis_stream, "resolve_factory", lambda *a: client)
-        self._writer(**opts).write(iter(self._ROWS))
+        self._writer(**opts).write(iter(self._BATCHES))
         return [r["Records"][0]["ExplicitHashKey"] for r in client.put_requests]
 
     @staticmethod

@@ -1,13 +1,18 @@
 """Spark-level tests of the KPL source (sources/kpl_stream): aggregate →
-deaggregate roundtrip inside a distributed plan, and the mixed-stream
-fallback for non-aggregated payloads.
+deaggregate roundtrip inside a distributed plan, the mixed-stream
+fallback for non-aggregated payloads, and the one packing loop that
+``aggregate_payloads`` and the ``kpl`` writer share.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from kinesis_writer_spark.kpl.aggregator import RecordAggregator, pack_records
 from kinesis_writer_spark.sources.kpl_stream import aggregate_payloads, deaggregate_records
+
+#: ~3.1 MB of payloads: three full aggregated records and a tail
+PACKED = [bytes([i % 251]) * (20_000 + 100 * i) for i in range(120)]
 
 
 @pytest.fixture(scope="module")
@@ -67,3 +72,30 @@ def test_lenient_passes_magic_prefixed_corrupt_frame_through(spark):
     assert len(rows) == 1
     assert bytes(rows[0].data) == hostile
     assert rows[0].partition_key is None
+
+
+def test_pack_records_matches_rolling_aggregator():
+    agg = RecordAggregator()
+    expected: list[bytes] = []
+    agg.on_record_complete(lambda rec: expected.append(rec.to_bytes()))
+    for data in PACKED:
+        agg.add_user_record("k", data)
+    expected.append(agg.clear_and_get().to_bytes())
+    got = [rec.to_bytes() for rec in pack_records(("k", data) for data in PACKED)]
+    assert got == expected
+    assert len(got) == 4
+    assert list(pack_records([])) == []
+
+
+def test_aggregate_payloads_emits_the_packed_frames(spark):
+    df = spark.createDataFrame([(p,) for p in PACKED], "data binary").coalesce(1)
+    wires = [bytes(r.wire) for r in aggregate_payloads(df, partition_key="k").collect()]
+    assert wires == [rec.to_bytes() for rec in pack_records(("k", p) for p in PACKED)]
+
+
+def test_kpl_writer_is_an_arrow_writer():
+    from pyspark.sql.datasource import DataSourceArrowWriter
+
+    from kinesis_writer_spark.sources.kpl_datasource import KplWriter
+
+    assert issubclass(KplWriter, DataSourceArrowWriter)

@@ -1,6 +1,7 @@
 """``get_spark`` registers the engine's Python data sources (``kinesis``,
 ``kpl``) on a background thread; ``register()`` waits for that registration
-instead of registering a second time."""
+instead of registering a second time. A second session of the same JVM
+(``spark.newSession()``) cannot use them."""
 
 from __future__ import annotations
 
@@ -88,3 +89,16 @@ def test_failed_background_registration_surfaces(spark, monkeypatch):
         kinesis_stream.register(spark)
     with pytest.raises(RuntimeError, match="registration failed"):
         kpl_datasource.register(spark)
+
+
+def test_second_session_of_the_jvm_is_unsupported(spark, tmp_path):
+    """``spark.newSession()`` is not supported: once ``get_spark``'s session
+    holds the sources, a second session can neither register nor load them
+    (Spark resolves a Python data source against the active session)."""
+    kpl_datasource.register(spark)
+    other = spark.newSession()
+    with pytest.raises(Exception, match=r"\[DATA_SOURCE_ALREADY_EXISTS\] Data source 'kpl'"):
+        kpl_datasource.register(other)
+    with pytest.raises(Exception, match=r"\[DATA_SOURCE_NOT_FOUND\] Failed to find the data source: kpl"):
+        other.read.format("kpl").load(str(tmp_path))
+    assert _resolves(spark, "kpl")

@@ -411,12 +411,44 @@ class TestRefreshHygiene:
         assert calls["n"] == 0
 
 
+class TestWritePartition:
+    """The one per-partition function both Kinesis fronts call, fed Arrow
+    record batches the way a Spark task hands them over."""
+
+    @staticmethod
+    def _batch(payloads):
+        import pyarrow as pa
+
+        return pa.record_batch([pa.array(payloads, pa.binary())], ["data"])
+
+    def test_empty_partition_makes_no_writer(self):
+        from kinesis_writer_spark.sink import write_partition
+
+        def make_writer():
+            raise AssertionError("an empty partition built a writer")
+
+        assert write_partition(iter([]), "data", make_writer) == 0
+        assert write_partition(iter([self._batch([])] * 3), "data", make_writer) == 0
+
+    def test_payloads_of_every_batch_in_order(self):
+        from kinesis_writer_spark.kpl.deaggregator import deaggregate
+        from kinesis_writer_spark.sink import write_partition
+
+        client = FakeKinesisClient(num_shards=2)
+        payloads = [f"p-{i:03d}".encode() for i in range(30)]
+        batches = [self._batch([]), self._batch(payloads[:10]), self._batch([]),
+                   self._batch(payloads[10:])]
+        n = write_partition(iter(batches), "data", lambda: make_writer(client))
+        assert n == 30
+        assert [rec.data for wire in client.received for rec in deaggregate(wire)] == payloads
+
+
 class TestWriteDataframeArrowPath:
-    """r11: write_dataframe ships payloads as Arrow batches (mapInPandas)
-    and returns the count as job output. Pin the partition-edge behavior
-    the refactor could regress: empty partitions must be skipped without
-    creating a client (no shard-discovery calls for no work), and the
-    count must be exact when most partitions are empty."""
+    """write_dataframe ships payloads as Arrow batches (mapInArrow) and
+    returns the count as job output. Pin the partition-edge behavior:
+    empty partitions must be skipped without creating a client (no
+    shard-discovery calls for no work), and the count must be exact when
+    most partitions are empty."""
 
     def test_mostly_empty_partitions_count_exact(self, spark):
         from pyspark.sql import functions as F

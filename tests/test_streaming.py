@@ -113,8 +113,6 @@ class TestForeachBatchSink:
     def test_stream_to_kpl_sink_delivers_all_records(self, spark, replay_dir):
         """End to end: parquet replay → payload serialization → foreachBatch →
         per-partition KPL batcher → fake Kinesis client; counts must match."""
-        from kinesis_writer_spark.sink import foreach_batch_sink
-
         stream = read_event_stream(spark, replay_dir, max_files_per_trigger=2)
         payloads = stream.select(F.encode(F.to_json(F.struct("event_id", "value")), "utf-8").alias("data"))
 
@@ -129,12 +127,6 @@ class TestForeachBatchSink:
         q.awaitTermination()
         total = kio.load(spark, SF_DIR, "events").count()
         assert delivered["n"] == total
-        # exercise the packaged adapter too (single batch)
-        batch_df = kio.load(spark, SF_DIR, "events").limit(10).select(
-            F.encode(F.to_json(F.struct("event_id")), "utf-8").alias("data")
-        )
-        adapter = foreach_batch_sink("s", lambda: FakeKinesisClient(num_shards=2))
-        adapter(batch_df, 0)
 
 
 class TestStreamStaticJoin:
