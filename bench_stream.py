@@ -3,11 +3,12 @@ axis. Five phases, one calib-bracketed artifact
 (artifacts/bench_stream_soak.json):
 
 (a) **sink soak** — replay an sf1+-sized event stream (sf0.1 events
-    replicated with shifted ids) through the production sink path:
-    ``readStream`` -> ``foreachBatch`` -> :func:`sink.write_dataframe`
-    (one KPL batcher per partition, random-shard routing, capture client
-    with a many-shard map). Records sustained user-records/s and payload
-    MB/s per micro-batch and overall, compared against (i) the single-core
+    replicated with shifted ids) through the packaged streaming sink:
+    ``readStream`` -> ``writeStream.format("kinesis")`` (one KPL batcher
+    per partition, random-shard routing, ``sink.FakeKinesisClient`` with a
+    many-shard map in each task). Records sustained user-records/s and
+    payload MB/s per micro-batch (rows and ``addBatch`` time from the
+    query's progress) and overall, compared against (i) the single-core
     pure-codec ceiling from bench_kpl.py and (ii) the Kinesis ingress
     limit of the synthetic shard map (shards x 1 MiB/s) — the reference's
     stated goal is that the SERVICE limit, not the producer, is the
@@ -222,41 +223,53 @@ def _keyed_stream(spark, path: str, max_files: int):
 
 def sink_soak(spark, replicas: int, n_files: int, files_per_trigger: int,
               shards: int) -> dict:
-    from kinesis_writer_spark.sink import FakeKinesisClient, write_dataframe
+    from kinesis_writer_spark.sources import kinesis_stream
 
+    kinesis_stream.register(spark)
     src = build_sink_fixture(spark, replicas, n_files)
-    batches: list[dict] = []
-
-    def handle(batch_df, epoch_id: int) -> None:
-        nbytes = batch_df.agg(F.sum(F.length("data"))).first()[0] or 0
-        # input parallelism of THIS micro-batch: the sink runs one batcher
-        # per partition, so fewer partitions than cores leaves cores idle —
-        # a trigger-sizing property of the harness, not sink capability
-        # (r12: the per-core figure divides by ALL cores either way; the
-        # per_active_core rollup divides by what the trigger actually lit)
-        n_parts = batch_df.rdd.getNumPartitions()
-        t0 = time.monotonic()
-        n = write_dataframe(
-            batch_df, "soak", lambda: FakeKinesisClient(num_shards=shards)
-        )
-        dt = time.monotonic() - t0
-        batches.append(
-            {"epoch": epoch_id, "records": n, "payload_bytes": int(nbytes),
-             "secs": round(dt, 3), "partitions": n_parts,
-             "recs_per_sec": round(n / dt) if dt > 0 else None,
-             "mb_per_sec": round(nbytes / dt / 1e6, 1) if dt > 0 else None}
-        )
-
+    # progress reports rows, not bytes: a batch's payload bytes are its rows
+    # times the fixture's mean payload size
+    rows, nbytes = spark.read.parquet(src).agg(
+        F.count("*"), F.sum(F.length("data"))
+    ).first()
+    mean_bytes = (nbytes or 0) / rows if rows else 0.0
     q = (
-        spark.readStream.schema("pk string, data binary")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(src)
-        .writeStream.foreachBatch(handle)
+        _keyed_stream(spark, src, files_per_trigger)
+        .select("data")
+        .writeStream.format("kinesis")
+        .option("stream_name", "soak")
+        .option("client_factory", "kinesis_writer_spark.sink:FakeKinesisClient")
+        .option("client_kwargs", json.dumps({"num_shards": shards}))
         .option("checkpointLocation", f"{FIX_ROOT}/ckpt_sink_{replicas}_{time.time_ns()}")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    # input parallelism of each micro-batch: the sink runs one batcher per
+    # partition, so fewer partitions than cores leaves cores idle — a
+    # trigger-sizing property of the harness, not sink capability (the
+    # per-core figure divides by ALL cores; the per_active_core rollup
+    # divides by what the trigger actually lit). Streaming runs each
+    # micro-batch's one write job in the job group of the query's runId.
+    tracker = spark.sparkContext.statusTracker()
+    tasks = [
+        sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+        for j in sorted(tracker.getJobIdsForGroup(str(q.runId)))
+    ]
+    progress = [p for p in q.recentProgress if p["numInputRows"]]
+    if len(tasks) != len(progress):
+        tasks = [None] * len(progress)
+    batches: list[dict] = []
+    for p, n_parts in zip(progress, tasks):
+        n = p["numInputRows"]
+        dt = p["durationMs"]["addBatch"] / 1000
+        payload = round(n * mean_bytes)
+        batches.append(
+            {"epoch": p["batchId"], "records": n, "payload_bytes": payload,
+             "secs": round(dt, 3), "partitions": n_parts,
+             "recs_per_sec": round(n / dt) if dt > 0 else None,
+             "mb_per_sec": round(payload / dt / 1e6, 1) if dt > 0 else None}
+        )
     total_recs = sum(b["records"] for b in batches)
     total_bytes = sum(b["payload_bytes"] for b in batches)
     total_secs = sum(b["secs"] for b in batches)

@@ -33,7 +33,7 @@ _log = logging.getLogger(__name__)
 #: cleared with the rest or survives into the next cycle — cache semantics
 #: either way, never corruption. Per-cache check-then-insert races are the
 #: OWNER's contract (see _IVF_CACHE_LOCK, _NEARDUP_CACHE_LOCK,
-#: _SINK_LIMITERS_LOCK, and the no-lock notes on _PCT_CACHE/_PRE0).
+#: _SINK_LIMITERS_LOCK, and the no-lock notes on _PCT_CACHE/_PREFIXES).
 _CACHES: list[MutableMapping] = []
 
 #: warn-once flag: the localCheckpoint block release below reaches through

@@ -332,25 +332,6 @@ def batch_records(
         yield tail
 
 
-def rekeyed(
-    agg: AggRecordBuilder | FastAggRecord, ehk: str
-) -> AggRecordBuilder | FastAggRecord:
-    """``agg`` with every user record keyed ``ehk``. A single-key fast
-    record swaps its one key-table entry; anything else (a carry record
-    holding two keys, a rebuilt retry) is rebuilt through AggRecordBuilder.
-    When ``ehk`` would push the record past the 1 MiB protocol cap, ``agg``
-    comes back as it is: it still fits under its own key."""
-    if isinstance(agg, FastAggRecord):
-        fast = agg.with_explicit_hash_key(ehk)
-        if fast is not None:
-            return fast
-    rebuilt = AggRecordBuilder()
-    for pk, _old_ehk, data in agg.raw_records():
-        if not rebuilt.add_user_record(pk, data, ehk):
-            return agg
-    return rebuilt
-
-
 # ---------------------------------------------------------------------------
 # The writer (per-partition worker)
 # ---------------------------------------------------------------------------
@@ -456,7 +437,7 @@ class KinesisStreamWriter:
 
     # -- send path ----------------------------------------------------------
 
-    def _put_aggregated(self, agg: AggRecordBuilder | FastAggRecord) -> None:
+    def _put_aggregated(self, agg: FastAggRecord) -> None:
         limiter = self.rate_limiter
         if limiter is None:
             return self._put_records(agg)
@@ -469,14 +450,14 @@ class KinesisStreamWriter:
         key = limiter.richest_key(self.router.midpoints)
         limiter.acquire(key, n_bytes)
         try:
-            self._put_records(rekeyed(agg, key))
+            self._put_records(agg.with_explicit_hash_key(key))
         except Exception as exc:
             if not _names_any(exc, THROTTLE_ERROR_MARKERS):
                 # the service spent no shard budget on this put
                 limiter.acquire(key, -n_bytes, -1)
             raise
 
-    def _put_records(self, agg: AggRecordBuilder | FastAggRecord) -> None:
+    def _put_records(self, agg: FastAggRecord) -> None:
         response = self.client.put_records(
             StreamName=self.stream_name,
             Records=[
@@ -495,9 +476,9 @@ class KinesisStreamWriter:
             ]
             raise RuntimeError(f"put_records partial failure: {errors}")
 
-    def send(self, agg: AggRecordBuilder | FastAggRecord) -> int:
-        """Send one aggregated record; on failure resend the retained raw
-        batch under a fresh hash key (back-off applies): a writer with a
+    def send(self, agg: FastAggRecord) -> int:
+        """Send one aggregated record; on failure resend the same user
+        records under a fresh hash key (back-off applies): a writer with a
         limiter routes the retry when it is sent, like any flush; one
         without redraws from its router. Returns the number of user
         records delivered.
@@ -511,7 +492,7 @@ class KinesisStreamWriter:
             # of hammering the closed/overloaded parent midpoint
             self._maybe_refresh_on_error(exc)
             if self.rate_limiter is None:
-                current = rekeyed(current, self._next_routing_key())
+                current = current.with_explicit_hash_key(self._next_routing_key())
 
         self._with_retry(lambda: self._put_aggregated(current), reroute)
         return current.num_user_records
@@ -519,24 +500,20 @@ class KinesisStreamWriter:
     def write(self, payloads: Iterable[bytes]) -> int:
         """Batch + route + send every payload; returns the user-record count.
 
-        Encoding goes through the fast fixed-PK path
-        (:class:`..kpl.fastpath.FastBatcher`) — byte-identical wire output
-        to the :func:`batch_records` slow path (property-pinned in
-        tests/test_kpl_fastpath.py), ~5x the encode throughput at ~100 B
-        payloads (artifacts/sink_percore_attrib.json). Re-keying a flush
-        for its send or its retry goes through :func:`rekeyed`.
+        Encoding goes through the fast fixed-key path
+        (:class:`..kpl.fastpath.FastBatcher`), ~5x the encode throughput of
+        :func:`batch_records` over AggRecordBuilder at ~100 B payloads
+        (artifacts/sink_percore_attrib.json). Each flush is one aggregated
+        record under one explicit hash key: the batcher draws it from the
+        router when the flush's first record is added, which is after the
+        previous flush was sent. With a limiter that draw only sizes the
+        batch: the flush is re-keyed when it is sent.
         """
-        # The routing EHK is redrawn after every flush; the batcher reads
-        # the current draw through a mutable cell at record-pull time, so
-        # in-flight batching picks it up exactly like the generator-based
-        # slow path did. With a limiter the draw is provisional: the flush
-        # is re-keyed when it is sent.
-        cell = {"ehk": self._next_routing_key()}
         batcher = FastBatcher(
             DEFAULT_PARTITION_KEY, SOFT_MAX_SIZE, MAX_LAST_RECORD_SIZE
         )
         count = 0
-        for agg in batcher.flushes(payloads, lambda: cell["ehk"]):
+        for agg in batcher.flushes(payloads, self._next_routing_key):
             count += self.send(agg)
             self._flushes_since_discovery += 1
             if (
@@ -544,7 +521,6 @@ class KinesisStreamWriter:
                 and self._flushes_since_discovery >= self.refresh_every_flushes
             ):
                 self.refresh_shard_map()
-            cell["ehk"] = self._next_routing_key()
         return count
 
 

@@ -1,10 +1,11 @@
 """Fast fixed-key encoder (kpl/fastpath.py) vs the AggRecordBuilder slow
 path: the fast path must be BYTE-IDENTICAL on the wire — same flush
-boundaries, same protobuf bodies, same EHK draw discipline — across every
-flush-policy branch (soft-cap add-then-flush, flush-before for oversize
-records, hard-cap overflow carry, tail flush). The comparison runs the full
-writer against capture clients and diffs the exact PutRecords byte streams,
-so it also pins the send/route plumbing around the encoder.
+boundaries, same protobuf bodies, one EHK per flush drawn when its batch
+opens — across every flush-policy branch (soft-cap add-then-flush,
+flush-before for oversize records, hard-cap overflow carry, tail flush).
+The comparison runs the full writer against capture clients and diffs the
+exact PutRecords byte streams, so it also pins the send/route plumbing
+around the encoder.
 """
 
 from __future__ import annotations
@@ -27,7 +28,6 @@ from kinesis_writer_spark.sink import (
     KinesisStreamWriter,
     batch_records,
     open_shard_midpoints,
-    rekeyed,
 )
 
 #: Payload sizes that reach every flush-policy branch: small records
@@ -45,16 +45,22 @@ ADVERSARIAL_SIZES = st.lists(
 
 
 def _slow_write(writer: KinesisStreamWriter, payloads) -> int:
-    """The pre-r12 write() algorithm, verbatim: keyed generator through
-    batch_records/AggRecordBuilder. Kept here as the equivalence oracle."""
-    cell = {"ehk": writer.router.next_hash_key()}
-
-    def keyed_dynamic():
-        for data in payloads:
-            yield DEFAULT_PARTITION_KEY, cell["ehk"], data
-
+    """The reference write(): batch_records's flush policy over
+    AggRecordBuilder, each batch keyed by one router draw when its first
+    record is added (after the previous flush was sent). Kept here as the
+    equivalence oracle."""
+    agg = AggRecordBuilder()
     count = 0
-    for agg in batch_records(keyed_dynamic()):
+
+    def add(data) -> bool:
+        if agg.num_user_records:
+            key = agg.explicit_hash_key
+        else:
+            key = writer.router.next_hash_key()
+        return agg.add_user_record(DEFAULT_PARTITION_KEY, data, key)
+
+    def ship() -> None:
+        nonlocal agg, count
         count += writer.send(agg)
         writer._flushes_since_discovery += 1
         if (
@@ -62,7 +68,20 @@ def _slow_write(writer: KinesisStreamWriter, payloads) -> int:
             and writer._flushes_since_discovery >= writer.refresh_every_flushes
         ):
             writer.refresh_shard_map()
-        cell["ehk"] = writer.router.next_hash_key()
+        agg = AggRecordBuilder()
+
+    for data in payloads:
+        at_soft_cap = agg.size_bytes >= SOFT_MAX_SIZE
+        if at_soft_cap and len(data) > MAX_LAST_RECORD_SIZE:
+            ship()  # flush-before: the record opens the next batch
+            add(data)
+        elif not add(data):  # protocol-cap overflow
+            ship()
+            add(data)
+        elif at_soft_cap:
+            ship()
+    if agg.num_user_records:
+        ship()
     return count
 
 
@@ -110,7 +129,7 @@ class TestWireEquivalence:
 
     def test_oversize_at_soft_cap_flush_before(self):
         # fill to the soft cap with ~50 KB records, then a >100 KB record
-        # triggers the flush-before branch (and its carry-EHK rule)
+        # triggers the flush-before branch and opens the next batch
         payloads = [b"a" * 50_000] * 21 + [b"B" * 150_000] + [b"c" * 100] * 50
         assert_identical(payloads)
 
@@ -184,24 +203,24 @@ class TestErrorParity:
 class TestFastAggRecordSurface:
     def test_raw_records_reconstruct_carry_run(self):
         batcher = FastBatcher(DEFAULT_PARTITION_KEY, 300, 100)
-        ehks = iter(["1111", "1111", "2222", "2222", "2222"])
-        cell = {"e": "1111"}
+        ehks = iter(["1111", "2222", "3333"])
 
-        def source():
-            cell["e"] = next(ehks, cell["e"])
-            return cell["e"]
-
-        # 150-byte records against a 300-byte soft cap: second record hits
-        # the soft cap and is >100 (max_last) -> flush-before, carry keeps
-        # its pre-flush draw while later records use the fresh one
+        # 150-byte records against a 300-byte soft cap: the third record
+        # finds the batch at the soft cap and is >100 (max_last) ->
+        # flush-before; the carried record opens the next batch and takes
+        # that batch's key
         payloads = [b"a" * 150, b"b" * 150, b"c" * 150]
-        aggs = list(batcher.flushes(iter(payloads), source))
+        aggs = list(batcher.flushes(iter(payloads), lambda: next(ehks)))
         raws = [agg.raw_records() for agg in aggs]
         flat = [r for batch in raws for r in batch]
         assert [d for _pk, _e, d in flat] == payloads
-        # every (pk, ehk) pair well-formed and runs cover all records
         assert all(pk == DEFAULT_PARTITION_KEY for pk, _e, _d in flat)
         assert sum(agg.num_user_records for agg in aggs) == 3
+        # one key per flush, one key-source call per batch
+        assert [[e for _pk, e, _d in raw] for raw in raws] == [
+            ["1111", "1111"], ["2222"]
+        ]
+        assert [agg.explicit_hash_key for agg in aggs] == ["1111", "2222"]
 
     def test_retry_replay_rebuilds_from_fast_record(self):
         client = FakeKinesisClient()
@@ -323,21 +342,17 @@ class TestRekey:
     def test_carry_record_is_rebuilt_under_one_key(self):
         batcher = FastBatcher(DEFAULT_PARTITION_KEY, SOFT_MAX_SIZE, MAX_LAST_RECORD_SIZE)
         draws = iter(self.MIDS)
-        cell = {"ehk": next(draws)}
-
-        def source():
-            return cell["ehk"]
-
-        flushes = []
-        # 400 KB records: the third overflows the cap and is carried, with
-        # its pre-flush key, into a batch whose next record takes a new one
-        for agg in batcher.flushes(iter([b"c" * 400_000] * 5), source):
-            flushes.append(agg)
-            cell["ehk"] = next(draws)
+        # 400 KB records: the third overflows the cap and is carried into
+        # the next batch, which it opens under that batch's own draw
+        flushes = list(
+            batcher.flushes(iter([b"c" * 400_000] * 5), lambda: next(draws))
+        )
+        assert [agg.explicit_hash_key for agg in flushes] == self.MIDS[:3]
         carry = flushes[1]
-        assert len({ehk for _pk, ehk, _d in carry.raw_records()}) == 2
-        assert carry.with_explicit_hash_key(self.MIDS[3]) is None
-        moved = rekeyed(carry, self.MIDS[3])
+        assert {ehk for _pk, ehk, _d in carry.raw_records()} == {self.MIDS[1]}
+        [own] = batch_records(carry.raw_records())
+        assert carry.to_bytes() == own.to_bytes()
+        moved = carry.with_explicit_hash_key(self.MIDS[3])
         [slow] = batch_records(
             (pk, self.MIDS[3], d) for pk, _ehk, d in carry.raw_records()
         )
@@ -354,5 +369,4 @@ class TestRekey:
         [agg] = _fast_flushes([b"f" * fill], short)
         assert agg.size_bytes == MAX_BYTES_PER_RECORD
         assert agg.with_explicit_hash_key(long_) is agg
-        assert rekeyed(agg, long_) is agg
         assert agg.with_explicit_hash_key(short) is agg  # same key: no work

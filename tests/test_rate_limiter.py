@@ -323,10 +323,9 @@ class TestBudgetAwareRouting:
 
     def test_large_payloads_are_routed_when_sent(self):
         """400 KB payloads take the overflow path: the record that overflows
-        a batch seeds the next one under the key drawn before the previous
-        send. Each put must still go to the shard chosen just before its
-        charge, with every user record, the carried one included, under
-        that one key."""
+        a batch opens the next one. Each put must go to the shard chosen
+        just before its charge, with every user record, the carried one
+        included, under that one key."""
         events = []
 
         class Recording(ShardRateLimiter):
@@ -368,6 +367,32 @@ class TestBudgetAwareRouting:
             assert {u.explicit_hash_key for u in deaggregate(rec["Data"])} == {
                 rec["ExplicitHashKey"]
             }
+        got = [u.data for wire in client.received for u in deaggregate(wire)]
+        assert got == payloads
+
+    def test_large_payloads_follow_the_draws_without_a_limiter(self):
+        """Without a limiter the overflow path keys each flush by one
+        seeded draw too: the carried record opens the next batch under that
+        batch's draw, so the put keys are the router's draws in order, one
+        per flush, with every user record under its put's key. On 8 shards
+        the first four seed-42 draws all differ, so a carried record that
+        kept the previous flush's key would show."""
+        client = FakeKinesisClient(num_shards=8)
+        w = KinesisStreamWriter("s", client, refresh_every_flushes=None)
+        expected = ShardRouter(w.router.midpoints, seed=42)
+        payloads = [i.to_bytes(4, "big") * 100_000 for i in range(8)]
+        assert w.write(iter(payloads)) == 8
+        assert len(client.put_requests) == 4  # two 400 KB records per flush
+        draws = [expected.next_hash_key() for _ in range(4)]
+        assert len(set(draws)) == 4
+        keys = []
+        for req in client.put_requests:
+            rec = req["Records"][0]
+            assert {u.explicit_hash_key for u in deaggregate(rec["Data"])} == {
+                rec["ExplicitHashKey"]
+            }
+            keys.append(rec["ExplicitHashKey"])
+        assert keys == draws
         got = [u.data for wire in client.received for u in deaggregate(wire)]
         assert got == payloads
 
