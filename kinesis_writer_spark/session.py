@@ -8,10 +8,20 @@ Pandas-UDF paths, shuffle partitions sized to the parallelism at hand.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import re
+import shutil
+import tempfile
 import threading
+import zipfile
+import zipimport
 from concurrent.futures import Future
 
+import pyspark
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 #: The data-source registration ``get_spark`` started: ``(applicationId,
@@ -27,8 +37,9 @@ def _register_data_sources(spark: SparkSession) -> Future:
     """Register the engine's Python data sources (``kinesis``, ``kpl``) on a
     background thread. The first ``spark.dataSource.register`` in a JVM
     waits for Spark's once-per-JVM discovery of Python data sources (a fresh
-    Python worker, about 2 s at local[4]); off the caller's thread it
-    overlaps with whatever the caller does next, such as loading tables."""
+    Python worker, about 0.5 s at local[4] on a 4-vCPU VM); off the caller's
+    thread it overlaps with whatever the caller does next, such as loading
+    tables."""
     from .sources.kinesis_stream import KinesisDataSource
     from .sources.kpl_datasource import KplDataSource
 
@@ -60,6 +71,65 @@ def await_data_sources(spark: SparkSession) -> bool:
     return True
 
 
+def _spark_home_view(source: str, version: str) -> str | None:
+    """A symlink view of the Spark home ``source`` without ``pyspark.zip``:
+    every top-level entry and every ``python/`` entry is linked, except
+    ``python/lib``, which holds only the py4j zip. It is built once per real
+    source path and version under the temp directory, in a sibling directory
+    renamed into place (a process that loses the race uses the winner's).
+    None when a view of that name exists but another user owns it."""
+    real = os.path.realpath(source)
+    digest = hashlib.sha1(real.encode()).hexdigest()[:12]
+    view = os.path.join(tempfile.gettempdir(), f"kinesis_writer_spark-spark-home-{version}-{digest}")
+    if not os.path.lexists(view):
+        tmp = tempfile.mkdtemp(prefix=os.path.basename(view) + ".", dir=os.path.dirname(view))
+        os.makedirs(os.path.join(tmp, "python", "lib"))
+        for parent, skip in (("", "python"), ("python", "lib")):
+            for name in os.listdir(os.path.join(real, parent)):
+                if name != skip:
+                    os.symlink(os.path.join(real, parent, name), os.path.join(tmp, parent, name))
+        for py4j in glob.glob(os.path.join(real, "python", "lib", "py4j-*.zip")):
+            os.symlink(py4j, os.path.join(tmp, "python", "lib", os.path.basename(py4j)))
+        try:
+            os.rename(tmp, view)
+        except OSError:  # another process renamed its view into place first
+            shutil.rmtree(tmp)
+    return view if os.lstat(view).st_uid == os.getuid() else None
+
+
+def _use_installed_pyspark() -> None:
+    """Point ``SPARK_HOME`` at a view of the home pyspark would launch from
+    whose ``python/lib`` holds no ``pyspark.zip``.
+
+    Spark puts ``$SPARK_HOME/python/lib/pyspark.zip`` first on every Python
+    worker's ``sys.path`` (ahead of ``PYTHONPATH``), so each fresh worker
+    compiles pyspark from a zip that holds no ``.pyc`` and keeps a
+    ``zipimporter`` per package, which every ``importlib.invalidate_caches()``
+    walks. Without the zip, workers import the installed pyspark with its
+    ``__pycache__``; they already need that environment for pyarrow, pandas
+    and this package. The step changes nothing when a gateway is running,
+    when the home has no ``pyspark.zip``, when the zip's version is not
+    ``pyspark.__version__``, or when the driver's pyspark comes from a zip.
+    """
+    if SparkContext._gateway is not None or isinstance(pyspark.__loader__, zipimport.zipimporter):
+        return
+    home = _find_spark_home()
+    bundled = os.path.join(home, "python", "lib", "pyspark.zip")
+    if not os.path.isfile(bundled):
+        return
+    try:
+        with zipfile.ZipFile(bundled) as zf:
+            text = zf.read("pyspark/version.py").decode()
+    except (KeyError, zipfile.BadZipFile):
+        return
+    found = re.search(r"""^__version__\b[^=]*=\s*['"]([^'"]*)['"]""", text, re.M)
+    if found is None or found[1] != pyspark.__version__:
+        return
+    view = _spark_home_view(home, pyspark.__version__)
+    if view is not None:
+        os.environ["SPARK_HOME"] = view
+
+
 def get_spark(app_name: str = "kinesis_writer_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -71,7 +141,12 @@ def get_spark(app_name: str = "kinesis_writer_spark", shuffle_partitions: int | 
     Once per SparkContext it also starts registering the engine's data
     sources, ``kinesis`` and ``kpl``, on a background thread;
     ``kinesis_stream.register`` and ``kpl_datasource.register`` wait for it.
+
+    Before it launches the gateway it points ``SPARK_HOME`` at a view of the
+    Spark home without ``pyspark.zip`` (``_use_installed_pyspark``), so
+    Python workers import the installed, compiled pyspark.
     """
+    _use_installed_pyspark()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = cpus

@@ -1,13 +1,19 @@
 """``get_spark`` registers the engine's Python data sources (``kinesis``,
 ``kpl``) on a background thread; ``register()`` waits for that registration
 instead of registering a second time. A second session of the same JVM
-(``spark.newSession()``) cannot use them."""
+(``spark.newSession()``) cannot use them. Before the gateway starts it points
+``SPARK_HOME`` at a view of the Spark home without ``pyspark.zip``, so Python
+workers import the installed pyspark."""
 
 from __future__ import annotations
 
 import contextlib
+import os
+import zipfile
 
+import pyspark
 import pytest
+from pyspark import SparkContext
 
 from kinesis_writer_spark import session
 from kinesis_writer_spark.session import get_spark
@@ -102,3 +108,83 @@ def test_second_session_of_the_jvm_is_unsupported(spark, tmp_path):
     with pytest.raises(Exception, match=r"\[DATA_SOURCE_NOT_FOUND\] Failed to find the data source: kpl"):
         other.read.format("kpl").load(str(tmp_path))
     assert _resolves(spark, "kpl")
+
+
+def fake_home(root, version):
+    """A Spark home whose ``pyspark.zip`` names ``version``."""
+    home = root / "spark"
+    (home / "bin").mkdir(parents=True)
+    (home / "bin" / "spark-submit").write_text("")
+    (home / "jars").mkdir()
+    (home / "RELEASE").write_text("Spark\n")
+    (home / "python" / "pyspark").mkdir(parents=True)
+    (home / "python" / "setup.py").write_text("")
+    lib = home / "python" / "lib"
+    lib.mkdir()
+    with zipfile.ZipFile(lib / "pyspark.zip", "w") as zf:
+        zf.writestr("pyspark/version.py", f"__version__: str = '{version}'\n")
+    (lib / "py4j-0.10.9.9-src.zip").write_bytes(b"")
+    (lib / "PY4J_LICENSE.txt").write_text("")
+    return home
+
+
+@pytest.fixture
+def cache(tmp_path, monkeypatch):
+    """An empty temp directory for the views the test builds."""
+    root = tmp_path / "tmp"
+    root.mkdir()
+    monkeypatch.setattr("tempfile.tempdir", str(root))
+    return root
+
+
+def test_workers_import_the_installed_pyspark(spark):
+    def pyspark_file(_):
+        import pyspark
+
+        yield pyspark.__file__
+
+    (path,) = spark.sparkContext.parallelize([0], 1).mapPartitions(pyspark_file).collect()
+    assert ".zip" not in path and os.path.isfile(path)
+
+
+@pytest.mark.parametrize("version", [pyspark.__version__, "0.0.0-other"])
+def test_view_only_for_a_zip_of_the_installed_version(version, tmp_path, cache, monkeypatch):
+    home = fake_home(tmp_path, version)
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    session._use_installed_pyspark()
+    if version == pyspark.__version__:
+        assert [os.environ["SPARK_HOME"]] == [str(p) for p in cache.iterdir()]
+    else:
+        assert os.environ["SPARK_HOME"] == str(home)
+        assert not list(cache.iterdir())
+
+
+def test_live_gateway_changes_nothing(spark, tmp_path, cache, monkeypatch):
+    home = fake_home(tmp_path, pyspark.__version__)
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    session._use_installed_pyspark()
+    assert os.environ["SPARK_HOME"] == str(home)
+    assert not list(cache.iterdir())
+
+
+def test_view_links_the_home_except_pyspark_zip(tmp_path, cache):
+    real = fake_home(tmp_path, pyspark.__version__)
+    (tmp_path / "link").symlink_to(real)  # the view links the real path
+    view = session._spark_home_view(str(tmp_path / "link"), pyspark.__version__)
+    assert sorted(os.listdir(view)) == sorted(os.listdir(real))
+    for parent, own in (("", "python"), ("python", "lib")):
+        for name in os.listdir(real / parent):
+            if name != own:
+                assert os.path.islink(os.path.join(view, parent, name))
+                assert os.path.realpath(os.path.join(view, parent, name)) == str(real / parent / name)
+    assert os.listdir(os.path.join(view, "python", "lib")) == ["py4j-0.10.9.9-src.zip"]
+
+
+def test_second_call_reuses_the_view(tmp_path, cache):
+    home = str(fake_home(tmp_path, pyspark.__version__))
+    view = session._spark_home_view(home, pyspark.__version__)
+    first = os.stat(view).st_ino, os.lstat(os.path.join(view, "bin")).st_ino
+    assert session._spark_home_view(home, pyspark.__version__) == view
+    assert (os.stat(view).st_ino, os.lstat(os.path.join(view, "bin")).st_ino) == first
+    assert [view] == [str(p) for p in cache.iterdir()]  # no temporary sibling left
