@@ -32,6 +32,19 @@ from pyspark.sql import SparkSession
 _REGISTRATION: tuple[str, SparkSession, Future] | None = None
 _REGISTRATION_LOCK = threading.Lock()
 
+#: Entries of Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``,
+#: an LRU keyed by the generated source; Spark's default is 100). Measured on
+#: 4 vCPUs at local[4]: a cold pass of the perfbench ``spark`` workload's
+#: queries generates about 130 distinct classes at sf0.001, and a memo-cold
+#: full-registry pass (261 queries) 2,987, so at 100 entries every class was
+#: evicted before it ran again: each steady ``spark`` query pass recompiled
+#: 83-113 classes and each registry pass about 4,200. 4,096 holds the
+#: registry with headroom (a second registry pass then compiles about 100,
+#: from generated code that differs between runs; SCALE.md), and after two
+#: registry passes Metaspace read 232 MB against 256 MB at 100 entries. A
+#: static conf: it takes effect only when the session is built.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def _register_data_sources(spark: SparkSession) -> Future:
     """Register the engine's Python data sources (``kinesis``, ``kpl``) on a
@@ -187,6 +200,7 @@ def get_spark(app_name: str = "kinesis_writer_spark", shuffle_partitions: int | 
             os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         # JDK 17 GCLocker starvation: a thread allocating while another

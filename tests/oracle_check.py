@@ -102,7 +102,14 @@ def warm_session(spark, sf_dir: str) -> None:
     session state"; r9 re-measured and showed q01's 10.8 s was simply COLD
     START (first parquet footer reads, codegen JIT, executor-thread
     spin-up) — a 260-query pass showed q01 getting FASTER over the sweep,
-    0.32 s -> 0.17 s, heap flat at ~0.5 GB, 0 persistent RDDs."""
+    0.32 s -> 0.17 s, heap flat at ~0.5 GB, 0 persistent RDDs.
+
+    Correction (2026-10-19): a query's codegen compile was not a once-per-
+    session cost. Spark's generated-class cache held 100 entries, far fewer
+    than a sweep's ~3,000 classes, so a sweep recompiled about 4,200
+    classes on every pass; ``get_spark`` now sizes that cache
+    (``session.CODEGEN_CACHE_ENTRIES``), and this warm-up never covered
+    it."""
     from pyspark.sql import functions as F
 
     from kinesis_writer_spark.io import TABLES as _TABLES

@@ -3,7 +3,8 @@
 instead of registering a second time. A second session of the same JVM
 (``spark.newSession()``) cannot use them. Before the gateway starts it points
 ``SPARK_HOME`` at a view of the Spark home without ``pyspark.zip``, so Python
-workers import the installed pyspark."""
+workers import the installed pyspark. Spark's generated-class cache is sized
+to hold a set of registry queries, so running them again compiles nothing."""
 
 from __future__ import annotations
 
@@ -15,9 +16,10 @@ import pyspark
 import pytest
 from pyspark import SparkContext
 
-from kinesis_writer_spark import session
+from kinesis_writer_spark import memo, registry, session
 from kinesis_writer_spark.session import get_spark
 from kinesis_writer_spark.sources import kinesis_stream, kpl_datasource
+from tests.conftest import SF_DIR
 
 CAPTURE = "test-session-capture"
 
@@ -188,3 +190,42 @@ def test_second_call_reuses_the_view(tmp_path, cache):
     assert session._spark_home_view(home, pyspark.__version__) == view
     assert (os.stat(view).st_ino, os.lstat(os.path.join(view, "bin")).st_ino) == first
     assert [view] == [str(p) for p in cache.iterdir()]  # no temporary sibling left
+
+
+#: The perfbench ``spark`` workload's queries but q220, plus four TPC-H-style
+#: ones: about 140 distinct generated classes at sf0.001, more than Spark's
+#: default 100-entry cache holds. q220 persists its band table, so its second
+#: run reads that cache and compiles the classes of a new plan once.
+CODEGEN_SET = (
+    "q01_pricing_summary",
+    "q33_tumbling_window",
+    "q50_exact_dedup",
+    "q60_cosine_topk",
+    "q70_token_stats",
+    "q96_dedup_clusters",
+    "q03_shipping_priority",
+    "q04_order_priority",
+    "q16_approx_count_distinct",
+    "q109_retention",
+)
+
+
+def test_codegen_cache_holds_a_query_set(spark):
+    """A second memo-cold run of ``CODEGEN_SET`` compiles no class: every
+    generated class of the first run is still cached. With Spark's default
+    100 entries each class is evicted before it runs again, and the second
+    run compiled about 130."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(session.CODEGEN_CACHE_ENTRIES)
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    queries = registry.all_queries()
+
+    def run() -> int:
+        before = compiled.getCount()
+        for name in CODEGEN_SET:
+            memo.clear_all()
+            queries[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
+        return compiled.getCount() - before
+
+    assert not spark.streams.active  # a running stream would compile alongside
+    run()
+    assert run() == 0
