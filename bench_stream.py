@@ -17,12 +17,16 @@ axis. Five phases, one calib-bracketed artifact
     passes when aggregate MB/s >> the shard map's ingress bound.
 
 (b) **stateful batcher soak** — the KPL batcher as a stateful streaming
-    operator (streaming/stateful_v2.py, applyInPandasWithState binding)
-    at >=128k distinct keys across many micro-batches, recording the
-    state store's ``numRowsTotal`` and size per batch. The flush
-    invariant bounds per-key state below the soft cap, so total state
-    must plateau at <= keys x (soft_max + per-key overhead) REGARDLESS
-    of stream length — the artifact records the plateau.
+    operator (streaming/kpl_batcher.py, applyInPandasWithState) at
+    >=128k distinct keys across many micro-batches, recording the state
+    store's ``numRowsTotal`` and size per batch. The flush invariant
+    bounds per-key state below the soft cap, so total state must plateau
+    at <= keys x (soft_max + per-key overhead) REGARDLESS of stream
+    length — the artifact records the plateau and the store that ran.
+    The store is the session's: the default HDFS-backed one, or RocksDB
+    with PYSPARK_SUBMIT_ARGS="--conf spark.sql.streaming.stateStore.
+    providerClass=org.apache.spark.sql.execution.streaming.state.
+    RocksDBStateStoreProvider pyspark-shell" (phases (b) and (c) alike).
 
 (c) **checkpoint-resume mid-soak at volume** — a multi-million-record
     keyed stream through the batcher with a file-sink + checkpoint; the
@@ -330,28 +334,28 @@ def sink_soak(spark, replicas: int, n_files: int, files_per_trigger: int,
 # phase (b): stateful batcher state-growth soak
 # ---------------------------------------------------------------------------
 
-def _binding(name: str):
-    """legacy = applyInPandasWithState (HDFS-backed store); tws =
-    transformWithStateInPandas (RocksDB store — the provider a 100 TB
-    deployment would run, disk-backed with changelog checkpointing)."""
-    from kinesis_writer_spark.streaming import stateful_v2
-
-    if name == "tws":
-        if not stateful_v2.TWS_AVAILABLE:
-            raise RuntimeError("tws binding requires protobuf (TWS_AVAILABLE=False)")
-        return stateful_v2.kpl_batch_stream
-    return stateful_v2.kpl_batch_stream_legacy
+def _state_store(progress: list[dict]) -> str:
+    """The state store a query ran on, read from its progress metrics."""
+    rocksdb = any(
+        key.startswith("rocksdb")
+        for p in progress
+        for op in p.get("stateOperators") or []
+        for key in op.get("customMetrics") or {}
+    )
+    return "rocksdb" if rocksdb else "hdfs"
 
 
 def state_soak(spark, n_keys: int, n_files: int, rows_per_file: int,
-               soft_max: int, binding: str = "legacy") -> dict:
+               soft_max: int) -> dict:
+    from kinesis_writer_spark.streaming.kpl_batcher import kpl_batch_stream
+
     src = build_keyed_fixture(
         spark, f"{FIX_ROOT}/keyed_{n_keys}_{n_files}x{rows_per_file}",
         n_files, rows_per_file, n_keys,
     )
     out = f"{FIX_ROOT}/state_out_{time.time_ns()}"
     q = (
-        _binding(binding)(_keyed_stream(spark, src, 1), soft_max_bytes=soft_max)
+        kpl_batch_stream(_keyed_stream(spark, src, 1), soft_max_bytes=soft_max)
         .writeStream.format("parquet")
         .option("path", out)
         .outputMode("append")
@@ -371,12 +375,12 @@ def state_soak(spark, n_keys: int, n_files: int, rows_per_file: int,
                 "trigger_ms": (p.get("durationMs") or {}).get("triggerExecution"),
                 "state_rows": ops[0].get("numRowsTotal"),
                 "state_mem_bytes": ops[0].get("memoryUsedBytes"),
-                # HDFS provider reports committed-version bytes; RocksDB
-                # (tws binding) reports SST file bytes instead
+                # the HDFS-backed store reports committed-version bytes;
+                # RocksDB reports the bytes of its SST files instead
                 "state_bytes_current": (
                     cm.get("stateOnCurrentVersionSizeBytes")
                     if cm.get("stateOnCurrentVersionSizeBytes") is not None
-                    else cm.get("rocksdbTotalSstFilesBytes")
+                    else cm.get("rocksdbSstFileSize")
                 ),
             }
         )
@@ -385,28 +389,21 @@ def state_soak(spark, n_keys: int, n_files: int, rows_per_file: int,
     peak_bytes = max((p["state_bytes_current"] or p["state_mem_bytes"] or 0)
                      for p in measured) if measured else 0
     completed = spark.read.parquet(out).count()
-    # tws keeps TWO state variables per key (tail ListState + seq
-    # ValueState), each its own column family: numRowsTotal counts both,
-    # and RocksDB carries more per-key metadata than the HDFS map store
-    state_vars = 2 if binding == "tws" else 1
-    per_key_overhead = 1600 if binding == "tws" else 512
+    # flush invariant: tail < soft_max framed bytes per key; per-key
+    # bookkeeping allowance on top (key, seq and store metadata)
+    bound = n_keys * (soft_max + 512)
     return {
-        "binding": binding,
-        "state_vars_per_key": state_vars,
+        "state_store": _state_store(q.recentProgress),
         "n_keys": n_keys,
         "n_micro_batches": len(measured),
         "rows_per_batch": rows_per_file,
         "soft_max_bytes": soft_max,
         "completed_wire_batches": completed,
         "peak_state_rows": peak_rows,
-        "state_rows_bounded_by_keys": peak_rows <= n_keys * state_vars,
+        "state_rows_bounded_by_keys": peak_rows <= n_keys,
         "peak_state_bytes": int(peak_bytes),
-        # flush invariant: tail < soft_max framed bytes per key; per-key
-        # bookkeeping allowance on top (column families + store metadata)
-        "state_bound_bytes": n_keys * (soft_max + per_key_overhead),
-        "state_bytes_bounded": bool(
-            peak_bytes <= n_keys * (soft_max + per_key_overhead)
-        ),
+        "state_bound_bytes": bound,
+        "state_bytes_bounded": bool(peak_bytes <= bound),
         "per_batch": measured,
     }
 
@@ -1377,7 +1374,7 @@ def reshard_soak(spark, shards: int, total_records: int,
 
 def resume_soak(spark, n_keys: int, n_files: int, rows_per_file: int,
                 soft_max: int) -> dict:
-    from kinesis_writer_spark.streaming.stateful_v2 import kpl_batch_stream_legacy
+    from kinesis_writer_spark.streaming.kpl_batcher import kpl_batch_stream
 
     stream_dir = f"{FIX_ROOT}/resume_{n_keys}_{n_files}x{rows_per_file}_{time.time_ns()}"
     build_keyed_fixture(spark, stream_dir, n_files, rows_per_file, n_keys)
@@ -1387,7 +1384,7 @@ def resume_soak(spark, n_keys: int, n_files: int, rows_per_file: int,
 
     def start(trigger_available_now: bool):
         writer = (
-            kpl_batch_stream_legacy(_keyed_stream(spark, stream_dir, 1), soft_max_bytes=soft_max)
+            kpl_batch_stream(_keyed_stream(spark, stream_dir, 1), soft_max_bytes=soft_max)
             .writeStream.format("parquet")
             .option("path", out)
             .outputMode("append")
@@ -1440,6 +1437,7 @@ def resume_soak(spark, n_keys: int, n_files: int, rows_per_file: int,
         F.max("count").alias("max_per_id"),
     ).first()
     return {
+        "state_store": _state_store(q2.recentProgress),
         "n_keys": n_keys,
         "input_records": n_files * rows_per_file,
         "sentinel_records": n_keys,
@@ -1469,10 +1467,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--state-batches", type=int, default=8)
     ap.add_argument("--state-rows-per-batch", type=int, default=524_288)
     ap.add_argument("--state-soft-max", type=int, default=1024)
-    ap.add_argument("--binding", default="legacy", choices=["legacy", "tws"],
-                    help="stateful batcher API for the state phase: legacy="
-                    "applyInPandasWithState (HDFS store), tws="
-                    "transformWithStateInPandas (RocksDB store)")
     ap.add_argument("--source-shards", type=int, default=16)
     ap.add_argument("--source-records", type=int, default=4_000_000)
     ap.add_argument("--join-keys", type=int, default=10_000)
@@ -1506,10 +1500,7 @@ def main(argv: list[str] | None = None) -> None:
         calib_gate,
         calibrate,
     )
-    # the protobuf fallback (tws binding) must engage BEFORE the session
-    # exists so the JVM-spawned streaming Python runners inherit PYTHONPATH
     from kinesis_writer_spark.session import get_spark
-    from kinesis_writer_spark.streaming import stateful_v2  # noqa: F401
 
     spark = get_spark("bench_stream")
     spark.sparkContext.setLogLevel("ERROR")
@@ -1536,7 +1527,6 @@ def main(argv: list[str] | None = None) -> None:
             out["phases"]["state"] = state_soak(
                 spark, args.keys, args.state_batches,
                 args.state_rows_per_batch, args.state_soft_max,
-                binding=args.binding,
             )
             out["paired_calib_shots"]["state"] = [shot, _probe_once(spark)]
         if "source" not in skip:

@@ -239,16 +239,23 @@ class RecordAggregator:
         return completed
 
 
-def pack_records(records: Iterable[tuple[str, bytes]]) -> Iterator[AggRecordBuilder]:
+def pack_records(
+    records: Iterable[tuple[str, bytes]], soft_max: int | None = None
+) -> Iterator[AggRecordBuilder]:
     """Pack ``(partition_key, data)`` user records, in order, into aggregated
-    records bounded only by the protocol cap: each one is yielded as it
-    fills, the partial tail last. The one packing loop of the ``kpl``
-    writer, ``kpl_stream.aggregate_payloads`` and q90."""
+    records bounded by the protocol cap: each one is yielded as it fills,
+    the partial tail last. With ``soft_max``, a record is also yielded as
+    soon as an add brings it to ``soft_max`` framed bytes, so the last
+    record is the partial tail exactly when it is under ``soft_max``. The one
+    packing loop of the ``kpl`` writer, ``kpl_stream.aggregate_payloads``,
+    q90 and the stateful batcher."""
     agg = RecordAggregator()
     for partition_key, data in records:
         completed = agg.add_user_record(partition_key, data)
         if completed is not None:
             yield completed
+        if soft_max is not None and agg.size_bytes >= soft_max:
+            yield agg.clear_and_get()
     tail = agg.clear_and_get()
     if tail is not None:
         yield tail
