@@ -1,4 +1,4 @@
-"""Process-wide construction cache for CONSTANT Column expression trees.
+"""Process-wide construction cache for Column expression trees.
 
 Building a large expression in Python is py4j-bound: every ``F.xxx`` call
 and every higher-order-function lambda is one or more JVM round trips, so
@@ -7,39 +7,29 @@ driver-side construction PER QUERY INVOCATION (measured r14). Column
 objects are immutable unresolved expression trees bound to nothing —
 reusing one across DataFrames/queries is as safe as Spark's own reuse of a
 parsed SQL string; analysis still assigns fresh expression ids per plan.
-The cache holds no data, no blocks, no results — it is deliberately NOT
-memo-registered (clearing it would re-measure py4j latency, not query
-work; same class of process-wide reuse as the JVM codegen cache).
+The cache holds no data, no blocks, no results, so both stores are
+:mod:`memo` *handles*: ``clear_all`` leaves them alone (clearing them would
+re-measure py4j latency, not query work).
 
-Two stores (r15, r14 verdict #3 / ADVICE):
+Two stores:
 
 * **constant-keyed** (default): expressions whose shape AND literals are
   fully determined by a small static key ("q53_simhash", ("dot", a, b)).
-  Bounded by the source code itself — process-lifetime, unbounded.
+  Bounded by the source code itself; its hits take no lock.
 * **value-keyed** (``value_keyed=True``): expressions embedding trained /
   data-derived literals (IVF centroid matrices, perceptron weight
-  vectors) key on those VALUES so a retrained model is a cache miss —
-  but every retrain then permanently retained a large key + py4j tree, a
-  slow driver leak under long-lived streaming retraining. These entries
+  vectors) key on those VALUES so a retrained model is a cache miss. They
   live in a small LRU (``VALUE_KEYED_CAP``): the hot path — the same
   trained codebook re-assigning in every consumer query — stays a hit,
-  while superseded models age out.
-
-Both stores are invalidated when the JVM gateway changes identity
-(r14 ADVICE #4): cached Columns wrap py4j handles, and a restarted
-gateway (embedding scenarios, harnesses that tear down the JVM) would
-otherwise leave every memoized builder returning dead references that
-fail with opaque py4j errors instead of rebuilding.
-
-Concurrency: driver-only. Constant-store get/setdefault are GIL-atomic (a
-race at worst builds the same immutable tree twice and keeps either); the
-LRU's reorder ops are guarded by a lock. Builders run OUTSIDE the lock.
+  while superseded models age out instead of leaking under long-lived
+  streaming retraining.
 """
 
 from __future__ import annotations
 
-import threading
 from collections import OrderedDict
+
+from . import memo
 
 #: Max retained value-keyed entries (distinct trained-literal expression
 #: trees). The working set is one entry per (model, consumer column) —
@@ -47,31 +37,11 @@ from collections import OrderedDict
 #: while bounding the retain-forever failure mode.
 VALUE_KEYED_CAP = 32
 
-_LOCK = threading.Lock()
-_CONST: dict = {}
-_VALUE: "OrderedDict" = OrderedDict()
-_gen_token = None
-
-
-def _current_gen():
-    """Identity token for the live JVM bridge: the active SparkContext's
-    py4j gateway object. A stopped/restarted context yields a different
-    object, which invalidates every cached (JVM-handle-wrapping) Column."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    return None if sc is None else getattr(sc, "_gateway", None)
-
-
-def _check_generation() -> None:
-    global _gen_token
-    gen = _current_gen()
-    if gen is not _gen_token:
-        with _LOCK:
-            if gen is not _gen_token:
-                _CONST.clear()
-                _VALUE.clear()
-                _gen_token = gen
+#: Handle: constant key -> Column tree(s); emptied when the SparkContext changes.
+_CONST: dict = memo.register({}, memo.HANDLE)
+#: Handle: value key -> Column tree(s), an LRU of VALUE_KEYED_CAP entries;
+#: emptied when the SparkContext changes.
+_VALUE: OrderedDict = memo.register(OrderedDict(), memo.HANDLE)
 
 
 def cached_exprs(key, builder, value_keyed: bool = False):
@@ -79,21 +49,10 @@ def cached_exprs(key, builder, value_keyed: bool = False):
     ``key``. Use only for expressions whose shape AND literals are fully
     determined by the key; pass ``value_keyed=True`` when the key embeds
     trained/data-derived values (bounded-LRU store)."""
-    _check_generation()
-    if not value_keyed:
-        got = _CONST.get(key)
-        if got is None:
-            got = _CONST.setdefault(key, builder())
-        return got
-    with _LOCK:
-        got = _VALUE.get(key)
-        if got is not None:
-            _VALUE.move_to_end(key)
-            return got
-    built = builder()
-    with _LOCK:
-        got = _VALUE.setdefault(key, built)
-        _VALUE.move_to_end(key)
-        while len(_VALUE) > VALUE_KEYED_CAP:
-            _VALUE.popitem(last=False)
+    if value_keyed:
+        return memo.get_or_build(_VALUE, key, builder, cap=VALUE_KEYED_CAP)
+    memo.check_context()
+    got = _CONST.get(key)
+    if got is None:
+        got = memo.get_or_build(_CONST, key, builder)
     return got

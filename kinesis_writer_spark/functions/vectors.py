@@ -13,9 +13,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Construction memo for str-named columns (r14): each call builds 2-5
-# py4j lambda round-trips; callers invoke these per query. r15: shares the
-# package-wide implementation (gateway-generation guard; constant keys go
-# to the unbounded store) — see kinesis_writer_spark.exprcache.
+# py4j lambda round-trips; callers invoke these per query. Constant keys go
+# to the package-wide store — see kinesis_writer_spark.exprcache.
 from ..exprcache import cached_exprs as _cached
 
 

@@ -74,8 +74,10 @@ class FastAggRecord:
     """A completed aggregated record from the fast path: duck-typed to the
     subset of AggRecordBuilder that :meth:`KinesisStreamWriter.send` and
     its retry path consume (to_bytes / size_bytes / partition_key /
-    explicit_hash_key / num_user_records / raw_records), plus
-    :meth:`with_explicit_hash_key` for routing a flush when it is sent."""
+    explicit_hash_key / num_user_records), plus
+    :meth:`with_explicit_hash_key` for routing a flush when it is sent.
+    :meth:`raw_records` serves the tests that compare the fast path with
+    the reference builder."""
 
     __slots__ = ("partition_key", "explicit_hash_key", "_payloads", "_wire")
 

@@ -5,7 +5,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import io
+from .. import io, memo
+from ..exprcache import cached_exprs  # noqa: F401  (re-exported)
 
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
@@ -13,24 +14,12 @@ def tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ..
     return tuple(io.load(spark, sf_dir, n) for n in names)
 
 
-# Construction cache for CONSTANT Column expression trees (r14; moved to
-# its own module r15 so operators/ and functions/ share one implementation
-# with the gateway-generation guard and the value-keyed LRU bound — see
-# kinesis_writer_spark.exprcache for the full contract).
-from ..exprcache import cached_exprs  # noqa: F401  (re-exported)
-
-
-#: (applicationId, probe_key, target) -> planned scan partition count.
-#: A LAYOUT property of the input path, not data or results (the same
-#: class as Spark's own session-scoped file-listing cache): probing a
-#: FRESH Dataset costs a full analyze+plan round (~0.15-0.2 s steady,
-#: measured r15 — the first uncached implementation put q53's headline
-#: from 0.28 s to 0.50 s), so repeat invocations against the same table
-#: path reuse the first probe. Keyed by applicationId so a new session
-#: (or a changed core target) re-probes; a path whose file set grows
-#: within one session re-probes only via a new SparkSession — identical
-#: staleness semantics to Spark's listing cache.
-_SPREAD_PROBE_CACHE: dict = {}
+#: Handle: (probe_key, target) -> planned scan partition count; emptied
+#: when the SparkContext changes. A layout property of the input path, not
+#: data: probing a fresh Dataset costs a full analyze+plan round (~0.15-0.2 s
+#: steady, measured r15), so repeat invocations against one table path
+#: reuse the first probe.
+_SPREAD_PROBE_CACHE: dict = memo.register({}, memo.HANDLE)
 
 
 def spread_small_input(df: DataFrame, probe_key=None) -> DataFrame:
@@ -46,16 +35,13 @@ def spread_small_input(df: DataFrame, probe_key=None) -> DataFrame:
     aggregates/joins), so output is identical with or without the spread.
     ``probe_key`` (recommended: the table path) memoizes the partition
     probe per session — see :data:`_SPREAD_PROBE_CACHE`."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if probe_key is not None:
-        key = (sc.applicationId, probe_key, target)
-        n = _SPREAD_PROBE_CACHE.get(key)
-        if n is None:
-            n = df.rdd.getNumPartitions()
-            _SPREAD_PROBE_CACHE[key] = n
-    else:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if probe_key is None:
         n = df.rdd.getNumPartitions()
+    else:
+        n = memo.get_or_build(
+            _SPREAD_PROBE_CACHE, (probe_key, target), lambda: df.rdd.getNumPartitions()
+        )
     if n >= target:
         return df
     return df.repartition(target)

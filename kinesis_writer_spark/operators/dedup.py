@@ -40,12 +40,11 @@ short-doc guard, an extra inner distinct).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.hashing import duckdb_md5_60bit, md5_60bit
 from ..registry import register
 from ._util import (
@@ -1397,73 +1396,47 @@ def connected_components(
     return out
 
 
-#: SimHash near-dup pairs / components memoized per (application, dataset):
-#: q96/q144/q148 all consume the q54 pair table and q96/q144 the same
-#: components — a real pipeline computes the duplicate graph ONCE and feeds
-#: every downstream decision from it. Entries are (stats-clean)
-#: localCheckpointed (tiny: duplicate-density-sized), so repeated queries
-#: skip the signature pass and the label-propagation rounds entirely, and
-#: every entry's blocks are releasable by memo.clear_all: the pairs cache
-#: holds a plain LogicalRDD, the comps cache a checkpoint_clean frame whose
-#: blocks are reachable via _stats_clean_origin (r8 ADVICE #1/#4).
-from ..memo import register as _register_memo
-
-_NEARDUP_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = _register_memo({})
-_NEARDUP_COMPS_CACHE: dict[tuple[str, str], DataFrame] = _register_memo({})
-
-#: Guards check-then-insert on the two caches above. Driver-side but not
-#: single-threaded (concurrent streaming queries' foreachBatch bodies run
-#: on separate driver threads), and — unlike the tiny-codebook memos —
-#: entries hold localCheckpointed BLOCKS: an unsynchronized duplicate
-#: insert would overwrite the first entry's reference, leaking its
-#: executor blocks until driver GC (the exact r7/r8 orphan-block failure
-#: mode clear_all was taught to avoid). Compute runs OUTSIDE the lock
-#: (multi-second Spark jobs); the loser of a duplicate race releases its
-#: own blocks. tests/test_caches.py::test_neardup_pairs_cache_concurrent.
-_NEARDUP_CACHE_LOCK = threading.Lock()
+#: The SimHash near-dup graph, computed once per dataset: q96/q144/q148 all
+#: consume the q54 pair table and q96/q144 its components. Entries are
+#: (stats-clean) localCheckpointed and duplicate-density-sized, so
+#: ``memo.clear_all`` can release their blocks: the pairs cache holds a
+#: plain LogicalRDD, the comps cache a checkpoint_clean frame whose blocks
+#: are reachable via _stats_clean_origin (r8 ADVICE #1/#4).
+#: Memo: sf_dir -> (doc_a, doc_b) pairs; emptied by clear_all and when the
+#: SparkContext changes.
+_NEARDUP_PAIRS_CACHE: dict[str, DataFrame] = memo.register({})
+#: Memo: sf_dir -> (node, comp) components; emptied by clear_all and when
+#: the SparkContext changes.
+_NEARDUP_COMPS_CACHE: dict[str, DataFrame] = memo.register({})
 
 
 def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _NEARDUP_CACHE_LOCK:
-        cached = _NEARDUP_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    fresh = (
-        q54_simhash_neardup(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
+    return memo.get_or_build(
+        _NEARDUP_PAIRS_CACHE,
+        sf_dir,
+        lambda: q54_simhash_neardup(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint(),
     )
-    with _NEARDUP_CACHE_LOCK:
-        winner = _NEARDUP_PAIRS_CACHE.setdefault(key, fresh)
-    if winner is not fresh:
-        release_checkpoint(fresh)  # lost a duplicate-compute race: free blocks
-    return winner
 
 
 def _neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _NEARDUP_CACHE_LOCK:
-        cached = _NEARDUP_COMPS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    comps = connected_components(
-        _neardup_pairs(spark, sf_dir),
-        src="doc_a",
-        dst="doc_b",
-        edges_distinct=True,  # q54 output: distinct pairs, doc_a < doc_b
-    )
-    # Cache a checkpoint_clean frame (not the raw result): the driver
-    # fast path returns an in-plan local relation whose consumers
-    # would re-ship it per query, and memo.clear_all can only release
-    # entries whose blocks are reachable (LogicalRDD or
-    # _stats_clean_origin — r8 ADVICE #1/#4). The distributed paths
-    # already return such a frame; re-binding is a node-sized copy.
-    entry = checkpoint_clean(comps)
-    release_checkpoint(comps)  # distributed result superseded; no-op for driver path
-    with _NEARDUP_CACHE_LOCK:
-        winner = _NEARDUP_COMPS_CACHE.setdefault(key, entry)
-    if winner is not entry:
-        release_checkpoint(entry)
-    return winner
+    def build() -> DataFrame:
+        comps = connected_components(
+            _neardup_pairs(spark, sf_dir),
+            src="doc_a",
+            dst="doc_b",
+            edges_distinct=True,  # q54 output: distinct pairs, doc_a < doc_b
+        )
+        # Cache a checkpoint_clean frame (not the raw result): the driver
+        # fast path returns an in-plan local relation whose consumers
+        # would re-ship it per query, and memo.clear_all can only release
+        # entries whose blocks are reachable (LogicalRDD or
+        # _stats_clean_origin — r8 ADVICE #1/#4). The distributed paths
+        # already return such a frame; re-binding is a node-sized copy.
+        entry = checkpoint_clean(comps)
+        release_checkpoint(comps)  # distributed result superseded; no-op for driver path
+        return entry
+
+    return memo.get_or_build(_NEARDUP_COMPS_CACHE, sf_dir, build)
 
 
 #: WITH-chain prefix building the bidirectional SimHash near-dup edge list

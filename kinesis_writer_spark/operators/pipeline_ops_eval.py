@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.hashing import md5_60bit
 from ..registry import register
 from ._util import cached_exprs, tables
@@ -568,10 +569,9 @@ def q221_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PCT_EPOCHS = 2
 _PCT_DIM = 64
 
-from ..memo import register as _register_memo
-
-#: (sf_dir) -> (per-epoch error counts, per-epoch weight vectors)
-_PCT_CACHE: dict = _register_memo({})
+#: Memo: sf_dir -> (per-epoch error counts, per-epoch weight vectors);
+#: emptied by clear_all and when the SparkContext changes.
+_PCT_CACHE: dict = memo.register({})
 
 
 def _pct_train(spark: SparkSession, sf_dir: str):
@@ -580,14 +580,10 @@ def _pct_train(spark: SparkSession, sf_dir: str):
     sums; the 64-int weight vector is collected and inlined as literals
     for the next epoch (the q97/q134 tiny-model pattern). Memoized per
     dataset."""
-    # concurrency (r13 audit): .get / setdefault below are each GIL-atomic;
-    # two driver threads racing here at worst BOTH train (deterministic,
-    # identical results — values are plain int tuples, nothing to leak) and
-    # setdefault makes the loser adopt the winner's entry, so consumers
-    # always share one object. No lock needed; test_pct_cache_concurrent.
-    cached = _PCT_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
+    return memo.get_or_build(_PCT_CACHE, sf_dir, lambda: _pct_fit(spark, sf_dir))
+
+
+def _pct_fit(spark: SparkSession, sf_dir: str):
     (embeddings,) = tables(spark, sf_dir, "embeddings")
     q = embeddings.select(
         cached_exprs(
@@ -631,7 +627,7 @@ def _pct_train(spark: SparkSession, sf_dir: str):
         counts.append(int(row["n"]))
         w = [w[d] + int(row[f"g{d}"] or 0) for d in range(_PCT_DIM)]
         weights.append(list(w))
-    return _PCT_CACHE.setdefault(sf_dir, (counts, weights))
+    return counts, weights
 
 
 def _q222_oracle() -> str:

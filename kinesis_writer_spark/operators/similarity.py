@@ -11,12 +11,12 @@ functions; oracles compute the identical double-precision formula.
 
 from __future__ import annotations
 
-import threading
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.vectors import dot, duckdb_cosine, sq_norm
 from ..registry import register
 from ._util import cached_exprs, tables
@@ -436,36 +436,21 @@ def _km_sql_assign(vec_src: str, cent_src: str) -> str:
     """
 
 
-#: trained codebooks memoized per (dataset key, iters) — the in-process twin
-#: of "persist the trained index once and reuse it across query batches"
-#: (q134 docstring): q102/q134/q135 share one training run per dataset, and
-#: repeated executions (bench passes, interactive sessions) skip the driver-
-#: side Lloyd jobs entirely. The model is k tiny integer arrays.
-from ..memo import register as _register_memo
+#: Trained codebooks, the in-process twin of "persist the trained index
+#: once and reuse it across query batches" (q134 docstring): q102/q134/q135
+#: share one training run per dataset and repeat executions skip the
+#: driver-side Lloyd jobs. The model is k tiny integer arrays.
+#: Memo: (cache_key, iters, k) or (f"{cache_key}#pq{s}", 1) -> centroids;
+#: emptied by clear_all and when the SparkContext changes.
+_CODEBOOK_CACHE: dict[tuple, list[tuple[int, list[int]]]] = memo.register({})
 
-_CODEBOOK_CACHE: dict[tuple, list[tuple[int, list[int]]]] = _register_memo({})
-
-#: resolved ``k_cells="auto"`` cell counts per cache_key: "auto" needs the
-#: corpus count, and a full count() per call is a full corpus scan at the
-#: 100 TB scale the feature targets (r13 ADVICE) — so repeat calls under an
-#: unchanged cache_key reuse the first resolution. Refresh paths: pass
-#: ``refresh=True`` (re-counts AND re-trains — the post-append recipe) or
-#: ``memo.clear_all()``. Values are small ints; entries are written once per
-#: (cache_key, refresh) — see _IVF_CACHE_LOCK for the concurrency contract.
-_AUTO_CELLS_CACHE: dict[str, int] = _register_memo({})
-
-#: Guards the read-check-write sequences on _CODEBOOK_CACHE /
-#: _AUTO_CELLS_CACHE / the PQ codebook entries. These module-level memos are
-#: driver-side but not single-threaded: concurrent streaming queries run
-#: their foreachBatch bodies on separate driver threads, and two threads
-#: training under the same cache_key interleave check-then-insert. Single
-#: dict get/set is GIL-atomic, so the worst pre-lock failure was duplicate
-#: training (wasted work, consistent results — values are deterministic per
-#: key); the lock makes the check-insert race test-provable instead of
-#: argued. Training itself runs OUTSIDE the lock (Lloyd iterations are
-#: multi-second Spark jobs); a losing racer overwrites with an identical
-#: value. tests/test_caches.py::test_codebook_cache_concurrent pins this.
-_IVF_CACHE_LOCK = threading.Lock()
+#: Resolved ``k_cells="auto"`` cell counts: "auto" needs the corpus count,
+#: a full corpus scan at the 100 TB scale the feature targets (r13 ADVICE),
+#: so repeat calls under one cache_key reuse the first resolution;
+#: ``refresh=True`` re-counts (the post-append recipe).
+#: Memo: cache_key -> cell count; emptied by clear_all and when the
+#: SparkContext changes.
+_AUTO_CELLS_CACHE: dict[str, int] = memo.register({})
 
 
 def ivf_auto_cells(n_vectors: int) -> int:
@@ -502,16 +487,14 @@ def _resolve_k_cells(
         # resolution is memoized per cache_key and repeat calls (including
         # pure codebook-memo hits) skip the scan entirely (r13 ADVICE).
         # refresh=True is the explicit invalidation path after appends.
-        if cache_key is not None and not refresh:
-            with _IVF_CACHE_LOCK:
-                cached = _AUTO_CELLS_CACHE.get(cache_key)
-            if cached is not None:
-                return cached
-        k = ivf_auto_cells(embeddings.count())
-        if cache_key is not None:
-            with _IVF_CACHE_LOCK:
-                _AUTO_CELLS_CACHE[cache_key] = k
-        return k
+        if cache_key is None:
+            return ivf_auto_cells(embeddings.count())
+        return memo.get_or_build(
+            _AUTO_CELLS_CACHE,
+            cache_key,
+            lambda: ivf_auto_cells(embeddings.count()),
+            refresh=refresh,
+        )
     k = int(k_cells)
     if k < 1:
         raise ValueError(f"k_cells must be >= 1, got {k_cells!r}")
@@ -551,11 +534,17 @@ def ivf_train_centroids(
     repeat calls cost zero corpus scans) and re-trains, overwriting both
     memo entries."""
     k = _resolve_k_cells(embeddings, k_cells, cache_key=cache_key, refresh=refresh)
-    if cache_key is not None and not refresh:
-        with _IVF_CACHE_LOCK:
-            cached = _CODEBOOK_CACHE.get((cache_key, iters, k))
-        if cached is not None:
-            return cached
+    if cache_key is None:
+        return _ivf_train(embeddings, iters, k)
+    return memo.get_or_build(
+        _CODEBOOK_CACHE,
+        (cache_key, iters, k),
+        lambda: _ivf_train(embeddings, iters, k),
+        refresh=refresh,
+    )
+
+
+def _ivf_train(embeddings: DataFrame, iters: int, k: int) -> list[tuple[int, list[int]]]:
     # persist the BOUNDED training sample across the Lloyd jobs: each
     # iteration is its own Spark job (the centroid collect is a barrier), so
     # without the persist every iteration re-scans and re-filters the corpus
@@ -591,9 +580,6 @@ def ivf_train_centroids(
             rows = _collect_centroids(_km_update(_km_assign(vectors, rows)))
     finally:
         vectors.unpersist()
-    if cache_key is not None:
-        with _IVF_CACHE_LOCK:
-            _CODEBOOK_CACHE[(cache_key, iters, k)] = rows
     return rows
 
 
@@ -1072,12 +1058,14 @@ def _pq_train_subspace(
     vec_ids' subvectors, one deterministic Lloyd iteration over the
     1-in-``_IVF_TRAIN_MOD`` sample (same quantization discipline as
     :func:`ivf_train_centroids`, same memoization)."""
-    key = (f"{cache_key}#pq{s}", 1)
-    if cache_key is not None:
-        with _IVF_CACHE_LOCK:
-            cached = _CODEBOOK_CACHE.get(key)
-        if cached is not None:
-            return cached
+    if cache_key is None:
+        return _pq_train(embeddings, s)
+    return memo.get_or_build(
+        _CODEBOOK_CACHE, (f"{cache_key}#pq{s}", 1), lambda: _pq_train(embeddings, s)
+    )
+
+
+def _pq_train(embeddings: DataFrame, s: int) -> list[tuple[int, list[int]]]:
     sub = embeddings.select(
         "vec_id", F.slice("embedding", s * _PQ_SUB + 1, _PQ_SUB).alias("embedding")
     )
@@ -1090,11 +1078,7 @@ def _pq_train_subspace(
         )
     )
     train = sub.filter(F.col("vec_id") % _IVF_TRAIN_MOD == 0)
-    rows = _collect_centroids(_km_update(_km_assign(train, seeds)))
-    if cache_key is not None:
-        with _IVF_CACHE_LOCK:
-            _CODEBOOK_CACHE[key] = rows
-    return rows
+    return _collect_centroids(_km_update(_km_assign(train, seeds)))
 
 
 @register(

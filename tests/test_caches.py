@@ -34,8 +34,8 @@ def test_codebook_cache_concurrent(spark):
     streaming queries' foreachBatch bodies). Concurrent trainings under one
     fresh cache_key must interleave safely: every caller gets the same
     deterministic codebook and the cache ends with exactly one entry —
-    worst case is duplicate training (the check-insert runs under
-    _IVF_CACHE_LOCK; Lloyd jobs themselves run outside it)."""
+    worst case is duplicate training (memo.get_or_build's lookup and insert
+    run under the owner lock; Lloyd jobs themselves run outside it)."""
     import threading
 
     from kinesis_writer_spark.operators.similarity import (
@@ -109,7 +109,7 @@ def test_neardup_pairs_cache_concurrent(spark, monkeypatch):
     entry and every losing frame is released."""
     import threading
 
-    from kinesis_writer_spark.operators import dedup
+    from kinesis_writer_spark.operators import _util, dedup
 
     computes, releases = [], []
 
@@ -119,14 +119,17 @@ def test_neardup_pairs_cache_concurrent(spark, monkeypatch):
             F.col("id").alias("doc_a"), (F.col("id") + 100).alias("doc_b")
         )
 
-    real_release = dedup.release_checkpoint
+    # the memo owner releases a race's loser through _util.release_checkpoint
+    real_release = _util.release_checkpoint
     monkeypatch.setattr(dedup, "q54_simhash_neardup", fake_q54)
     monkeypatch.setattr(
-        dedup, "release_checkpoint",
+        _util, "release_checkpoint",
         lambda df: (releases.append(1), real_release(df))[1],
     )
-    key = (spark.sparkContext.applicationId, "/audit/fake-sf")
+    key = "/audit/fake-sf"
     dedup._NEARDUP_PAIRS_CACHE.pop(key, None)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    base = persisted().size()
     results = [None] * 4
 
     def get(i):
@@ -143,6 +146,7 @@ def test_neardup_pairs_cache_concurrent(spark, monkeypatch):
         # every duplicate computation (beyond the winning insert) released
         # its checkpoint blocks; none held by the cache
         assert len(releases) == len(computes) - 1, (computes, releases)
+        assert persisted().size() == base + 1  # the winner's blocks only
         assert dedup._NEARDUP_PAIRS_CACHE[key] is results[0]
     finally:
         entry = dedup._NEARDUP_PAIRS_CACHE.pop(key, None)
@@ -151,10 +155,8 @@ def test_neardup_pairs_cache_concurrent(spark, monkeypatch):
 
 
 def test_pct_cache_concurrent(spark):
-    """r13 singleton audit: the perceptron-weights memo has no lock by
-    design (values are immutable int tuples, setdefault is GIL-atomic) —
-    concurrent trainings must converge on ONE shared entry with the
-    deterministic weights."""
+    """r13 singleton audit: concurrent perceptron trainings must converge
+    on ONE shared memo entry with the deterministic weights."""
     import threading
 
     from kinesis_writer_spark import registry
@@ -322,20 +324,86 @@ def test_expr_cache_constant_entries_unbounded(spark):
         del exprcache._CONST[("t_const", i)]
 
 
-def test_expr_cache_invalidated_on_gateway_change(spark, monkeypatch):
-    """r14 ADVICE #4: a restarted JVM gateway must invalidate every cached
-    (py4j-handle-wrapping) Column so builders rebuild instead of failing
-    with dead-object errors."""
+def test_caches_emptied_on_context_change(spark, monkeypatch):
+    """Every registered cache belongs to the live SparkContext: when it is
+    not the one the owner last saw, handles (cached Columns wrap py4j
+    handles) and memos are emptied, and builders rebuild. The dead
+    context's entries are dropped, not released."""
     from pyspark.sql import functions as F
 
-    from kinesis_writer_spark import exprcache
+    from kinesis_writer_spark import exprcache, memo
 
-    a = exprcache.cached_exprs(("t_gen",), lambda: F.lit(1))
-    assert exprcache.cached_exprs(("t_gen",), lambda: F.lit(1)) is a
-    sentinel = object()  # a "new gateway" identity
-    monkeypatch.setattr(exprcache, "_current_gen", lambda: sentinel)
-    b = exprcache.cached_exprs(("t_gen",), lambda: F.lit(1))
-    assert b is not a  # caches were cleared and the tree rebuilt
-    monkeypatch.undo()
-    exprcache._gen_token = None  # force re-sync with the real gateway
-    exprcache.cached_exprs(("t_gen2",), lambda: F.lit(2))
+    releases = []
+
+    class FakeDF:
+        def unpersist(self):
+            releases.append(1)
+
+    a = exprcache.cached_exprs(("t_ctx",), lambda: F.lit(1))
+    assert exprcache.cached_exprs(("t_ctx",), lambda: F.lit(1)) is a
+    held = memo.register({})
+    try:
+        held["df"] = FakeDF()
+        monkeypatch.setattr(memo, "_context", object())  # another context
+        b = exprcache.cached_exprs(("t_ctx",), lambda: F.lit(1))
+        assert b is not a  # caches were emptied and the tree rebuilt
+        assert not held and not releases
+        assert memo._context is spark.sparkContext
+    finally:
+        memo._CACHES.remove(held)
+
+
+def test_get_or_build_stress():
+    """Sixteen threads (more than a 4-vCPU host's cores) race
+    memo.get_or_build on each of a series of fresh keys, with a short switch interval: every caller
+    of a key gets the one stored value, every losing build of a memo is
+    released exactly once, and an LRU-capped handle never holds more than
+    its cap."""
+    import sys
+    import threading
+    import time
+    from collections import OrderedDict
+
+    from kinesis_writer_spark import memo
+
+    built, released = [], []
+
+    class Value:
+        def __init__(self):
+            built.append(self)
+            time.sleep(0)  # yield mid-build, so other threads miss too
+
+        def unpersist(self):
+            released.append(self)
+
+    cache = memo.register({})
+    lru = memo.register(OrderedDict(), memo.HANDLE)
+    rounds, n_threads = 50, 16
+    got = {k: [] for k in range(rounds)}
+    start = threading.Barrier(n_threads, timeout=60)
+
+    def work():
+        for k in range(rounds):
+            start.wait()  # every thread asks for key k at once
+            got[k].append(memo.get_or_build(cache, k, Value))
+            memo.get_or_build(lru, k, object, cap=3)
+
+    threads = [threading.Thread(target=work) for _ in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        for k, values in got.items():
+            assert len(values) == n_threads and all(v is cache[k] for v in values)
+        assert len(built) > rounds  # the threads did race
+        kept = {id(v) for v in cache.values()}
+        assert sorted(map(id, released)) == sorted(id(v) for v in built if id(v) not in kept)
+        assert len(lru) <= 3
+    finally:
+        sys.setswitchinterval(interval)
+        memo._CACHES.remove(cache)
+        memo._HANDLES.remove(lru)

@@ -144,20 +144,24 @@ class TestOrc:
         assert back.count() == events.count()
 
 
-def test_io_load_handle_cache(spark):
+def test_io_load_handle_cache(spark, monkeypatch):
     """r15: io.load memoizes the immutable DataFrame HANDLE per
-    (application, dir, table) — file-listing metadata reuse, the same
-    contract as a catalog table's cached relation. No data is held: every
-    execution still scans parquet (the oracle sweeps pin output
-    freshness); this test pins the reuse + key separation."""
+    (dir, table) — file-listing metadata reuse, the same contract as a
+    catalog table's cached relation. No data is held: every execution
+    still scans parquet (the oracle sweeps pin output freshness); this
+    test pins the reuse, the key separation and that a handle never
+    outlives its SparkContext."""
     from kinesis_writer_spark import io as kio
+    from kinesis_writer_spark import memo
     from tests.conftest import SF_DIR
 
     a = kio.load(spark, SF_DIR, "lineitem")
     assert kio.load(spark, SF_DIR, "lineitem") is a
     assert kio.load(spark, SF_DIR, "orders") is not a
-    key_apps = {k[0] for k in kio._DF_HANDLE_CACHE}
-    assert key_apps == {spark.sparkContext.applicationId}
+    monkeypatch.setattr(memo, "_context", object())  # another context
+    b = kio.load(spark, SF_DIR, "lineitem")
+    assert b is not a
+    assert kio.load(spark, SF_DIR, "lineitem") is b
 
 
 def test_io_load_runs_no_spark_job(spark, monkeypatch):
